@@ -1,21 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Marker-parsing operators — the reference's detection-cleaning stage
-  * (file:line relative to /root/reference/vedb_gaze/marker_parsing.py).
+  * (file:line relative to the reference's vedb_gaze/marker_parsing.py).
   *
   *  - snapTimestamps (J5): float-drift repair :83-102
   *  - removeBriefDetections (W3): dedup + presence-RLE + duration gate :53-111
   *  - sizeAspect (P5): marker size/aspect derivation :148-161
   *  - removeSmallDetections (P7): size/aspect/bimodality filter :114-184
-  *  - filterAndCluster: the full A1→W3→P7→W2→A7→A3 composition
+  *  - filterAndCluster: the full A1→J5→W3→P7→W2→A7→A3 composition
   *    (filter_and_cluster, :470-622 driver flow)
   *
-  * All set-level steps are one-shuffle declarative transforms; only the
-  * per-epoch DBSCAN (bounded groups) runs imperative local code.
+  * The component operators are declarative DataFrame transforms that work
+  * on any number of sessions (the oracle queries use them). The full
+  * composition is different: the reference runs it as one in-memory pass
+  * over ONE session's marker table, and restating it as windows, joins
+  * and group-bys over a keyless (single-partition) frame cost about 20
+  * Spark jobs of planning overhead for a few thousand rows. So
+  * [[filterAndCluster]] runs the whole composition as one per-session
+  * kernel on arrays inside one Spark task ([[MarkerCleanKernel]]).
   */
 object MarkerParsing {
 
@@ -151,11 +157,22 @@ object MarkerParsing {
       .drop("_bimodal_keep")
   }
 
-  /** The full marker-cleaning composition (filter_and_cluster):
-    * A1 dedup + W3 brief-removal → P7 size filter → W2 epoch split
-    * (gap > epochGap, duration gates) → A7 per-epoch DBSCAN over
-    * (ts_norm + 2, x·aspect, y) features (:352-384) → A3 cluster gates.
-    * Returns marker rows + epoch + marker_cluster_index. */
+  /** The full marker-cleaning composition (filter_and_cluster) for one
+    * session: A1 dedup → J5 snap → W3 brief-removal → P7 size filter →
+    * W2 epoch split (gap > epochGap, duration gates) → A7 per-epoch DBSCAN
+    * over (ts_norm + 2, x·aspect, y) features (:352-384) → A3 cluster
+    * gates. Returns the marker rows (timestamp cast to double and snapped)
+    * + marker_size, marker_aspect, epoch and marker_cluster_index; empty
+    * when fewer than `minClusters` clusters survive.
+    *
+    * Plan: the world clock is collected once to a sorted array, then
+    * `coalesce(1).mapPartitions` runs [[MarkerCleanKernel]] over all of
+    * the session's rows in one task — one job for the clock, one for the
+    * consumer. The semantics are those of composing the public operators
+    * (snapTimestamps, removeBriefDetections, removeSmallDetections,
+    * sessionize + sessionDurationFilter, dbscan, clusterGate), which
+    * MarkerParsingSpec checks row for row. Null or NaN clock values are
+    * not frames. */
   def filterAndCluster(markers: DataFrame, clock: DataFrame,
                        tsCol: String = "timestamp",
                        clockTs: String = "timestamp",
@@ -168,34 +185,22 @@ object MarkerParsing {
                        clusterDuration: (Double, Double) = (0.2, 5.0),
                        minClusters: Int = 1,
                        assumedEpochTime: Double = 90.0): DataFrame = {
-    val cleaned = removeSmallDetections(
-      removeBriefDetections(markers, clock, tsCol, clockTs), sizeCol)
-    val epoched = TimeSeriesOps.sessionDurationFilter(
-      TimeSeriesOps.sessionize(cleaned, tsCol, Nil, epochGap, "epoch"),
-      tsCol, Nil, "epoch", epochDuration._1, epochDuration._2)
-    // per-epoch normalized features (marker_parsing.py:366-378): t scaled
-    // by the CONSTANT assumed epoch time of 90 s (the reference explicitly
-    // comments out ptp so cluster spacing is consistent across epochs),
-    // offset +2; x scaled by image aspect, y raw
-    val w = Window.partitionBy(col("epoch"))
-    val t = col(tsCol).cast("double")
-    val tn = (t - min(t).over(w)) / assumedEpochTime + 2.0
-    val feat = epoched
-      .withColumn("_ft", tn)
-      .withColumn("_fx", element_at(col("norm_pos"), 1) * imageAspect)
-      .withColumn("_fy", element_at(col("norm_pos"), 2))
-    val clustered = ClusterOps.dbscan(feat, Seq("epoch"),
-      Seq("_ft", "_fx", "_fy"), tsCol, dbscanEps, dbscanMinPoints,
-      "marker_cluster_index")
-      .drop("_ft", "_fx", "_fy")
-      // labels restart at 0 per epoch (the reference clusters each epoch
-      // file separately) — make them globally unique before the gate,
-      // keeping -1 = noise
-      .withColumn("marker_cluster_index",
-        when(col("marker_cluster_index") === -1, -1L)
-          .otherwise(col("epoch") * 100000 + col("marker_cluster_index")))
-    ClusterOps.clusterGate(clustered, "marker_cluster_index", tsCol,
-      clusterDuration._1, clusterDuration._2, minClusters = minClusters)
+    // the derived columns are recomputed, so stale copies in the input go
+    val in = markers.drop("marker_size", "marker_aspect", "epoch", "marker_cluster_index")
+      .withColumn(tsCol, col(tsCol).cast("double"))
+    val ticks = clock.select(col(clockTs).cast("double")).collect()
+      .collect { case r if !r.isNullAt(0) && !r.getDouble(0).isNaN => r.getDouble(0) }
+    java.util.Arrays.sort(ticks)
+    val outSchema = in.schema.add("marker_size", DoubleType)
+      .add("marker_aspect", DoubleType).add("epoch", LongType)
+      .add("marker_cluster_index", LongType)
+    val kernel = new MarkerCleanKernel(ticks,
+      in.schema.fieldIndex(tsCol), in.schema.fieldIndex(sizeCol),
+      in.schema.fieldIndex("norm_pos"),
+      in.sparkSession.sessionState.conf.ansiEnabled, imageAspect, epochGap,
+      epochDuration, dbscanEps, dbscanMinPoints, clusterDuration,
+      minClusters, assumedEpochTime)
+    in.coalesce(1).mapPartitions(it => kernel(it.toArray))(Encoders.row(outSchema))
   }
 
   /** [[filterAndCluster]] for CHECKERBOARD detections
@@ -225,3 +230,183 @@ object MarkerParsing {
       dbscanEps = dbscanEps, dbscanMinPoints = dbscanMinPoints,
       clusterDuration = clusterDuration, minClusters = minClusters)
 }
+
+/** [[MarkerParsing.filterAndCluster]]'s per-session kernel: the A1 → J5 →
+  * W3 → P7 → W2 → A7 → A3 composition over one session's rows in memory.
+  * Rows arrive with the timestamp (`ts`) already cast to double. Each step
+  * keeps the semantics of the public operator it replaces:
+  *
+  *  - A1: every copy of a duplicated timestamp drops;
+  *  - J5: a timestamp snaps to the least clock value c with
+  *    |c − ts| < 1e-8 whose 1e-8 bucket is within one of the timestamp's
+  *    (the bucketed range join of [[MarkerParsing.snapTimestamps]]);
+  *  - W3: clock frames whose value equals a snapped timestamp are present;
+  *    present runs over the clock order with offset − onset > 0.6 keep
+  *    the rows whose snapped timestamp lies in [onset, offset];
+  *  - P7: marker_size = (sx + sy) / 2, marker_aspect = sx / sy, with
+  *    Spark's null and ANSI error semantics for element_at and division;
+  *    the 2.5σ bimodal cut is fitted over every surviving size — when the
+  *    set is bimodal, NaN sizes survive and null sizes drop — then
+  *    aspect < 1.2;
+  *  - W2: a gap > epochGap starts an epoch; epochs whose duration is
+  *    strictly inside `epochDuration` stay;
+  *  - A7: DBSCAN per epoch over ((t − epoch min) / assumedEpochTime + 2,
+  *    x·imageAspect, y), rows in timestamp order (null features are NaN).
+  *    t is scaled by a constant, not the epoch's ptp, so cluster spacing
+  *    is the same in every epoch (marker_parsing.py:366-378). Labels
+  *    restart at 0 per epoch (the reference clusters each epoch file
+  *    separately), so the label is epoch·100000 + cluster, noise −1;
+  *  - A3: clusters whose duration is strictly inside `clusterDuration`
+  *    stay; fewer than `minClusters` of them → no rows.
+  *
+  * Output rows come in timestamp order: the input fields, then
+  * marker_size, marker_aspect, epoch and marker_cluster_index. */
+private[operators] final class MarkerCleanKernel(
+    ticks: Array[Double], ts: Int, size: Int, pos: Int, ansi: Boolean, imageAspect: Double, epochGap: Double,
+    epochDuration: (Double, Double), eps: Double, minPoints: Int,
+    clusterDuration: (Double, Double), minClusters: Int,
+    assumedEpochTime: Double) extends Serializable {
+
+  private val SnapTol = 1e-8
+  private val BriefRun = 0.6
+  private val BimodalSigmas = 2.5
+  private val MaxAspect = 1.2
+
+  /** One marker on its way through the steps. */
+  private final class M(val row: Row, var t: Double) {
+    var size: java.lang.Double = _
+    var aspect: java.lang.Double = _
+  }
+
+  def apply(rows: Array[Row]): Iterator[Row] = {
+    // A1 — null and NaN timestamps never equal a clock frame, so W3 would
+    // drop them anyway
+    val sorted = rows.filter(r => !r.isNullAt(ts) && !r.getDouble(ts).isNaN)
+      .map(r => new M(r, r.getDouble(ts))).sortBy(_.t)(Ordering.Double.TotalOrdering)
+    val uniq = Array.newBuilder[M]
+    var i = 0
+    while (i < sorted.length) {
+      var j = i + 1
+      while (j < sorted.length && sorted(j).t == sorted(i).t) j += 1
+      if (j == i + 1) uniq += sorted(i)
+      i = j
+    }
+    // J5 + W3
+    val snapped = uniq.result()
+    snapped.foreach(m => m.t = snap(m.t))
+    val runs = presentRuns(snapped)
+    val brief = snapped.filter(m => inRuns(runs, m.t))
+      .sortBy(_.t)(Ordering.Double.TotalOrdering)
+    // P7
+    brief.foreach { m =>
+      val sx = elem(m.row, size, 0); val sy = elem(m.row, size, 1)
+      if (sx != null && sy != null) {
+        val (x, y) = (sx.doubleValue, sy.doubleValue)
+        m.size = (x + y) / 2.0
+        m.aspect = if (y != 0.0) java.lang.Double.valueOf(x / y)
+          else if (ansi) throw new ArithmeticException(
+            "[DIVIDE_BY_ZERO] Division by zero: marker size y is 0")
+          else null
+      }
+    }
+    val cut = LocalDbscan.bimodalCut(
+      brief.collect { case m if m.size != null && !m.size.isNaN => m.size.doubleValue }, BimodalSigmas)
+    val cleaned = brief.filter { m =>
+      cut.forall(c => m.size != null && (m.size.isNaN || m.size >= c)) &&
+        m.aspect != null && m.aspect < MaxAspect
+    }
+    // W2: epoch ids count the gaps over every cleaned row, before the gate
+    val epochs = Seq.newBuilder[(Long, Array[M])]
+    var (start, epoch) = (0, 0L)
+    for (k <- 1 to cleaned.length)
+      if (k == cleaned.length || cleaned(k).t - cleaned(k - 1).t > epochGap) {
+        val d = cleaned(k - 1).t - cleaned(start).t
+        if (d > epochDuration._1 && d < epochDuration._2)
+          epochs += ((epoch, cleaned.slice(start, k)))
+        start = k; epoch += 1
+      }
+    // A7 + A3
+    val labelled = epochs.result().flatMap { case (e, ms) =>
+      val t0 = ms.head.t
+      val feats = ms.map { m =>
+        val x = elem(m.row, pos, 0); val y = elem(m.row, pos, 1)
+        Array((m.t - t0) / assumedEpochTime + 2.0,
+          if (x == null) Double.NaN else x * imageAspect,
+          if (y == null) Double.NaN else y.doubleValue)
+      }
+      val labels = LocalDbscan.fit(feats, eps, minPoints)
+      ms.indices.map(k =>
+        (ms(k), e, if (labels(k) == -1) -1L else e * 100000 + labels(k)))
+    }
+    val kept = labelled.filter(_._3 != -1L).groupBy(_._3).filter { case (_, ms) =>
+      val d = ms.map(_._1.t).max - ms.map(_._1.t).min
+      d > clusterDuration._1 && d < clusterDuration._2
+    }.keySet
+    if (kept.size < minClusters) Iterator.empty
+    else labelled.iterator.filter(l => kept.contains(l._3)).map { case (m, e, c) =>
+      Row.fromSeq(m.row.toSeq.updated(ts, m.t) ++ Seq(m.size, m.aspect, e, c))
+    }
+  }
+
+  /** J5: the least clock value within the tolerance, or `t` itself.
+    * fl(c − t) is monotone in c, so the candidates are one sorted slice. */
+  private def snap(t: Double): Double = {
+    var lo = 0; var hi = ticks.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ticks(mid) - t > -SnapTol) hi = mid else lo = mid + 1
+    }
+    val b = math.floor(t / SnapTol).toLong
+    var k = lo
+    while (k < ticks.length && ticks(k) - t < SnapTol) {
+      if (math.abs(math.floor(ticks(k) / SnapTol).toLong - b) <= 1) return ticks(k)
+      k += 1
+    }
+    t
+  }
+
+  /** W3: (onset, offset) of the present clock runs longer than BriefRun. */
+  private def presentRuns(ms: Array[M]): Array[(Double, Double)] = {
+    // join keys compare -0.0 equal to 0.0
+    def key(v: Double): java.lang.Double = if (v == 0.0) 0.0 else v
+    val present = new java.util.HashSet[java.lang.Double]()
+    ms.foreach(m => present.add(key(m.t)))
+    val runs = Array.newBuilder[(Double, Double)]
+    var k = 0
+    while (k < ticks.length) {
+      if (present.contains(key(ticks(k)))) {
+        var e = k
+        while (e + 1 < ticks.length && present.contains(key(ticks(e + 1)))) e += 1
+        if (ticks(e) - ticks(k) > BriefRun) runs += ((ticks(k), ticks(e)))
+        k = e + 1
+      } else k += 1
+    }
+    runs.result()
+  }
+
+  private def inRuns(runs: Array[(Double, Double)], t: Double): Boolean = {
+    // last run with onset <= t
+    var lo = 0; var hi = runs.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (runs(mid)._1 <= t) lo = mid + 1 else hi = mid
+    }
+    lo > 0 && t <= runs(lo - 1)._2
+  }
+
+  /** element_at(arr, i + 1) cast to double, Spark semantics. */
+  private def elem(r: Row, c: Int, i: Int): java.lang.Double =
+    if (r.isNullAt(c)) null
+    else {
+      val a = r.getSeq[Any](c)
+      if (i < a.length) a(i) match {
+        case n: Number => java.lang.Double.valueOf(n.doubleValue)
+        case _ => null
+      }
+      else if (ansi) throw new ArrayIndexOutOfBoundsException(
+        s"[INVALID_ARRAY_INDEX_IN_ELEMENT_AT] The index ${i + 1} is out of " +
+          s"bounds. The array has ${a.length} elements.")
+      else null
+    }
+}
+

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-side pipeline orchestrator — the Spark restatement of the
@@ -16,8 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - **failure short-circuit (S7)**: a failed stage writes an empty
   *    `_FAILED` sentinel; downstream stages depending on it are skipped
   *    and marked failed as well (pipelines.py:112-115 etc.);
-  *  - a status table records (stage, state, rows, path) — replacing the
-  *    reference's scattered sentinel files as queryable lineage.
+  *  - a status table records (stage, state, rows, path, error, seconds)
+  *    — replacing the reference's scattered sentinel files as queryable
+  *    lineage.
   *
   * Stages declare dependencies by name; inputs arrive as a map of
   * DataFrames. Tags are (k, v) provenance pairs, blake-like hashed with
@@ -35,8 +38,12 @@ object Pipeline {
   case object Failed extends State
   case object SkippedUpstreamFailure extends State
 
+  /** `seconds`: wall time the stage took in [[run]] — its compute and
+    * write, or the sentinel/sidecar check of a memoized, failed or
+    * skipped stage (about 0). */
   case class StageResult(name: String, state: State, path: String,
-                         rows: Long, error: Option[String])
+                         rows: Long, error: Option[String],
+                         seconds: Double = 0.0)
 
   private def rowsSidecar(path: String): Option[Long] = {
     val f = Paths.get(path, "_ROWS")
@@ -63,6 +70,7 @@ object Pipeline {
       val path = outPath(stage.name)
       val success = Paths.get(path, "_SUCCESS")
       val failed = Paths.get(path, "_FAILED")
+      val t0 = System.nanoTime()
       val upstreamFailed = stage.deps.exists(d =>
         results.get(d).exists(r =>
           r.state == Failed || r.state == SkippedUpstreamFailure))
@@ -103,7 +111,9 @@ object Pipeline {
               StageResult(stage.name, Failed, path, 0, Some("empty result"))
             } else StageResult(stage.name, Computed, path, n, None)
           } catch {
-            case e: Throwable =>
+            // fatal errors (OOM, linkage, interrupts) are not stage
+            // failures: they propagate out of the run
+            case NonFatal(e) =>
               Files.createDirectories(Paths.get(path))
               if (!Files.exists(failed)) Files.createFile(failed)
               // getMessage can be null (bare RuntimeException, errors)
@@ -111,7 +121,7 @@ object Pipeline {
                 Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
           }
         }
-      results(stage.name) = res
+      results(stage.name) = res.copy(seconds = (System.nanoTime() - t0) / 1e9)
       // operator-scoped caches die with their stage (each stage's output
       // is materialized to Parquet above, so nothing downstream re-reads
       // the cached lineage)
@@ -126,7 +136,7 @@ object Pipeline {
     import spark.implicits._
     results.values.toSeq
       .map(r => (r.name, r.state.toString, r.path, r.rows,
-        r.error.getOrElse("")))
-      .toDF("stage", "state", "path", "rows", "error")
+        r.error.getOrElse(""), r.seconds))
+      .toDF("stage", "state", "path", "rows", "error", "seconds")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Calibrator, ErrorMap}
@@ -8,20 +9,13 @@ import graft.operators.MarkerParsing
 // top-level: Spark encoders cannot capture a test-class outer instance
 case class GoldenMk(timestamp: Double, norm_pos: Seq[Double], size: Seq[Double])
 
-/** The FIXTURES.md §A golden end-to-end session: one synthetic session with
-  * EVERY reference noise mode injected at once —
-  *   duplicate timestamps, 1e-8 float drift, spurious brief detections,
-  *   an oblique-marker run, a low-confidence pupil span —
-  * pushed through the full pipeline
-  *   filter_and_cluster → Calibrator.fit(tps_cv) → transform → ErrorMap
-  * and checked against the planted ground truth (noise filtered exactly,
-  * gaze error below the analytic bound).
-  */
-class GoldenSessionSpec extends SparkSpec {
-  import spark.implicits._
-
+/** The FIXTURES.md §A golden session: one synthetic session with EVERY
+  * reference noise mode injected at once — duplicate timestamps, 1e-8
+  * float drift, spurious brief detections, an oblique-marker run, a
+  * low-confidence pupil span. Shared by GoldenSessionSpec, the
+  * filterAndCluster parity spec and the plan audit. */
+object GoldenSession {
   val fps = 30.0
-  val rng = new scala.util.Random(47)
 
   // planted pupil→gaze map (invertible affine, same family as the specs)
   def trueGaze(px: Double, py: Double): (Double, Double) =
@@ -32,14 +26,11 @@ class GoldenSessionSpec extends SparkSpec {
       (0.8 * (my - 0.03) - (mx - 0.05) * (-0.05)) / det)
   }
 
-  // world clock: 0..170 s at 30 Hz
-  lazy val clock = (0 until (170 * 30)).map(i => i / fps).toDF("timestamp")
-
   // epoch layout: calibration 0-60 s (25 grid clusters à 2.4 s),
-  // validation 100-135.2 s (16 grid points à 2.2 s); oblique run 60-61 s
-  
-
-  lazy val markers = {
+  // validation 100-135.2 s (16 grid points à 2.2 s); oblique run 60-61 s.
+  // One generator draws the markers first, then the pupils.
+  private lazy val (markerRows, pupilRows) = {
+    val rng = new scala.util.Random(47)
     val ms = scala.collection.mutable.ArrayBuffer[GoldenMk]()
     // calibration epoch
     for (c <- 0 until 25) {
@@ -74,12 +65,8 @@ class GoldenSessionSpec extends SparkSpec {
       if (i % 97 == 0 && m.timestamp > 1) m.copy(timestamp = m.timestamp + 4e-9)
       else m
     }
-    drifted.toSeq.toDF()
-  }
-
-  lazy val pupils = {
     // eye clock at 120 Hz over the whole session; low-confidence span 30-32 s
-    (0 until (170 * 120)).map { i =>
+    val pupils = (0 until (170 * 120)).map { i =>
       val t = i / 120.0
       // pupil follows the gaze target of the enclosing marker cluster when
       // inside an epoch; free noise elsewhere
@@ -90,8 +77,36 @@ class GoldenSessionSpec extends SparkSpec {
       val (px, py) = pupilFor(mx, my)
       val conf = if (t >= 30 && t < 32) 0.3 else 0.9 + (i % 7) * 0.01
       (t, px + rng.nextGaussian() * 3e-4, py + rng.nextGaussian() * 3e-4, conf)
-    }.toDF("timestamp", "norm_x", "norm_y", "confidence")
+    }
+    (drifted.toSeq, pupils)
   }
+
+  // world clock: 0..170 s at 30 Hz
+  def clock(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    (0 until (170 * 30)).map(i => i / fps).toDF("timestamp")
+  }
+
+  def markers(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    markerRows.toDF()
+  }
+
+  def pupils(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    pupilRows.toDF("timestamp", "norm_x", "norm_y", "confidence")
+  }
+}
+
+/** The golden session pushed through the full pipeline
+  *   filter_and_cluster → Calibrator.fit(tps_cv) → transform → ErrorMap
+  * and checked against the planted ground truth (noise filtered exactly,
+  * gaze error below the analytic bound).
+  */
+class GoldenSessionSpec extends SparkSpec {
+  lazy val clock = GoldenSession.clock(spark)
+  lazy val markers = GoldenSession.markers(spark)
+  lazy val pupils = GoldenSession.pupils(spark)
 
   test("golden session: all noise filtered, gaze error below analytic bound") {
     val clustered = MarkerParsing.filterAndCluster(markers, clock,

@@ -85,6 +85,45 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("markers_filtered: one kernel task — no keyless window, no exchange, ≤ 2 jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val base = java.nio.file.Files.createTempDirectory("markers_filtered").toString
+    GoldenSession.markers(spark).write.parquet(s"$base/markers")
+    GoldenSession.clock(spark).write.parquet(s"$base/clock")
+    val stage = pipeline.VedbPipeline.stages(spark.read.parquet(s"$base/markers"),
+        spark.read.parquet(s"$base/clock"), GoldenSession.pupils(spark),
+        epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+      .find(_.name == "markers_filtered").get
+    val df = stage.run(spark, Map.empty)
+    val keyless = df.queryExecution.optimizedPlan.collect {
+      case w: LWindow if w.partitionSpec.isEmpty => w
+    }
+    assert(keyless.isEmpty, s"${keyless.length} keyless window(s)")
+    val exec = df.queryExecution.executedPlan
+    assert(exec.collect { case e: Exchange => e }.isEmpty &&
+      !exec.toString.contains("Exchange"), s"exchange in:\n$exec")
+    // job budget: the clock collect and the write
+    val sc = spark.sparkContext
+    val group = "markers-filtered-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "markers_filtered write")
+      try stage.run(spark, Map.empty).write.parquet(s"$base/out")
+      finally sc.clearJobGroup()
+      org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+    assert(spark.read.parquet(s"$base/out").count() > 0)
+  }
+
   test("m9 model table broadcasts at bench session counts (size-gated hint)") {
     val p = plan(Queries.multiSessionPipeline(spark, dir))
     assert(p.contains("BroadcastHashJoin"),

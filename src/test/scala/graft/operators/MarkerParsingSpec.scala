@@ -1,6 +1,8 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{GoldenSession, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class MarkerParsingSpec extends SparkSpec {
@@ -167,5 +169,178 @@ class MarkerParsingSpec extends SparkSpec {
     val clustersPerEpoch = out.groupBy("epoch")
       .agg(countDistinct("marker_cluster_index").as("n")).collect()
     clustersPerEpoch.foreach(r => assert(r.getAs[Long]("n") >= 2))
+  }
+
+  // ---- filterAndCluster kernel vs the step-by-step operator composition
+
+  /** The declarative composition filterAndCluster ran before it became
+    * one per-session kernel, kept verbatim as the parity reference. */
+  def composed(markers: DataFrame, clock: DataFrame,
+               tsCol: String = "timestamp",
+               clockTs: String = "timestamp",
+               sizeCol: String = "size",
+               imageAspect: Double = 4.0 / 3.0,
+               epochGap: Double = 15.0,
+               epochDuration: (Double, Double) = (30.0, 150.0),
+               dbscanEps: Double = 0.05,
+               dbscanMinPoints: Int = 5,
+               clusterDuration: (Double, Double) = (0.2, 5.0),
+               minClusters: Int = 1,
+               assumedEpochTime: Double = 90.0): DataFrame = {
+    val cleaned = MarkerParsing.removeSmallDetections(
+      MarkerParsing.removeBriefDetections(markers, clock, tsCol, clockTs), sizeCol)
+    val epoched = TimeSeriesOps.sessionDurationFilter(
+      TimeSeriesOps.sessionize(cleaned, tsCol, Nil, epochGap, "epoch"),
+      tsCol, Nil, "epoch", epochDuration._1, epochDuration._2)
+    // per-epoch normalized features (marker_parsing.py:366-378): t scaled
+    // by the CONSTANT assumed epoch time of 90 s (the reference explicitly
+    // comments out ptp so cluster spacing is consistent across epochs),
+    // offset +2; x scaled by image aspect, y raw
+    val w = Window.partitionBy(col("epoch"))
+    val t = col(tsCol).cast("double")
+    val tn = (t - min(t).over(w)) / assumedEpochTime + 2.0
+    val feat = epoched
+      .withColumn("_ft", tn)
+      .withColumn("_fx", element_at(col("norm_pos"), 1) * imageAspect)
+      .withColumn("_fy", element_at(col("norm_pos"), 2))
+    val clustered = ClusterOps.dbscan(feat, Seq("epoch"),
+      Seq("_ft", "_fx", "_fy"), tsCol, dbscanEps, dbscanMinPoints,
+      "marker_cluster_index")
+      .drop("_ft", "_fx", "_fy")
+      // labels restart at 0 per epoch (the reference clusters each epoch
+      // file separately) — make them globally unique before the gate,
+      // keeping -1 = noise
+      .withColumn("marker_cluster_index",
+        when(col("marker_cluster_index") === -1, -1L)
+          .otherwise(col("epoch") * 100000 + col("marker_cluster_index")))
+    ClusterOps.clusterGate(clustered, "marker_cluster_index", tsCol,
+      clusterDuration._1, clusterDuration._2, minClusters = minClusters)
+  }
+
+  /** Same columns (names and types) and the same rows, sorted by
+    * timestamp, compared exactly; returns the row count. The kernel's
+    * column order is the input's, then the four derived columns. The
+    * composition's differs only when rows survive: its USING semi-join
+    * in clusterGate moves marker_cluster_index to the front. */
+  def assertParity(input: DataFrame, kernel: DataFrame, reference: DataFrame): Int = {
+    def types(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    assert(types(kernel) == types(reference) && kernel.columns.length == reference.columns.length)
+    assert(kernel.columns.toSeq == input.columns.toSeq ++
+      Seq("marker_size", "marker_aspect", "epoch", "marker_cluster_index"))
+    val ti = kernel.schema.fieldIndex("timestamp")
+    def rows(df: DataFrame) = df.select(kernel.columns.toSeq.map(col): _*)
+      .collect().toSeq.sortBy(_.getDouble(ti))
+    val (k, r) = (rows(kernel), rows(reference))
+    assert(k.length == r.length)
+    k.zip(r).foreach { case (a, b) => assert(a == b, s"\nkernel    $a\nreference $b") }
+    k.length
+  }
+
+  /** Two epochs 100 s apart, each with two spatial clusters at 30 Hz; the
+    * size of row i comes from `size(i)`. */
+  def twoEpochs(size: Int => Option[Seq[Double]]): DataFrame = {
+    val fps = 30.0
+    def epoch(t0: Double, xa: Double, xb: Double) =
+      (0 until 1200).map(i =>
+        (t0 + i / fps, Seq(if (i < 600) xa else xb, if (i < 600) 0.4 else 0.6)))
+    (epoch(0.0, 0.2, 0.8) ++ epoch(100.0, 0.3, 0.7)).zipWithIndex
+      .map { case ((t, p), i) => (t, p, size(i)) }
+      .toDF("timestamp", "norm_pos", "size")
+  }
+
+  lazy val clock30 = (0 until 5000).map(_ / 30.0).toDF("timestamp")
+
+  test("kernel parity: the golden session (every §A noise mode)") {
+    val (m, c) = (GoldenSession.markers(spark), GoldenSession.clock(spark))
+    val n = assertParity(m,
+      MarkerParsing.filterAndCluster(m, c, clusterDuration = (0.5, 5.0)),
+      composed(m, c, clusterDuration = (0.5, 5.0)))
+    assert(n > 0)
+  }
+
+  test("kernel parity: the planted two-epoch session") {
+    val m = twoEpochs(_ => Some(Seq(0.05, 0.05)))
+    val n = assertParity(m,
+      MarkerParsing.filterAndCluster(m, clock30, clusterDuration = (1.0, 60.0)),
+      composed(m, clock30, clusterDuration = (1.0, 60.0)))
+    assert(n > 0)
+  }
+
+  test("kernel parity: a brief run and a gated-out short epoch (epoch ids keep counting)") {
+    // a 0.37 s run right after epoch 2 (W3 drops it; without the gate it
+    // would be its own cluster), and a 3 s epoch between the two kept ones
+    // (W2 drops it, yet it takes epoch id 1, so epoch 2 keeps id 2)
+    val fps = 30.0
+    val extra = ((0 until 12).map(i => (141.0 + i / fps, Seq(0.5, 0.9))) ++
+      (0 until 90).map(i => (60.0 + i / fps, Seq(0.5, 0.5))))
+      .map { case (t, p) => (t, p, Seq(0.05, 0.05)) }
+      .toDF("timestamp", "norm_pos", "size")
+    val m = twoEpochs(_ => Some(Seq(0.05, 0.05))).union(extra)
+    val out = MarkerParsing.filterAndCluster(m, clock30, clusterDuration = (0.2, 60.0))
+    val n = assertParity(m, out, composed(m, clock30, clusterDuration = (0.2, 60.0)))
+    assert(n > 0)
+    assert(out.select("epoch").distinct().collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 2L))
+  }
+
+  test("kernel parity: the checkerboard session (corner arrays ride through)") {
+    val fps = 30.0
+    def corners(cx: Double, cy: Double, hx: Double, hy: Double) =
+      Seq(Seq(cx - hx, cy - hy), Seq(cx + hx, cy - hy),
+        Seq(cx - hx, cy + hy), Seq(cx + hx, cy + hy))
+    def epoch(t0: Double, xa: Double, xb: Double) =
+      (0 until 1200).map { i =>
+        val (x, y) = if (i < 600) (xa, 0.4) else (xb, 0.6)
+        (t0 + i / fps, Seq(x, y), corners(x, y, 0.0225, 0.03))
+      }
+    val oblique = (0 until 600).map(i => (0.013 + i / fps,
+      Seq(0.5, 0.5), corners(0.5, 0.5, 0.0225, 0.015)))
+    val m = (epoch(0.0, 0.2, 0.8) ++ epoch(100.0, 0.3, 0.7) ++ oblique)
+      .toDF("timestamp", "norm_pos", "norm_pos_full_checkerboard")
+    val c = ((0 until 5000).map(_ / fps) ++
+      (0 until 600).map(0.013 + _ / fps)).toDF("timestamp")
+    val n = assertParity(MarkerParsing.checkerboardSize(m),
+      MarkerParsing.filterAndClusterCheckerboard(m, c, clusterDuration = (1.0, 60.0)),
+      composed(MarkerParsing.checkerboardSize(m), c, clusterDuration = (1.0, 60.0)))
+    assert(n > 0)
+  }
+
+  test("kernel parity: a bimodal size mix where the 2.5σ cut fires, with NaN and null sizes") {
+    // every 10th row is a small detection (0.02 vs 0.05): the cut keeps
+    // the large mode; one NaN-size and one null-size row ride along
+    val m = twoEpochs { i =>
+      if (i == 333) Some(Seq(Double.NaN, Double.NaN))
+      else if (i == 777) None
+      else if (i % 10 == 0) Some(Seq(0.02, 0.02))
+      else Some(Seq(0.05, 0.05))
+    }
+    val sizes = (0 until 2400).filter(i => i != 333 && i != 777)
+      .map(i => if (i % 10 == 0) 0.02 else 0.05).toArray
+    assert(LocalDbscan.bimodalCut(sizes, 2.5).isDefined)
+    val out = MarkerParsing.filterAndCluster(m, clock30, clusterDuration = (1.0, 60.0))
+    val n = assertParity(m, out, composed(m, clock30, clusterDuration = (1.0, 60.0)))
+    assert(n > 0 && out.filter(col("marker_size") < 0.04).count() == 0)
+  }
+
+  test("kernel parity: NaN and null sizes in a unimodal session") {
+    val m = twoEpochs { i =>
+      if (i == 333) Some(Seq(Double.NaN, 0.05))
+      else if (i == 777) Some(Seq(0.05, Double.NaN))
+      else if (i == 900) None
+      else Some(Seq(0.05 + 1e-5 * (i % 7), 0.05))
+    }
+    assert(LocalDbscan.bimodalCut(
+      (0 until 2400).map(i => 0.05 + 0.5e-5 * (i % 7)).toArray, 2.5).isEmpty)
+    val n = assertParity(m,
+      MarkerParsing.filterAndCluster(m, clock30, clusterDuration = (1.0, 60.0)),
+      composed(m, clock30, clusterDuration = (1.0, 60.0)))
+    assert(n > 0)
+  }
+
+  test("kernel parity: every cluster fails the duration gate → empty result") {
+    val m = twoEpochs(_ => Some(Seq(0.05, 0.05)))
+    val n = assertParity(m,
+      MarkerParsing.filterAndCluster(m, clock30, clusterDuration = (100.0, 200.0)),
+      composed(m, clock30, clusterDuration = (100.0, 200.0)))
+    assert(n == 0)
   }
 }

@@ -42,6 +42,46 @@ class PipelineSpec extends SparkSpec {
       r2("mid").error.contains("failed sentinel"))
   }
 
+  test("per-stage seconds: computed stages are timed, memoized ones read ~0") {
+    val root = Files.createTempDirectory("pipe").toString
+    val r1 = Pipeline.run(spark, root, stages(failMid = false))
+    assert(r1.values.forall(r => r.state == Computed && r.seconds > 0), r1.toString)
+    val r2 = Pipeline.run(spark, root, stages(failMid = false))
+    assert(r2.values.forall(r => r.state == Memoized && r.seconds < 0.5), r2.toString)
+    val st = Pipeline.statusTable(spark, r2).collect()
+    assert(st.forall(row =>
+      row.getAs[Double]("seconds") == r2(row.getAs[String]("stage")).seconds))
+  }
+
+  def throwing(e: Throwable): Seq[Stage] = Seq(
+    Stage("src", Nil, (s, _) => {
+      import s.implicits._
+      Seq(1, 2).toDF("id")
+    }),
+    Stage("boom", Seq("src"), (_, _) => throw e),
+    Stage("after", Seq("boom"), (_, in) => in("boom")))
+
+  test("a fatal error in a stage propagates out of run (not a stage failure)") {
+    val root = Files.createTempDirectory("pipe").toString
+    val e = intercept[OutOfMemoryError] {
+      Pipeline.run(spark, root, throwing(new OutOfMemoryError("planted")))
+    }
+    assert(e.getMessage == "planted")
+    val boom = Files.list(java.nio.file.Paths.get(root)).toArray
+      .map(_.toString).filter(_.contains("boom__"))
+    assert(boom.forall(p => !Files.exists(java.nio.file.Paths.get(p, "_FAILED"))))
+  }
+
+  test("a non-fatal stage exception writes _FAILED and skips its dependents") {
+    val root = Files.createTempDirectory("pipe").toString
+    val r = Pipeline.run(spark, root,
+      throwing(new IllegalStateException("planted failure")))
+    assert(r("src").state == Computed)
+    assert(r("boom").state == Failed && r("boom").error.contains("planted failure"))
+    assert(Files.exists(java.nio.file.Paths.get(r("boom").path, "_FAILED")))
+    assert(r("after").state == SkippedUpstreamFailure)
+  }
+
   test("different tags → different memoization namespaces") {
     val root = Files.createTempDirectory("pipe").toString
     val a = Pipeline.run(spark, root, stages(false), Map("conf" -> "a"))
