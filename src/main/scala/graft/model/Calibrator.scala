@@ -1,9 +1,7 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-
-import graft.operators.AsOfJoin
 
 /** M9: the calibration orchestrator — "fit small, apply big".
   *
@@ -17,6 +15,13 @@ import graft.operators.AsOfJoin
   *  4. driver-side fit (tens-to-hundreds of points) dispatched on
   *     `calibrationType`: monocular_pl (two-pass poly), monocular_tps,
   *     monocular_tps_cv (LOO-CV λ + outlier cut, calibration.py:348-412).
+  *
+  * Steps 1-3 run as one Spark task over the session's arrays
+  * ([[SessionPoints]]): the marker table is collected, the pupils are
+  * matched, gated and reduced in `coalesce(1).mapPartitions`, and the
+  * reduced points come back in cluster order, so the fit input order is
+  * deterministic. One session sits on one partition either way; the
+  * keyed multi-session form is [[SessionCalibrator]].
   *
   * The returned [[GazeModel]] applies distributively as Column arithmetic.
   */
@@ -36,14 +41,18 @@ object Calibrator {
       clusterReduce: Boolean = true,
       frameSize: (Double, Double) = (1.0, 1.0))
 
-  /** Matched + reduced calibration points: one row per marker cluster
-    * (or per marker row when clusterReduce = false). Distributed up to the
-    * collect of the reduced table (10¹-10² rows).
+  /** Steps 1-3 on one session: the reduced (marker, pupil) points, one
+    * row per marker cluster in cluster order (or per marker row, in table
+    * order, when clusterReduce = false or the table has no
+    * marker_cluster_index). The markers are collected to the driver and
+    * the pupils matched, gated and reduced in one task
+    * ([[SessionPoints]]). Rows: marker_cluster_index, mx, my, px, py.
     *
     * markers: timestamp, norm_x, norm_y [, marker_cluster_index]
     * pupils:  timestamp, norm_x, norm_y, confidence
     */
-  def matchedPoints(markers: DataFrame, pupils: DataFrame, cfg: Config): DataFrame = {
+  private[model] def calibrationPoints(markers: DataFrame, pupils: DataFrame,
+                                       cfg: Config): Array[Row] = {
     // NEAREST-frame matching: the executed calibration path calls
     // match_time_points with window=None (calibration.py:534 →
     // utils.py:78-105) — argmin |t_pupil − t_marker| per marker row, all
@@ -51,32 +60,17 @@ object Calibrator {
     // applies to the MATCHED rows (calibration.py:555-560). The
     // windowed-median variant (marker_parsing.py:554-556) sits in a branch
     // that raises NotImplementedError and is deliberately not used here.
-    // Same J2 union-sort idiom as ErrorMap.compute.
-    val matched = AsOfJoin.nearest(
-        markers,
-        pupils.select(col("timestamp"), col("norm_x").as("pnx"),
-          col("norm_y").as("pny"), col("confidence")),
-        "timestamp", "timestamp", Nil, rightPrefix = "p_")
-      .filter(col("p_confidence") > cfg.minConfidence)
-      .withColumnRenamed("p_pnx", "px").withColumnRenamed("p_pny", "py")
-
-    if (cfg.clusterReduce && matched.columns.contains("marker_cluster_index"))
-      matched.groupBy(col("marker_cluster_index")).agg(
-        expr("percentile(norm_x, 0.5)").as("mx"),
-        expr("percentile(norm_y, 0.5)").as("my"),
-        expr("percentile(px, 0.5)").as("px"),
-        expr("percentile(py, 0.5)").as("py"))
-    else
-      matched.select(col("norm_x").as("mx"), col("norm_y").as("my"),
-        col("px"), col("py"))
+    val points = SessionPoints(markers, cfg.minConfidence, cfg.clusterReduce)
+    SessionPoints.rightColumns(pupils).coalesce(1)
+      .mapPartitions(it => points(it.toArray).iterator)(Encoders.row(SessionPoints.Schema))
+      .collect()
   }
 
   def fit(markers: DataFrame, pupils: DataFrame,
           cfg: Config = Config()): Option[GazeModel] = {
-    val pts = matchedPoints(markers, pupils, cfg)
-      .select("px", "py", "mx", "my").collect()
-    fitPoints(pts.map(r => Array(r.getDouble(0), r.getDouble(1))),
-      pts.map(_.getDouble(2)), pts.map(_.getDouble(3)), cfg)
+    val pts = calibrationPoints(markers, pupils, cfg)
+    fitPoints(pts.map(r => Array(r.getDouble(3), r.getDouble(4))),
+      pts.map(_.getDouble(1)), pts.map(_.getDouble(2)), cfg)
   }
 
   /** Driver-side dispatch on reduced points (pupil xy → marker xy). */

@@ -1,20 +1,32 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.operators.AsOfJoin
 
 /** M11: spatially-interpolated gaze-error surface
-  * (compute_error, /root/reference/vedb_gaze/error_computation.py:18-225).
+  * (compute_error, vedb_gaze/error_computation.py:18-225),
+  * in three forms:
   *
-  * Distributed where it counts: matching (as-of join), per-point error
-  * (arithmetic), the vres×hres grid evaluation (sequence crossJoin +
-  * the TPS Column expression), and the gaze 2-D histogram / weighted
-  * summary (groupBy + join). Driver-side only: the TPS LOO-CV fit over
+  *  - [[summary]]: one session's summary row, the pipelines' error stage.
+  *    Match → reduce → per-point error → occupied gaze-histogram cells →
+  *    the model work run in one Spark task over the session's arrays
+  *    ([[SessionPoints]]); the vres×hres grid is never built, because
+  *    empty cells carry no gaze weight.
+  *  - [[summaryBySession]]: the same summary per session over a corpus,
+  *    keyed by session (cogroup of reduced points and occupied cells).
+  *  - [[compute]]: the distributed reference form that also returns the
+  *    points and the full grid: matching (as-of join), per-point error
+  *    (arithmetic), the grid evaluation (sequence crossJoin + the TPS
+  *    Column expression) and the histogram / weighted summary (groupBy +
+  *    join), with the hull as a conjunction of half-plane Column
+  *    predicates. The summary forms are parity-checked against it.
+  *
+  * The model work is the same in every form: the TPS LOO-CV fit over
   * ≤ ~10² reduced points and the convex hull (≤ 10² vertices) that
-  * replaces scipy-griddata's "no extrapolation" masking — the hull
-  * becomes a conjunction of half-plane Column predicates.
+  * replaces scipy-griddata's "no extrapolation" masking.
   */
 object ErrorMap {
 
@@ -36,8 +48,8 @@ object ErrorMap {
         * over the input (the flagship passes its single session column to
         * keep the as-of join's windows partitioned instead of a keyless
         * single-partition `Window.orderBy` stage). Multi-session error
-        * surfaces = one `compute` per session (pipeline_mri's per-epoch
-        * loop) or a SessionCalibrator-style grouped fan-out. */
+        * summaries = one [[summary]] per session (pipeline_mri's per-epoch
+        * loop; `summary` takes no keys) or [[summaryBySession]]. */
       matchKeys: Seq[String] = Nil)
 
   case class Result(
@@ -166,6 +178,124 @@ object ErrorMap {
     Result(pts, grid, summary)
   }
 
+  /** The single-session summary row of [[compute]] without the grid:
+    * `gaze_err_weighted, gaze_fraction_excluded, n_points: int,
+    * err_median, err_mean` (the schema of `compute(...).summary`).
+    *
+    * Plan: the markers are collected, then `coalesce(1).mapPartitions`
+    * runs the nearest match, confidence gate and cluster reduction
+    * ([[SessionPoints]]), the per-point angular error, the occupied gaze
+    * histogram cells and the model work shared with [[summaryBySession]]
+    * in one task — one job for the markers, one for the consumer. Fewer than 4
+    * points after the outlier cut raise the reference's too-few-points
+    * requirement (error_computation.py:149) when the row is computed. */
+  def summary(markers: DataFrame, gaze: DataFrame, cfg: Config = Config()): DataFrame = {
+    require(cfg.matchKeys.isEmpty,
+      s"summary is single-session; Config.matchKeys (${cfg.matchKeys.mkString(",")}) " +
+        "would be ignored")
+    val points = SessionPoints(markers, cfg.minPupilConfidence, cfg.clusterReduce)
+    val ppd = pixelsPerDegree(cfg)
+    val (iw, ih) = cfg.imageResolution
+    val (vres, hres) = cfg.resolution
+    SessionPoints.rightColumns(gaze).coalesce(1).mapPartitions { it =>
+      val rows = it.toArray
+      val pts = points(rows).map { p =>
+        val exPix = (p.getDouble(3) - p.getDouble(1)) * iw
+        val eyPix = (p.getDouble(4) - p.getDouble(2)) * ih
+        (p.getDouble(1), p.getDouble(2), math.sqrt(exPix * exPix + eyPix * eyPix) / ppd)
+      }
+      // occupied histogram cells, the [[compute]] step-7 binning
+      val counts = new Array[Long](vres * hres)
+      rows.foreach { r =>
+        if (!r.isNullAt(1) && !r.isNullAt(2)) {
+          val (x, y) = (r.getDouble(1), r.getDouble(2))
+          if (x >= 0 && x <= 1 && y >= 0 && y <= 1)
+            counts(math.min(math.floor(y * vres).toInt, vres - 1) * hres +
+              math.min(math.floor(x * hres).toInt, hres - 1)) += 1
+        }
+      }
+      val cells = counts.indices.iterator.filter(counts(_) > 0)
+        .map(i => ((i % hres).toLong, (i / hres).toLong, counts(i)))
+      sessionSummary(pts, cells, cfg) match {
+        case Left(n) =>
+          throw new IllegalArgumentException(
+            s"requirement failed: Too few points to compute error across visual field ($n)")
+        case Right(s) => Iterator(Row(s.weighted.map(Double.box).orNull,
+          s.excluded.map(Double.box).orNull, s.nPoints, s.errMedian, s.errMean))
+      }
+    }(Encoders.row(SummarySchema))
+  }
+
+  private val SummarySchema = StructType(Seq(
+    StructField("gaze_err_weighted", DoubleType),
+    StructField("gaze_fraction_excluded", DoubleType),
+    StructField("n_points", IntegerType, nullable = false),
+    StructField("err_median", DoubleType, nullable = false),
+    StructField("err_mean", DoubleType, nullable = false)))
+
+  /** One session's summary; the weighted fields are None when they are
+    * undefined (no in-frame gaze, or none inside the hull). */
+  private final case class SessionSummary(nPoints: Int, errMedian: Double,
+                                          errMean: Double, weighted: Option[Double],
+                                          excluded: Option[Double])
+
+  /** The per-session model work of [[summary]] and [[summaryBySession]]:
+    * outlier cut → TPS LOO-CV fit of the error surface → convex hull →
+    * gaze-weighted sums over the occupied histogram cells. `points` are
+    * (mx, my, err_deg), `cells` (ix, iy, gaze count). Left: the number of
+    * kept points when it is below 4. */
+  private def sessionSummary(points: Array[(Double, Double, Double)],
+                             cells: Iterator[(Long, Long, Long)],
+                             cfg: Config): Either[Int, SessionSummary] = {
+    val (vres, hres) = cfg.resolution
+    // deterministic fit-input order (shuffle-independent), the
+    // SessionCalibrator discipline
+    val rows = points.sortBy(r => (r._1, r._2, r._3))
+    // outlier cut — [[compute]] step 4
+    val all = rows.map(_._3)
+    val kept = cfg.outlierStds match {
+      case Some(k) if rows.nonEmpty =>
+        val med = Stats.median(all); val sd = Stats.stdPop(all)
+        rows.filter(r => math.abs(r._3 - med) <= k * sd)
+      case _ => rows
+    }
+    if (kept.length < 4) return Left(kept.length)
+    val anchors = kept.map(r => Array(r._1, r._2))
+    val errs = kept.map(_._3)
+    val minErr = errs.min
+    val (bestI, _) = Tps.looSelect(anchors, errs, cfg.lambdas,
+      resid => math.sqrt(resid.map(r => r * r).sum / resid.length))
+    val theta = Tps.fit(anchors, errs, cfg.lambdas(bestI))
+    // hull membership — the same CCW half-plane rule as
+    // [[hullPredicate]], evaluated in-task
+    val hull = convexHull(anchors)
+    def inHull(x: Double, y: Double): Boolean = cfg.extrapolate || (
+      hull.length >= 3 && hull.indices.forall { i =>
+        val a = hull(i); val b = hull((i + 1) % hull.length)
+        (b(0) - a(0)) * (y - a(1)) - (b(1) - a(1)) * (x - a(0)) >= 0
+      })
+    var total = 0L; var inside = 0L; var werr = 0.0
+    cells.foreach { case (ix, iy, n) =>
+      total += n
+      val x = ix.toDouble / (hres - 1)
+      val y = iy.toDouble / (vres - 1)
+      if (inHull(x, y)) {
+        inside += n
+        werr += n * math.max(Tps.z(x, y, anchors, theta), minErr)
+      }
+    }
+    // no in-frame gaze: the FIT succeeded (>= 4 kept points), only the
+    // gaze weighting is undefined — null weighted fields, not a failure
+    // (a failure would make the QC report call a healthy fit "failed").
+    // inside == 0 with total > 0: every gaze cell fell outside the hull,
+    // a weighted mean over an empty set; SQL sum over an empty when-set
+    // is null, so compute() emits null there, and 0.0/0.0 would be NaN
+    // and break null-aware gates downstream (qc err_weighted_ok).
+    Right(SessionSummary(kept.length, Stats.median(errs), Stats.mean(errs),
+      if (inside == 0) None else Some(werr / total / (inside.toDouble / total)),
+      if (total == 0) None else Some((total - inside).toDouble / total)))
+  }
+
   /** PER-SESSION weighted-error summaries, distributed — the QC-report
     * shape of [[compute]] (plot_session_qc's per-eye 'Err: med, wt'
     * panel, visualization.py:1134-1147, over a whole session corpus).
@@ -199,9 +329,6 @@ object ErrorMap {
     val ppd = pixelsPerDegree(cfg)
     val (vres, hres) = cfg.resolution
     val (iw, ih) = cfg.imageResolution
-    val lambdas = cfg.lambdas
-    val outlierStds = cfg.outlierStds
-    val extrapolate = cfg.extrapolate
 
     // sessionCol IS the match key of this form (the per-session analog
     // of compute's matchKeys); extra keys would silently change the
@@ -255,64 +382,12 @@ object ErrorMap {
       .groupByKey(_._1)
 
     pts.cogroup(cells) { (session, ptIt, cellIt) =>
-      // deterministic fit-input order (shuffle-independent), the
-      // SessionCalibrator discipline
-      val rows = ptIt.toArray.sortBy(r => (r._2, r._3, r._4))
-      if (rows.isEmpty) Iterator.empty
-      else {
-        // outlier cut — [[compute]] step 4, session-local
-        val all = rows.map(_._4)
-        val kept = outlierStds match {
-          case Some(k) =>
-            val med = Stats.median(all); val sd = Stats.stdPop(all)
-            rows.filter(r => math.abs(r._4 - med) <= k * sd)
-          case None => rows
-        }
-        if (kept.length < 4) Iterator.empty
-        else {
-          val anchors = kept.map(r => Array(r._2, r._3))
-          val errs = kept.map(_._4)
-          val minErr = errs.min
-          val (bestI, _) = Tps.looSelect(anchors, errs, lambdas,
-            resid => math.sqrt(resid.map(r => r * r).sum / resid.length))
-          val theta = Tps.fit(anchors, errs, lambdas(bestI))
-          // hull membership — the same CCW half-plane rule as
-          // [[hullPredicate]], evaluated in-task
-          val hull = convexHull(anchors)
-          def inHull(x: Double, y: Double): Boolean = extrapolate || (
-            hull.length >= 3 && hull.indices.forall { i =>
-              val a = hull(i); val b = hull((i + 1) % hull.length)
-              (b(0) - a(0)) * (y - a(1)) - (b(1) - a(1)) * (x - a(0)) >= 0
-            })
-          var total = 0L; var inside = 0L; var werr = 0.0
-          cellIt.foreach { case (_, ix, iy, n) =>
-            total += n
-            val x = ix.toDouble / (hres - 1)
-            val y = iy.toDouble / (vres - 1)
-            if (inHull(x, y)) {
-              inside += n
-              werr += n * math.max(Tps.z(x, y, anchors, theta), minErr)
-            }
-          }
-          // no in-frame gaze: the FIT succeeded (>= 4 kept points), only
-          // the gaze weighting is undefined — emit the row with null
-          // weighted fields. Row-ABSENCE is reserved for the too-few-
-          // points failure (error_computation.py:149); conflating the
-          // two would make the QC report call a healthy fit "failed".
-          if (total == 0) Iterator((session, kept.length.toLong,
-            Stats.median(errs), Stats.mean(errs),
-            Option.empty[Double], Option.empty[Double]))
-          else Iterator((session, kept.length.toLong, Stats.median(errs),
-            Stats.mean(errs),
-            // inside == 0 with total > 0: every gaze cell fell outside
-            // the hull — the weighted mean is over an empty set. SQL
-            // sum over an empty when-set is null, so compute() emits
-            // null here; 0.0/0.0 would be NaN and break downstream
-            // null-aware gates (err_weighted_ok).
-            if (inside == 0) Option.empty[Double]
-            else Some(werr / total / (inside.toDouble / total)),
-            Some((total - inside).toDouble / total)))
-        }
+      sessionSummary(ptIt.map(r => (r._2, r._3, r._4)).toArray,
+        cellIt.map(c => (c._2, c._3, c._4)), cfg) match {
+        // row ABSENCE is the too-few-points failure
+        case Left(_) => Iterator.empty
+        case Right(s) => Iterator((session, s.nPoints.toLong, s.errMedian,
+          s.errMean, s.weighted, s.excluded))
       }
     }.toDF(sessionCol, "n_points", "err_median", "err_mean",
       "gaze_err_weighted", "gaze_fraction_excluded")

@@ -20,11 +20,11 @@ object SessionCalibrator {
 
   /** Distributed cluster-median reduction per session: each session's
     * markers nearest-matched to pupils (match_time_points window=None
-    * parity, same as Calibrator.matchedPoints) via the keyed J2 union-sort
-    * join, confidence-gated on the matched rows, reduced to one
-    * (pupil, marker) pair per (session, cluster). `window` bounds the
-    * nearest match (a marker whose closest pupil is further than `window`
-    * away is dropped) — corpus hygiene for sessions with pupil dropouts;
+    * parity) via the keyed J2 union-sort join, confidence-gated on the
+    * matched rows, reduced to one (pupil, marker) pair per (session,
+    * cluster). `window` bounds the nearest match (a marker whose closest
+    * pupil is further than `window` away is dropped) — corpus hygiene for
+    * sessions with pupil dropouts;
     * pass Double.MaxValue for the reference's unbounded behavior. */
   def reducedPoints(markers: DataFrame, pupils: DataFrame,
                     sessionCol: String, window: Double,

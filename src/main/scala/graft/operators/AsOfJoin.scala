@@ -93,6 +93,34 @@ object AsOfJoin {
     }
   }
 
+  /** [[nearest]] for a per-session kernel over arrays: the index in `ts`
+    * of the right row matched to time `t`, or −1 when `ts` is empty. `ts`
+    * holds the non-null right timestamps sorted ascending with NaN last
+    * (`java.util.Arrays.sort` order). The semantics are `nearest`'s:
+    *  - prev is the last row with ts ≤ t, so an equal-ts right row counts
+    *    as prev;
+    *  - next is the first row with a strictly greater ts;
+    *  - prev wins ties.
+    * Comparisons are Spark SQL's, where NaN is greater than every number
+    * and equal to itself: a NaN `t` matches the last row, and a NaN next
+    * is farther than any prev. */
+  def nearestIndex(ts: Array[Double], t: Double): Int = {
+    var lo = 0; var hi = ts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sqlGreater(ts(mid), t)) hi = mid else lo = mid + 1
+    }
+    val prev = lo - 1
+    if (lo == ts.length) prev
+    else if (prev < 0 || sqlGreater(t - ts(prev), ts(lo) - t)) lo
+    else prev
+  }
+
+  /** `a > b` in Spark SQL: NaN is the greatest value and equals itself,
+    * −0.0 equals 0.0. */
+  private[graft] def sqlGreater(a: Double, b: Double): Boolean =
+    a != b && java.lang.Double.compare(a, b) > 0
+
   /** J1: for each left row, aggregate all right rows with
     * |rightTs - leftTs| <= window (same keys) using `aggs` (built from the
     * prefixed right columns). Left rows with no right row in range are

@@ -30,9 +30,8 @@ object OdometryOps {
     (pitch, roll, yaw)
   }
 
-  /** P9: m/s → mph / minutes-per-mile (odometry.py:197-224). */
+  /** P9: m/s → mph (odometry.py:197-224). */
   def mph(mps: Column): Column = mps * 3600.0 / 1609.34
-  def minsPerMile(mps: Column): Column = (lit(1.0) / mps) * 1609.34 / 60.0
 
   /** W8: Savitzky-Golay coefficients for (window, polyorder): the smoothed
     * value is Σ c_i · v[t+i-h], c = e₀ᵀ(AᵀA)⁻¹Aᵀ with A the Vandermonde of

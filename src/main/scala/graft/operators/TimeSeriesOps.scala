@@ -145,16 +145,6 @@ object TimeSeriesOps {
     df.withColumn(outCol, count(lit(1)).over(w))
   }
 
-  /** A8 with double-seconds time (the reference's native unit): quantizes to
-    * microseconds for the range frame — ±1 µs boundary tolerance, far below
-    * the reference's frame intervals (~8 ms at 120 Hz). */
-  def slidingRateSeconds(df: DataFrame, tsCol: String, partitionCols: Seq[String],
-                         window: Double, outCol: String = "rate"): DataFrame =
-    slidingRate(
-      df.withColumn("_us", (col(tsCol).cast("double") * 1e6).cast("long")),
-      "_us", partitionCols, (window * 1e6).round, outCol)
-      .drop("_us")
-
   /** J6: numpy-searchsorted('left') — for each left row, the number of
     * clock rows with ts strictly below it (= the insertion index into the
     * timeline, time_to_index / get_frame_indices utils.py:216-239,

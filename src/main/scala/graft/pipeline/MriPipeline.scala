@@ -119,8 +119,8 @@ object MriPipeline {
     }
     val errors = valEpochs.map { j =>
       Stage(s"error_val_$j", Seq(s"gaze_val_$j"), (s, in) =>
-        ErrorMap.compute(markerDf(s), in(s"gaze_val_$j"),
-          ErrorMap.Config(resolution = errorResolution)).summary)
+        ErrorMap.summary(markerDf(s), in(s"gaze_val_$j"),
+          ErrorMap.Config(resolution = errorResolution)))
     }
     (calStage +: gazeVal) ++ gazeMain ++ errors
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - **failure short-circuit (S7)**: a failed stage writes an empty
   *    `_FAILED` sentinel; downstream stages depending on it are skipped
   *    and marked failed as well (pipelines.py:112-115 etc.);
-  *  - a status table records (stage, state, rows, path, error, seconds)
-  *    — replacing the reference's scattered sentinel files as queryable
-  *    lineage.
+  *  - a status table records (stage, state, rows, path, error, seconds,
+  *    bytes) — replacing the reference's scattered sentinel files as
+  *    queryable lineage.
   *
   * Stages declare dependencies by name; inputs arrive as a map of
   * DataFrames. Tags are (k, v) provenance pairs, blake-like hashed with
@@ -40,10 +41,13 @@ object Pipeline {
 
   /** `seconds`: wall time the stage took in [[run]] — its compute and
     * write, or the sentinel/sidecar check of a memoized, failed or
-    * skipped stage (about 0). */
+    * skipped stage (about 0). `bytes`: what a computed stage wrote (the
+    * files under its output directory); 0 for every other state.
+    * `error`: why a stage failed; for an exception that wraps a cause
+    * (a failed Spark task), the innermost cause as `Class: message`. */
   case class StageResult(name: String, state: State, path: String,
                          rows: Long, error: Option[String],
-                         seconds: Double = 0.0)
+                         seconds: Double = 0.0, bytes: Long = 0L)
 
   private def rowsSidecar(path: String): Option[Long] = {
     val f = Paths.get(path, "_ROWS")
@@ -51,6 +55,23 @@ object Pipeline {
       scala.util.Try(new String(Files.readAllBytes(f), "UTF-8")
         .trim.toLong).toOption
     else None
+  }
+
+  private def treeBytes(path: String): Long = {
+    val files = Files.walk(Paths.get(path))
+    try files.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+    finally files.close()
+  }
+
+  /** The failure text: the exception's own message, or, when it wraps
+    * causes, the innermost cause with its class — Spark's
+    * `Job aborted due to stage failure` preamble hides it otherwise. */
+  private def failureCause(e: Throwable): String = {
+    var root = e
+    while (root.getCause != null && (root.getCause ne root)) root = root.getCause
+    // getMessage can be null (bare RuntimeException, errors)
+    val msg = Option(root.getMessage).getOrElse(root.getClass.getName)
+    (if (root eq e) msg else s"${root.getClass.getName}: $msg").take(200)
   }
 
   def tagHash(tags: Map[String, String]): String =
@@ -109,16 +130,15 @@ object Pipeline {
               Files.deleteIfExists(success)
               Files.createFile(failed)
               StageResult(stage.name, Failed, path, 0, Some("empty result"))
-            } else StageResult(stage.name, Computed, path, n, None)
+            } else StageResult(stage.name, Computed, path, n, None,
+              bytes = treeBytes(path))
           } catch {
             // fatal errors (OOM, linkage, interrupts) are not stage
             // failures: they propagate out of the run
             case NonFatal(e) =>
               Files.createDirectories(Paths.get(path))
               if (!Files.exists(failed)) Files.createFile(failed)
-              // getMessage can be null (bare RuntimeException, errors)
-              StageResult(stage.name, Failed, path, 0,
-                Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
+              StageResult(stage.name, Failed, path, 0, Some(failureCause(e)))
           }
         }
       results(stage.name) = res.copy(seconds = (System.nanoTime() - t0) / 1e9)
@@ -136,7 +156,7 @@ object Pipeline {
     import spark.implicits._
     results.values.toSeq
       .map(r => (r.name, r.state.toString, r.path, r.rows,
-        r.error.getOrElse(""), r.seconds))
-      .toDF("stage", "state", "path", "rows", "error", "seconds")
+        r.error.getOrElse(""), r.seconds, r.bytes))
+      .toDF("stage", "state", "path", "rows", "error", "seconds", "bytes")
   }
 }

@@ -16,10 +16,13 @@ import graft.operators.MarkerParsing
   *   markers_filtered  — filter_and_cluster (A1→W3→P7→W2→A7→A3)
   *   ├─ markers_cal    — earliest surviving epoch (calibration epoch)
   *   └─ markers_val    — remaining epochs (validation)
-  *   calibration       — Calibrator.fit on markers_cal (model table row;
-  *                       a rejected fit raises → S7 Failed sentinel)
+  *   calibration       — Calibrator.fit on markers_cal: match, gate and
+  *                       cluster-reduce in one task, driver-side fit
+  *                       (model table row; a rejected fit raises → S7
+  *                       Failed sentinel)
   *   gaze              — model table → distributed Column apply on pupils
-  *   error             — ErrorMap vs markers_val (one summary row)
+  *   error             — ErrorMap.summary vs markers_val: one task from
+  *                       match to summary row (too few points raise → S7)
   *
   * The calibration artifact is the [[GazeModelIO]] typed one-row layout,
   * so a memoized re-run reconstructs the model from Parquet without
@@ -80,8 +83,8 @@ object VedbPipeline {
     calibrationStage("calibration", "markers_cal", pupils, cfg),
     gazeStage("gaze", "calibration", pupils),
     Stage("error", Seq("gaze", "markers_val"), (_, in) =>
-      ErrorMap.compute(named(in("markers_val")), in("gaze"),
-        ErrorMap.Config(resolution = errorResolution)).summary))
+      ErrorMap.summary(named(in("markers_val")), in("gaze"),
+        ErrorMap.Config(resolution = errorResolution))))
 
   /** Run the full composition; returns the per-stage status map. */
   def run(spark: SparkSession, root: String, markers: DataFrame,
@@ -178,9 +181,9 @@ object VedbPipeline {
           (_, in) => cluster(rangeOf(in, e))),
         Stage(s"error_manual_${ce}_${e.epoch}",
           Seq(s"gaze_manual_$ce", s"markers_val_manual_${e.epoch}"),
-          (_, in) => ErrorMap.compute(
+          (_, in) => ErrorMap.summary(
             named(in(s"markers_val_manual_${e.epoch}")), in(s"gaze_manual_$ce"),
-            ErrorMap.Config(resolution = errorResolution)).summary))
+            ErrorMap.Config(resolution = errorResolution))))
     }
     Seq(frameStage, calStage,
       calibrationStage(s"calibration_manual_$ce", s"markers_cal_manual_$ce",

@@ -35,11 +35,4 @@ object StreamingOps {
       .agg(count(lit(1)).as("rate"))
       .select(keyCols.map(col) :+ col("window.start").as("window_start") :+
         col("rate"): _*)
-
-  /** A1 (streaming): duplicate-timestamp drop within the watermark
-    * (dropDuplicates on key+timestamp keeps the FIRST; the batch
-    * mode='all' semantics need the batch operator). */
-  def dropDuplicatesStream(df: DataFrame, tsCol: String,
-                           keyCols: Seq[String]): DataFrame =
-    df.dropDuplicates(keyCols :+ tsCol)
 }

@@ -86,7 +86,6 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("markers_filtered: one kernel task — no keyless window, no exchange, ≤ 2 jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     import org.apache.spark.sql.execution.exchange.Exchange
     val base = java.nio.file.Files.createTempDirectory("markers_filtered").toString
@@ -105,8 +104,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(exec.collect { case e: Exchange => e }.isEmpty &&
       !exec.toString.contains("Exchange"), s"exchange in:\n$exec")
     // job budget: the clock collect and the write
+    val jobs = jobsOf("markers-filtered-budget") {
+      stage.run(spark, Map.empty).write.parquet(s"$base/out")
+    }
+    assert(jobs >= 1 && jobs <= 2, s"$jobs jobs")
+    assert(spark.read.parquet(s"$base/out").count() > 0)
+  }
+
+  /** Jobs `body` starts, counted by a listener on its own job group. */
+  def jobsOf(group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val group = "markers-filtered-budget"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -115,13 +123,39 @@ class PlanAuditSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "markers_filtered write")
-      try stage.run(spark, Map.empty).write.parquet(s"$base/out")
-      finally sc.clearJobGroup()
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
       org.apache.spark.graftbridge.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
-    assert(spark.read.parquet(s"$base/out").count() > 0)
+    jobs.get
+  }
+
+  test("pipeline_vedb: no stage has a keyless window; calibration ≤ 3 jobs, error ≤ 2") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    val base = java.nio.file.Files.createTempDirectory("vedb_stages").toString
+    GoldenSession.markers(spark).write.parquet(s"$base/markers")
+    GoldenSession.clock(spark).write.parquet(s"$base/clock")
+    GoldenSession.pupils(spark).write.parquet(s"$base/pupils")
+    val stages = pipeline.VedbPipeline.stages(spark.read.parquet(s"$base/markers"),
+      spark.read.parquet(s"$base/clock"), spark.read.parquet(s"$base/pupils"),
+      epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+    assert(stages.map(_.name) == Seq("markers_filtered", "markers_cal",
+      "markers_val", "calibration", "gaze", "error"))
+    val budget = Map("calibration" -> 3, "error" -> 2)
+    for (st <- stages) {
+      val in = st.deps.map(d => d -> spark.read.parquet(s"$base/$d")).toMap
+      val df = st.run(spark, in)
+      val keyless = df.queryExecution.optimizedPlan.collect {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }
+      assert(keyless.isEmpty, s"${st.name}: ${keyless.length} keyless window(s)")
+      val jobs = jobsOf(s"vedb-${st.name}") {
+        st.run(spark, in).write.parquet(s"$base/${st.name}")
+      }
+      budget.get(st.name).foreach(b => assert(jobs >= 1 && jobs <= b, s"${st.name}: $jobs jobs"))
+      graft.CacheRegistry.releaseAll()
+    }
+    assert(spark.read.parquet(s"$base/error").count() == 1)
   }
 
   test("m9 model table broadcasts at bench session counts (size-gated hint)") {

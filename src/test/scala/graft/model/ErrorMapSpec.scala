@@ -1,6 +1,7 @@
 package graft.model
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class ErrorMapSpec extends SparkSpec {
@@ -201,5 +202,102 @@ class ErrorMapSpec extends SparkSpec {
     val df = Seq((0.5, 0.5), (1.5, 0.5), (-0.1, 0.2)).toDF("x", "y")
       .withColumn("in", ErrorMap.hullPredicate(square, col("x"), col("y"), false))
     assert(df.collect().map(_.getBoolean(2)).toSeq == Seq(true, false, false))
+  }
+
+  // ---- ErrorMap.summary (one task) against compute(...).summary
+
+  /** Same schema, n_points exactly, every other field to 1e-9 relative
+    * with nulls in the same places. */
+  def summaryParity(m: DataFrame, g: DataFrame, cfg: ErrorMap.Config): Row = {
+    val kernel = ErrorMap.summary(m, g, cfg)
+    val ref = ErrorMap.compute(m, g, cfg).summary
+    assert(kernel.schema == ref.schema, s"${kernel.schema} vs ${ref.schema}")
+    val (a, b) = (kernel.collect(), ref.collect())
+    assert(a.length == 1 && b.length == 1)
+    assert(a(0).getAs[Int]("n_points") == b(0).getAs[Int]("n_points"))
+    for (c <- Seq("gaze_err_weighted", "gaze_fraction_excluded", "err_median",
+        "err_mean")) {
+      val i = a(0).fieldIndex(c)
+      assert(a(0).isNullAt(i) == b(0).isNullAt(i), s"$c: ${a(0)} vs ${b(0)}")
+      if (!b(0).isNullAt(i)) {
+        val (x, y) = (a(0).getDouble(i), b(0).getDouble(i))
+        assert(math.abs(x - y) <= 1e-9 * math.abs(y), s"$c: summary $x vs compute $y")
+      }
+    }
+    graft.CacheRegistry.releaseAll()
+    a(0)
+  }
+
+  /** One session: 4x4 anchor grid, `n` samples per anchor, gaze = marker
+    * + (off, 0) at +1 ms. */
+  def grid4(off: Double, n: Int, t0: Double = 0.0): (DataFrame, DataFrame) = {
+    val ms = scala.collection.mutable.ArrayBuffer[(Double, Double, Double, Long)]()
+    val gs = scala.collection.mutable.ArrayBuffer[(Double, Double, Double, Double)]()
+    var t = t0; var c = 0L
+    for (i <- 0 until 4; j <- 0 until 4) {
+      val mx = 0.15 + 0.2 * i; val my = 0.15 + 0.2 * j
+      for (_ <- 0 until n) {
+        ms += ((t, mx, my, c)); gs += ((t + 0.001, mx + off, my, 0.95))
+        t += 1.0 / 30.0
+      }
+      c += 1; t += 0.3
+    }
+    (ms.toSeq.toDF("timestamp", "norm_x", "norm_y", "marker_cluster_index"),
+      gs.toSeq.toDF("timestamp", "norm_x", "norm_y", "confidence"))
+  }
+
+  test("summary == compute().summary: planted offsets and the golden session") {
+    val cfg = ErrorMap.Config(resolution = (60, 80))
+    summaryParity(markers, gaze, cfg)
+    for (off <- Seq(0.01, 0.02)) {
+      val (m, g) = grid4(off, 5)
+      summaryParity(m, g, cfg)
+    }
+    // golden session: validation epoch vs the gaze of the calibration fit
+    import graft.GoldenSession
+    val clustered = graft.operators.MarkerParsing.filterAndCluster(
+      GoldenSession.markers(spark), GoldenSession.clock(spark),
+      epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+    val first = clustered.agg(min("epoch")).head().getLong(0)
+    def named(df: DataFrame) = df.select(col("timestamp"),
+      element_at(col("norm_pos"), 1).as("norm_x"),
+      element_at(col("norm_pos"), 2).as("norm_y"), col("marker_cluster_index"))
+    val pupils = GoldenSession.pupils(spark)
+    val model = Calibrator.fit(named(clustered.filter(col("epoch") === first)), pupils).get
+    val g = model.transform(pupils).select(col("timestamp"),
+      col("gaze_x").as("norm_x"), col("gaze_y").as("norm_y"), col("confidence"))
+    val r = summaryParity(named(clustered.filter(col("epoch") =!= first)), g, cfg)
+    assert(r.getAs[Int]("n_points") == 16)
+  }
+
+  test("summary == compute().summary: per-row points, no cluster column, no in-frame gaze, gaze outside the hull") {
+    val cfg = ErrorMap.Config(resolution = (60, 80))
+    val (m, g) = grid4(0.015, 3)
+    summaryParity(m, g, cfg.copy(clusterReduce = false))
+    summaryParity(m.drop("marker_cluster_index"), g, cfg)
+    // every gaze sample out of frame: null weighted fields
+    val z = summaryParity(m, g.withColumn("norm_x", col("norm_x") + 1.5),
+      cfg.copy(outlierStds = None))
+    assert(z.isNullAt(0) && z.isNullAt(1) && z.getAs[Int]("n_points") == 16)
+    // in-frame gaze, all of it outside the anchors' hull
+    val g2 = g.withColumn("norm_x", lit(0.99)).withColumn("norm_y", lit(0.99))
+    val m2 = m.withColumn("norm_x", col("norm_x") * 0.2)
+      .withColumn("norm_y", col("norm_y") * 0.2)
+    val h = summaryParity(m2, g2, cfg.copy(outlierStds = None))
+    assert(h.isNullAt(0) && h.getAs[Double]("gaze_fraction_excluded") == 1.0)
+  }
+
+  test("summary: fewer than 4 points raise compute's Too few points requirement") {
+    val cfg = ErrorMap.Config(resolution = (60, 80))
+    val (m0, g) = grid4(0.01, 3)
+    val m = m0.filter(col("marker_cluster_index") < 3)
+    val expected = intercept[IllegalArgumentException](ErrorMap.compute(m, g, cfg))
+    graft.CacheRegistry.releaseAll()
+    val e = intercept[Exception](ErrorMap.summary(m, g, cfg).collect())
+    var root: Throwable = e
+    while (root.getCause != null) root = root.getCause
+    assert(root.isInstanceOf[IllegalArgumentException], root.toString)
+    assert(root.getMessage == expected.getMessage &&
+      root.getMessage.contains("Too few points"), root.getMessage)
   }
 }

@@ -306,4 +306,36 @@ class PipelineSpec extends SparkSpec {
     // both Ref epochs survive with their 5 clusters each
     assert(filtered.select("epoch").distinct().count() == 2)
   }
+
+  test("a failure inside a Spark task reports its innermost cause") {
+    val root = Files.createTempDirectory("pipe").toString
+    val fail = udf { (i: Int) => require(false, "boom"); i }
+    val r = Pipeline.run(spark, root, Seq(
+      Stage("src", Nil, (s, _) => {
+        import s.implicits._
+        Seq(1, 2).toDF("id")
+      }),
+      Stage("boom", Seq("src"), (_, in) => in("src").select(fail(col("id")).as("id")))))
+    assert(r("boom").state == Failed)
+    val err = r("boom").error.get
+    assert(err.contains("IllegalArgumentException") && err.contains("boom"), err)
+  }
+
+  test("computed stages report the bytes they wrote; a memoized VedbPipeline re-run writes 0") {
+    import graft.GoldenSession
+    val root = Files.createTempDirectory("vedb_bytes").toString
+    def run() = VedbPipeline.run(spark, root, GoldenSession.markers(spark),
+      GoldenSession.clock(spark), GoldenSession.pupils(spark),
+      epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+    val r1 = run()
+    assert(r1.values.forall(r => r.state == Computed && r.bytes > 0), r1.toString)
+    val onDisk = Files.walk(java.nio.file.Paths.get(r1("error").path)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_))
+      .map(Files.size).sum
+    assert(r1("error").bytes == onDisk)
+    val r2 = run()
+    assert(r2.values.forall(r => r.state == Memoized && r.bytes == 0L), r2.toString)
+    val st = Pipeline.statusTable(spark, r2).collect()
+    assert(st.length == 6 && st.forall(_.getAs[Long]("bytes") == 0L))
+  }
 }
