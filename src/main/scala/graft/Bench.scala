@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every SparkEntry query on
@@ -177,7 +178,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     Seq("join_agg_revenue", "w2_sessionize", "j2_asof_nearest")
       .foreach(q => try drain(SparkEntry.queries(q)(spark, warmDir))
-      catch { case _: Throwable => () })
+      catch { case NonFatal(_) => () })
 
     // dev-only subset filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 (driver runs unset)
     val only: Option[Set[String]] =
@@ -200,7 +201,7 @@ object Bench {
           val ok = try {
             fn(spark, calibrationSf).write.mode("overwrite")
               .format("noop").save(); true
-          } catch { case _: Throwable => false }
+          } catch { case NonFatal(_) => false }
           CacheRegistry.releaseAll()
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
@@ -218,7 +219,7 @@ object Bench {
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { drain(fn(spark, sfDir)); true }
-      catch { case _: Throwable => false }
+      catch { case NonFatal(_) => false }
       val dt = (System.nanoTime() - t0) / 1e9
       // between queries: operator-scoped caches from this query must not
       // occupy storage while the next one is measured
@@ -299,7 +300,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try {
           drain(SparkEntry.queries(name)(spark, calibrationSf)); true
-        } catch { case _: Throwable => false }
+        } catch { case NonFatal(_) => false }
         CacheRegistry.releaseAll()
         val t = (System.nanoTime() - t0) / 1e9
         calibrationRef.toMap.get(name).filter(_ => ok).map(t / _)
@@ -357,7 +358,7 @@ object Bench {
     if (track) try {
       tracked.getParentFile.mkdirs()
       java.nio.file.Files.write(tracked.toPath, (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // stdout line is still the artifact
+    } catch { case NonFatal(_) => () } // stdout line is still the artifact
     println(line)
     // TRUNCATION-PROOF TAIL LINE (r12 verdict #3): the driver's artifact
     // keeps only the LAST ~2000 chars of stdout and json-parses what it

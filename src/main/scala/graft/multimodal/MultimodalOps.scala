@@ -84,23 +84,108 @@ object MultimodalOps {
 
   /** Rec.601 luma (0.299R + 0.587G + 0.114B) of every pixel, row-major —
     * the grayscale plane the reference's scans load (`color='gray'`,
-    * pupil_detection_pl.py:107-112). */
+    * pupil_detection_pl.py:107-112).
+    *
+    * R, G, B are what `img.getRGB(x, y)` returns, i.e. the colour model's
+    * `getRGB` of the raster's data elements (so a gray JPEG's linear-gray
+    * → sRGB step is applied), and the result is bit-identical to that
+    * per-pixel call. It is computed from the raster, chosen by the raster
+    * and colour model the codec returned:
+    *  - a byte raster with one data element per pixel (gray, palette and
+    *    binary images): a 256-entry luma table built from the colour
+    *    model, applied to each row's data elements;
+    *  - 8-bit sRGB without alpha in a byte `ComponentSampleModel` (PNG
+    *    RGB): R, G, B read from the backing array;
+    *  - anything else: per-pixel `getRGB`. */
   private[multimodal] def lumaPixels(img: java.awt.image.BufferedImage): Array[Double] = {
     val w = img.getWidth; val h = img.getHeight
     val out = new Array[Double](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff; val b = rgb & 0xff
-        out(y * w + x) = 0.299 * r + 0.587 * g + 0.114 * b
-        x += 1
+    val raster = img.getRaster
+    val cm = img.getColorModel
+    val table = lumaTable(raster, cm)
+    if (table != null) {
+      val row = new Array[Byte](w)
+      var y = 0
+      while (y < h) {
+        raster.getDataElements(0, y, w, 1, row)
+        val base = y * w
+        var x = 0
+        while (x < w) { out(base + x) = table(row(x) & 0xff); x += 1 }
+        y += 1
       }
-      y += 1
+    } else if (isByteSrgb(raster, cm)) {
+      val sm = raster.getSampleModel.asInstanceOf[java.awt.image.ComponentSampleModel]
+      val db = raster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferByte]
+      val bank = sm.getBankIndices()(0)
+      val data = db.getData(bank)
+      val ps = sm.getPixelStride; val ss = sm.getScanlineStride
+      val bo = sm.getBandOffsets
+      // element of (x, y) in band b: Raster → SampleModel coordinates,
+      // then DataBufferByte's per-bank offset
+      val origin = db.getOffsets()(bank) -
+        raster.getSampleModelTranslateX * ps - raster.getSampleModelTranslateY * ss
+      val (or, og, ob) = (origin + bo(0), origin + bo(1), origin + bo(2))
+      var y = 0
+      while (y < h) {
+        val base = y * w
+        var x = 0
+        while (x < w) {
+          val i = y * ss + x * ps
+          out(base + x) = rec601(data(or + i) & 0xff, data(og + i) & 0xff, data(ob + i) & 0xff)
+          x += 1
+        }
+        y += 1
+      }
+    } else {
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          out(y * w + x) = rec601(img.getRGB(x, y))
+          x += 1
+        }
+        y += 1
+      }
     }
     out
   }
+
+  @inline private def rec601(r: Int, g: Int, b: Int): Double =
+    0.299 * r + 0.587 * g + 0.114 * b
+
+  @inline private def rec601(rgb: Int): Double =
+    rec601((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+
+  /** Luma of each byte data element through `cm.getRGB`, or null unless
+    * the raster holds one byte data element per pixel (or the colour
+    * model rejects some byte value, left to per-pixel `getRGB`). */
+  private def lumaTable(raster: java.awt.image.Raster,
+                        cm: java.awt.image.ColorModel): Array[Double] =
+    if (raster.getTransferType != java.awt.image.DataBuffer.TYPE_BYTE ||
+        raster.getNumDataElements != 1) null
+    else try {
+      val elem = new Array[Byte](1)
+      Array.tabulate(256) { v =>
+        elem(0) = v.toByte
+        rec601(cm.getRGB(elem))
+      }
+    } catch { case scala.util.control.NonFatal(_) => null }
+
+  /** 8-bit sRGB R, G, B (no alpha) as three bands of one byte array:
+    * there `cm.getRGB` returns the stored bytes unchanged. */
+  private def isByteSrgb(raster: java.awt.image.Raster,
+                         cm: java.awt.image.ColorModel): Boolean =
+    (cm, raster.getSampleModel, raster.getDataBuffer) match {
+      case (ccm: java.awt.image.ComponentColorModel,
+            sm: java.awt.image.ComponentSampleModel,
+            db: java.awt.image.DataBufferByte) =>
+        !ccm.hasAlpha && ccm.getNumComponents == 3 &&
+          ccm.getColorSpace.isCS_sRGB &&
+          ccm.getTransferType == java.awt.image.DataBuffer.TYPE_BYTE &&
+          ccm.getComponentSize.forall(_ == 8) &&
+          sm.getNumBands == 3 && sm.getBankIndices.distinct.length == 1
+      case _ => false
+    }
 
   /** Image feature kernel: 16-bin normalized LUMINANCE histogram
     * (bin = floor(luma · 16 / 256), top bin closed) — same shape and

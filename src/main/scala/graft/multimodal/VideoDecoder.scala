@@ -10,11 +10,12 @@ import graft.multimodal.VisionOps.Gray
   * The contract is exactly the shape every per-frame kernel already
   * consumes (see `VisionOps.videoFrames`): bytes → an ITERATOR of
   * row-major grayscale planes, `None` when the container is not this
-  * decoder's. Laziness is the scale property — a 10 GB blob's frames
-  * are decoded one at a time inside the consuming `mapPartitions` task
-  * and never materialized together; an FFI decoder should hand frames
-  * out of native memory the same way (decode-next per `next()`, free
-  * after copy).
+  * decoder's. Laziness is the scale property an FFI decoder should keep
+  * — a 10 GB blob's frames decoded one at a time inside the consuming
+  * `mapPartitions` task and never materialized together (decode-next
+  * per `next()`, free after copy). The built-in AVI, GPNV and MP4
+  * decoders instead decode the whole blob before returning, so a
+  * corrupt later frame fails the whole blob (docs/CODEC.md clause 2).
   *
   * Swapping in ffmpeg/JavaCV = implementing `frames` (magic-sniff the
   * container, wrap the native demux/decode loop, emit Rec.601 luma

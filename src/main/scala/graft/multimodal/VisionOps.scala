@@ -353,7 +353,7 @@ object VisionOps {
     val cx = sx.toDouble / n
     val cy = sy.toDouble / n
     var maxD2 = 0.0
-    val floors = scala.collection.mutable.SortedSet.empty[Long]
+    val floors = floorSlots(g)
     y = 0
     while (y < g.h) {
       var x = 0
@@ -362,19 +362,30 @@ object VisionOps {
           val dx = x - cx; val dy = y - cy
           val d2 = dx * dx + dy * dy
           if (d2 > maxD2) maxD2 = d2
-          floors += math.floor(math.sqrt(d2)).toLong
+          floors(math.floor(math.sqrt(d2)).toInt) = true
         }
         x += 1
       }
       y += 1
     }
+    Some(CircleMarker(n, cx, cy, math.sqrt(maxD2), ringCount(floors)))
+  }
+
+  /** One slot per possible floor(distance) of a pixel from a centroid:
+    * a centroid of pixels lies in the image's bounding box, so the image
+    * diagonal bounds every distance. */
+  private def floorSlots(g: Gray): Array[Boolean] =
+    new Array[Boolean](math.sqrt(g.w.toDouble * g.w + g.h.toDouble * g.h).toInt + 1)
+
+  /** Ring count: maximal runs of consecutive marked floor distances. */
+  private def ringCount(floors: Array[Boolean]): Int = {
     var rings = 0
-    var prev = Long.MinValue
-    floors.foreach { f =>
-      if (prev == Long.MinValue || f - prev > 1) rings += 1
-      prev = f
+    var f = 0
+    while (f < floors.length) {
+      if (floors(f) && (f == 0 || !floors(f - 1))) rings += 1
+      f += 1
     }
-    Some(CircleMarker(n, cx, cy, math.sqrt(maxD2), rings))
+    rings
   }
 
   /** MULTI-marker concentric-circle detection — the reference's true
@@ -467,38 +478,47 @@ object VisionOps {
     // group components by rounded centroid = marker identity
     val groups = (0 until next).groupBy { c =>
       (math.rint(csx(c).toDouble / cn(c)), math.rint(csy(c).toDouble / cn(c)))
-    }
-    groups.toSeq.map { case (_, comps) =>
+    }.values.toArray
+    val ng = groups.length
+    val groupOf = new Array[Int](next)
+    val gn = new Array[Long](ng)
+    val gcx = new Array[Double](ng); val gcy = new Array[Double](ng)
+    var k = 0
+    while (k < ng) {
+      val comps = groups(k)
+      comps.foreach(groupOf(_) = k)
       val mn = comps.map(cn(_)).sum
       val sx = comps.map(csx(_)).sum; val sy = comps.map(csy(_)).sum
-      val cx = sx.toDouble / mn; val cy = sy.toDouble / mn
-      var maxD2 = 0.0
-      var lumaSum = 0L
-      val floors = scala.collection.mutable.SortedSet.empty[Long]
-      val member = comps.toSet
-      var p = 0
-      while (p < n) {
-        if (label(p) >= 0 && member(label(p))) {
-          val dx = p % g.w - cx; val dy = p / g.w - cy
-          val d2 = dx * dx + dy * dy
-          if (d2 > maxD2) maxD2 = d2
-          floors += math.floor(math.sqrt(d2)).toLong
-          lumaSum += origLuma(p)
-        }
-        p += 1
+      gn(k) = mn; gcx(k) = sx.toDouble / mn; gcy(k) = sy.toDouble / mn
+      k += 1
+    }
+    // one pass over the labelled pixels: per marker the outer radius, the
+    // ring-pixel luma sum and the floor distances its pixels occupy
+    val maxD2 = new Array[Double](ng)
+    val lumaSum = new Array[Long](ng)
+    val floors = Array.fill(ng)(floorSlots(g))
+    var p = 0
+    while (p < n) {
+      val l = label(p)
+      if (l >= 0) {
+        val m = groupOf(l)
+        val dx = p % g.w - gcx(m); val dy = p / g.w - gcy(m)
+        val d2 = dx * dx + dy * dy
+        if (d2 > maxD2(m)) maxD2(m) = d2
+        floors(m)(math.floor(math.sqrt(d2)).toInt) = true
+        lumaSum(m) += origLuma(p)
       }
-      var rings = 0; var prev = Long.MinValue
-      floors.foreach { f =>
-        if (prev == Long.MinValue || f - prev > 1) rings += 1
-        prev = f
-      }
-      val ringLuma = lumaSum.toDouble / mn
+      p += 1
+    }
+    (0 until ng).map { m =>
+      val mn = gn(m); val cx = gcx(m); val cy = gcy(m)
+      val ringLuma = lumaSum(m).toDouble / mn
       val dcx = math.rint(cx).toInt; val dcy = math.rint(cy).toInt
       val dotLuma =
         if (dcx >= 0 && dcx < g.w && dcy >= 0 && dcy < g.h)
           origLuma(dcy * g.w + dcx).toDouble
         else ringLuma
-      TypedMarker(CircleMarker(mn, cx, cy, math.sqrt(maxD2), rings),
+      TypedMarker(CircleMarker(mn, cx, cy, math.sqrt(maxD2(m)), ringCount(floors(m))),
         ringLuma, dotLuma, if (ringLuma < dotLuma) "Ref" else "Stop")
     }.sortBy(m => (m.marker.locX, m.marker.locY))
   }

@@ -328,7 +328,7 @@ object PldataV2 {
     }
 
     override def abort(): Unit = {
-      try { out.close(); tsW.close() } catch { case _: Throwable => () }
+      try { out.close(); tsW.close() } catch { case scala.util.control.NonFatal(_) => () }
       val ds = java.nio.file.Files.newDirectoryStream(tmpDir)
       try ds.asScala.toSeq.foreach(java.nio.file.Files.deleteIfExists(_))
       finally ds.close()

@@ -187,4 +187,20 @@ class PldataV2Spec extends SparkSpec {
     val ids = df.select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == ((0L until 10L) ++ (100L until 115L)).toSeq)
   }
+
+  test("writer abort deletes its temp dir when closing the streams throws") {
+    val root = tmp()
+    val schema = StructType(Seq(StructField("timestamp", DoubleType),
+      StructField("id", LongType)))
+    val w = new PldataV2.PldataDataWriter(schema, root, "gaze", 0, "job")
+    w.write(org.apache.spark.sql.catalyst.InternalRow(100.0, 1L))
+    val tmpDirs = new java.io.File(root).listFiles().filter(_.getName.startsWith("_tmp-"))
+    assert(tmpDirs.length == 1)
+    // a directory where the sidecar was: its close (header patch) throws
+    // FileNotFoundException, a non-fatal error
+    val npy = new java.io.File(tmpDirs.head, "gaze_timestamps.npy")
+    assert(npy.delete() && npy.mkdir())
+    w.abort()
+    assert(!tmpDirs.head.exists(), "abort left its temp dir behind")
+  }
 }
