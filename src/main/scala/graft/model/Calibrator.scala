@@ -98,23 +98,18 @@ object Calibrator {
   }
 
   /** M6: _fit_tps_gaze_cv (calibration.py:348-412). LOO over the λ grid on
-    * BOTH axes jointly (error = per-point L2 of the 2-D residual); optional
-    * one-shot outlier cut at median + k·std of the λ-averaged per-point
-    * error, then re-run CV without further cuts; final fit at argmin λ
-    * (first minimum, numpy argmin). */
+    * BOTH axes jointly (error = per-point L2 of the 2-D residual, from
+    * [[Tps.looResiduals]]); optional one-shot outlier cut at median + k·std
+    * of the λ-averaged per-point error, then re-run CV without further
+    * cuts; final fit at argmin λ (first minimum, numpy argmin). */
   def fitTpsCv(pxy: Array[Array[Double]], mx: Array[Double], my: Array[Double],
                lambdas: Array[Double], maxStds: Option[Double]): TpsMapModel = {
     val n = pxy.length
     // errors(iλ)(iPoint) = ‖LOO prediction − truth‖₂
     val errors = lambdas.map { l =>
-      Array.tabulate(n) { j =>
-        val keep = (0 until n).filter(_ != j).toArray
-        val xyK = keep.map(pxy)
-        val (tx, ty) = Tps.fit2(xyK, keep.map(mx), keep.map(my), l)
-        val ex = Tps.z(pxy(j)(0), pxy(j)(1), xyK, tx) - mx(j)
-        val ey = Tps.z(pxy(j)(0), pxy(j)(1), xyK, ty) - my(j)
-        math.sqrt(ex * ex + ey * ey)
-      }
+      val r = Tps.looResiduals(pxy, Seq(mx, my), l)
+      val ex = r(0); val ey = r(1)
+      Array.tabulate(n)(j => math.sqrt(ex(j) * ex(j) + ey(j) * ey(j)))
     }
     maxStds match {
       case Some(k) =>
@@ -170,14 +165,7 @@ object Calibrator {
   private def finalFit(pxy: Array[Array[Double]], mx: Array[Double],
                        my: Array[Double], lambdas: Array[Double],
                        errors: Array[Array[Double]]): TpsMapModel = {
-    val meanPerLambda = errors.map(e => e.sum / e.length)
-    var best = 0
-    var i = 1
-    while (i < lambdas.length) {
-      if (meanPerLambda(i) < meanPerLambda(best)) best = i
-      i += 1
-    }
-    val l = lambdas(best)
+    val l = lambdas(Stats.argmin(errors.map(e => e.sum / e.length)))
     val (tx, ty) = Tps.fit2(pxy, mx, my, l)
     TpsMapModel(pxy, tx, pxy, ty)
   }

@@ -107,6 +107,13 @@ object Stats {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
   def mean(xs: Array[Double]): Double = xs.sum / xs.length
+  /** Index of the first minimum (numpy argmin on NaN-free input). */
+  def argmin(xs: Array[Double]): Int = {
+    var best = 0
+    var i = 1
+    while (i < xs.length) { if (xs(i) < xs(best)) best = i; i += 1 }
+    best
+  }
   def stdPop(xs: Array[Double]): Double = {
     val mu = mean(xs)
     math.sqrt(xs.map(x => (x - mu) * (x - mu)).sum / xs.length)

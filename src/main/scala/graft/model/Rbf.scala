@@ -60,7 +60,12 @@ object Rbf {
     * reference's errors[s, m] layout — RMS of the joint 2-D residual
     * (x and y maps fitted with the same hyperparameters); first minimum
     * in row-major order wins (np.unravel_index(errors.argmin())).
-    * Returns (bestKernel, bestSmooth, errors). */
+    * Returns (bestKernel, bestSmooth, errors).
+    *
+    * This refits n times per grid point on purpose: the closed-form
+    * leave-one-out of [[Tps.looResiduals]] does not apply, because ε
+    * ([[defaultEps]]) depends on the node set, so each multiquadric
+    * leave-out fit uses a different kernel than the full system. */
   def looSelect(pxy: Array[Array[Double]], mx: Array[Double], my: Array[Double],
                 kernels: Seq[String], smoothnesses: Seq[Double]):
       (String, Double, Array[Double]) = {
@@ -81,9 +86,7 @@ object Rbf {
       }
       math.sqrt(sum / n)
     }.toArray
-    var best = 0
-    var i = 1
-    while (i < errs.length) { if (errs(i) < errs(best)) best = i; i += 1 }
+    val best = Stats.argmin(errs)
     (grid(best)._1, grid(best)._2, errs)
   }
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side pipeline orchestrator — the Spark restatement of the
   * reference's file-materialized DAG (pipelines.py:557-819):
@@ -16,6 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - **memoization (S8)**: a stage whose output directory already has a
   *    `_SUCCESS` marker is skipped and its output re-read
   *    (pipelines.py:84-92 etc.);
+  *  - **sidecars**: a computed stage writes its row count (`_ROWS`) and
+  *    its Spark schema as JSON (`_SCHEMA`) beside its Parquet files. A
+  *    memoized stage reports its rows from `_ROWS`, and every dependency
+  *    read — computed earlier in the same run or memoized from an earlier
+  *    one — takes its schema from `_SCHEMA`, so it costs no Parquet
+  *    footer read (Spark's schema inference runs a job per read). An
+  *    artifact written before a sidecar existed falls back to `count()`
+  *    or to inference;
   *  - **failure short-circuit (S7)**: a failed stage writes an empty
   *    `_FAILED` sentinel; downstream stages depending on it are skipped
   *    and marked failed as well (pipelines.py:112-115 etc.);
@@ -49,13 +58,22 @@ object Pipeline {
                          rows: Long, error: Option[String],
                          seconds: Double = 0.0, bytes: Long = 0L)
 
-  private def rowsSidecar(path: String): Option[Long] = {
-    val f = Paths.get(path, "_ROWS")
-    if (Files.exists(f))
-      scala.util.Try(new String(Files.readAllBytes(f), "UTF-8")
-        .trim.toLong).toOption
+  private def sidecar(path: String, name: String): Option[String] = {
+    val f = Paths.get(path, name)
+    if (Files.exists(f)) Some(new String(Files.readAllBytes(f), "UTF-8"))
     else None
   }
+
+  private def rowsSidecar(path: String): Option[Long] =
+    sidecar(path, "_ROWS").flatMap(s => scala.util.Try(s.trim.toLong).toOption)
+
+  /** A stage artifact as a DataFrame: with the schema from its `_SCHEMA`
+    * sidecar when it has one, by Parquet schema inference otherwise. */
+  private[pipeline] def readArtifact(spark: SparkSession, path: String): DataFrame =
+    sidecar(path, "_SCHEMA")
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case st: StructType => spark.read.schema(st).parquet(path) }
+      .getOrElse(spark.read.parquet(path))
 
   private def treeBytes(path: String): Long = {
     val files = Files.walk(Paths.get(path))
@@ -113,7 +131,7 @@ object Pipeline {
         } else {
           try {
             val inputs = stage.deps.map { d =>
-              d -> spark.read.parquet(outPath(d))
+              d -> readArtifact(spark, outPath(d))
             }.toMap
             val out = stage.run(spark, inputs)
             // row count observed on the write itself — no post-write scan
@@ -125,6 +143,8 @@ object Pipeline {
             val n = obs.get("rows").asInstanceOf[Long]
             Files.write(Paths.get(path, "_ROWS"),
               n.toString.getBytes("UTF-8"))
+            Files.write(Paths.get(path, "_SCHEMA"),
+              out.schema.json.getBytes("UTF-8"))
             if (n == 0) { // reference: empty result == failed step
               Files.createDirectories(Paths.get(path))
               Files.deleteIfExists(success)

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
@@ -63,7 +65,7 @@ object QueryProfile {
     Seq("join_agg_revenue", "w2_sessionize", "j2_asof_nearest").foreach { q =>
       try graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
         .write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     names.foreach { name =>
@@ -79,7 +81,7 @@ object QueryProfile {
         java.nio.file.Files.write(
           new java.io.File(planDir, s"${name}_$tag.txt").toPath,
           sw.toString.getBytes("UTF-8"))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[profile] $name explain failed: $e")
       }
       val ts = (1 to runs).map { runIdx =>
@@ -92,7 +94,7 @@ object QueryProfile {
           val df = fn(spark, dir) // eager driver work (fits, probes) here
           buildSec = (System.nanoTime() - n0) / 1e9
           df.write.mode("overwrite").format("noop").save(); true
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[profile] $name failed: $e"); false
         }
         val dt = (System.nanoTime() - n0) / 1e9

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Dev probe for docs/SCALE.md pitfall 1b: does a query's optimized plan
@@ -31,7 +33,7 @@ object WinnowProbe {
           l.contains("Filter ") && Suspicious.exists(l.contains))
         println(s"[probe] $n: ${bad.length} suspicious Filter line(s)")
         bad.foreach(l => println("[probe]   " + l.trim.take(300)))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"[probe] $n: ERROR ${e.getMessage}")
       } finally graft.CacheRegistry.releaseAll()
     }

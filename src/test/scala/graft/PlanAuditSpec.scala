@@ -158,6 +158,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/error").count() == 1)
   }
 
+  test("pipeline_vedb cold run: one Spark job fewer per dependency edge than schema inference") {
+    import java.nio.file.{Files, Paths}
+    import pipeline.Pipeline
+    val base = Files.createTempDirectory("vedb_edges").toString
+    GoldenSession.markers(spark).write.parquet(s"$base/markers")
+    GoldenSession.clock(spark).write.parquet(s"$base/clock")
+    GoldenSession.pupils(spark).write.parquet(s"$base/pupils")
+    val stages = pipeline.VedbPipeline.stages(spark.read.parquet(s"$base/markers"),
+      spark.read.parquet(s"$base/clock"), spark.read.parquet(s"$base/pupils"),
+      epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+    val edges = stages.map(_.deps.length).sum
+    assert(edges == 7)
+    def dropSchemas(root: String): Unit =
+      Files.list(Paths.get(root)).toArray.foreach(d =>
+        Files.deleteIfExists(d.asInstanceOf[java.nio.file.Path].resolve("_SCHEMA")))
+    // cold: every dependency was computed earlier in the same run
+    var cold: Map[String, Pipeline.StageResult] = Map.empty
+    val coldJobs = jobsOf("vedb-cold") {
+      cold = Pipeline.run(spark, s"$base/cold", stages)
+    }
+    assert(cold.values.forall(_.state == Pipeline.Computed), cold.toString)
+    // one stage per run: every dependency is memoized from an earlier run,
+    // read through its sidecar (kept) or by inference (sidecars dropped)
+    def stepwise(root: String, keepSidecars: Boolean): Int =
+      stages.indices.map { k =>
+        if (!keepSidecars && k > 0) dropSchemas(root)
+        jobsOf(s"vedb-step-$keepSidecars-$k") {
+          val r = Pipeline.run(spark, root, stages.take(k + 1))
+          assert(r(stages(k).name).state == Pipeline.Computed, r.toString)
+          assert(stages.take(k).forall(st => r(st.name).state == Pipeline.Memoized))
+        }
+      }.sum
+    val memoJobs = stepwise(s"$base/memo", keepSidecars = true)
+    val inferJobs = stepwise(s"$base/infer", keepSidecars = false)
+    assert(memoJobs == coldJobs, s"memoized deps: $memoJobs jobs, cold run $coldJobs")
+    assert(inferJobs - coldJobs == edges,
+      s"inference: $inferJobs jobs, sidecars: $coldJobs, edges: $edges")
+    for (st <- stages) {
+      val want = spark.read.parquet(cold(st.name).path).collect().map(_.toString).sorted
+      for (root <- Seq("memo", "infer"))
+        assert(spark.read.parquet(s"$base/$root/${Paths.get(cold(st.name).path).getFileName}")
+          .collect().map(_.toString).sorted.sameElements(want), s"$root ${st.name}")
+    }
+    graft.CacheRegistry.releaseAll()
+  }
+
   test("m9 model table broadcasts at bench session counts (size-gated hint)") {
     val p = plan(Queries.multiSessionPipeline(spark, dir))
     assert(p.contains("BroadcastHashJoin"),

@@ -108,4 +108,12 @@ class MriPipelineSpec extends SparkSpec {
     assert(r2("calibration").state == Failed &&
       r2("calibration").error.contains("failed sentinel"))
   }
+
+  test("every MriPipeline stage reads back through _SCHEMA as by inference") {
+    val base = Files.createTempDirectory("mri").toString
+    writeLayout(base)
+    val r = MriPipeline.run(spark, base, "sub01", "a", task = "mri")
+    assert(r.size == 6)
+    PipelineSpec.assertSidecarReads(spark, r)
+  }
 }

@@ -187,9 +187,11 @@ class PipelineSpec extends SparkSpec {
     assert(split == Map(0.95 -> 0, 1.0 -> 0, 2.95 -> 1))
   }
 
-  test("pipeline_vedb manual-epoch branch: marker_times.yaml drives cal/val stages") {
-    import graft.operators.MarkerParsing
-    val root = Files.createTempDirectory("vedbmanual").toString
+  /** The manual-epoch session: two curated calibration ranges and one
+    * validation range in a marker_times.yaml, 5 marker clusters inside
+    * each range, and pupils on an inverse affine of the markers. Returns
+    * (markers, clock, pupils, calibration epochs, validation epochs). */
+  def manualSession() = {
     val fps = 30.0
     val rng = new scala.util.Random(7)
     // marker_times.yaml: one curated calibration range + one validation range
@@ -205,8 +207,6 @@ class PipelineSpec extends SparkSpec {
         |""".stripMargin)
     val calEp = ManualEpochs.splitTime(yamlF.toString, "calibration_frames")
     val valEp = ManualEpochs.splitTime(yamlF.toString, "validation_frames")
-    assert(calEp == Seq(ManualEpochs.Epoch(0, 300, 800),
-      ManualEpochs.Epoch(1, 4000, 4500)))
     // 5 spatial clusters, 100 frames (3.3 s) each, inside EVERY range —
     // including the second calibration range, so a regression back to
     // merging all calibration ranges would change markers_cal and fail
@@ -233,6 +233,15 @@ class PipelineSpec extends SparkSpec {
       .select(col("timestamp"),
         element_at(col("norm_pos"), 1).as("norm_x"),
         element_at(col("norm_pos"), 2).as("norm_y"), col("confidence"))
+    (markers, clock, pupils, calEp, valEp)
+  }
+
+  test("pipeline_vedb manual-epoch branch: marker_times.yaml drives cal/val stages") {
+    val root = Files.createTempDirectory("vedbmanual").toString
+    val fps = 30.0
+    val (markers, clock, pupils, calEp, valEp) = manualSession()
+    assert(calEp == Seq(ManualEpochs.Epoch(0, 300, 800),
+      ManualEpochs.Epoch(1, 4000, 4500)))
     val r = Pipeline.run(spark, root,
       VedbPipeline.manualStages(markers, clock, pupils, calEp, valEp))
     assert(r.keySet == Set("markers_frames_manual", "markers_cal_manual_e0",
@@ -337,5 +346,76 @@ class PipelineSpec extends SparkSpec {
     assert(r2.values.forall(r => r.state == Memoized && r.bytes == 0L), r2.toString)
     val st = Pipeline.statusTable(spark, r2).collect()
     assert(st.length == 6 && st.forall(_.getAs[Long]("bytes") == 0L))
+  }
+
+  test("every VedbPipeline stage, both branches, reads back through _SCHEMA as by inference") {
+    import graft.GoldenSession
+    val auto = VedbPipeline.run(spark, Files.createTempDirectory("vedb_schema").toString,
+      GoldenSession.markers(spark), GoldenSession.clock(spark),
+      GoldenSession.pupils(spark),
+      epochDuration = (30.0, 150.0), clusterDuration = (0.5, 5.0))
+    assert(auto.size == 6)
+    PipelineSpec.assertSidecarReads(spark, auto)
+    val (markers, clock, pupils, calEp, valEp) = manualSession()
+    val manual = Pipeline.run(spark, Files.createTempDirectory("vedb_schema_m").toString,
+      VedbPipeline.manualStages(markers, clock, pupils, calEp, valEp))
+    assert(manual.size == 6)
+    PipelineSpec.assertSidecarReads(spark, manual)
+  }
+
+  test("a computed stage reads its memoized dependency through the _SCHEMA sidecar") {
+    val root = Files.createTempDirectory("pipe").toString
+    val r1 = Pipeline.run(spark, root, stages(failMid = false).take(1))
+    assert(r1("src").state == Computed)
+    // a pruned schema in the sidecar: the next run's read must take it
+    Files.writeString(java.nio.file.Paths.get(r1("src").path, "_SCHEMA"),
+      org.apache.spark.sql.types.StructType.fromDDL("v DOUBLE").json)
+    var seen: Seq[String] = Nil
+    val r2 = Pipeline.run(spark, root, Seq(stages(failMid = false).head,
+      Stage("cols", Seq("src"), (_, in) => { seen = in("src").columns.toSeq; in("src") })))
+    assert(r2("src").state == Memoized && r2("cols").state == Computed, r2.toString)
+    assert(seen == Seq("v"), seen.toString)
+    assert(spark.read.parquet(r2("cols").path).as[Double].collect().sorted
+      .sameElements(Seq(10.0, 20.0, 30.0)))
+  }
+
+  test("artifacts without _SCHEMA still feed a computed stage, by schema inference") {
+    val root = Files.createTempDirectory("pipe").toString
+    val r1 = Pipeline.run(spark, root, stages(failMid = false).take(2))
+    r1.values.foreach(r => Files.delete(java.nio.file.Paths.get(r.path, "_SCHEMA")))
+    val r2 = Pipeline.run(spark, root, stages(failMid = false))
+    assert(r2("src").state == Memoized && r2("mid").state == Memoized)
+    assert(r2("out").state == Computed && r2("out").rows == 1, r2.toString)
+    assert(spark.read.parquet(r2("out").path).head().getDouble(0) == 120.0)
+    // memoized artifacts are not rewritten; the computed one gains its sidecar
+    assert(!Files.exists(java.nio.file.Paths.get(r2("mid").path, "_SCHEMA")))
+    assert(Files.exists(java.nio.file.Paths.get(r2("out").path, "_SCHEMA")))
+  }
+}
+
+object PipelineSpec {
+  import org.apache.spark.sql.SparkSession
+
+  /** Every computed stage left a `_SCHEMA` sidecar, and reading its
+    * artifact through it gives the schema and the rows that Parquet
+    * schema inference gives. */
+  def assertSidecarReads(spark: SparkSession,
+                         results: Map[String, Pipeline.StageResult]): Unit = {
+    import org.scalatest.Assertions._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.toString)
+    for (r <- results.values) {
+      assert(r.state == Pipeline.Computed, r.toString)
+      val sidecar = org.apache.spark.sql.types.DataType.fromJson(
+        Files.readString(java.nio.file.Paths.get(r.path, "_SCHEMA")))
+      val viaSidecar = Pipeline.readArtifact(spark, r.path)
+      val inferred = spark.read.parquet(r.path)
+      assert(sidecar.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+        .sameElements(inferred.schema.fieldNames), r.name)
+      assert(viaSidecar.schema == inferred.schema,
+        s"${r.name}: ${viaSidecar.schema.treeString} vs ${inferred.schema.treeString}")
+      assert(rows(viaSidecar) == rows(inferred), r.name)
+      assert(rows(viaSidecar).length == r.rows, r.name)
+    }
   }
 }
