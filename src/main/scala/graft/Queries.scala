@@ -701,9 +701,9 @@ object Queries {
   /** Core QC-report composition over pre-built streams — every stage
     * keyed by session (groupBys, SessionCalibrator cogroups,
     * ErrorMap.summaryBySession cogroup, left joins), so the session
-    * axis scales by ADDING PARTITIONS; `tools/Qc100x` stands exactly
-    * this lineage at 10⁴ planted sessions with the no-funnel plan laws
-    * asserted. Inputs: markers (session, timestamp, norm_x, norm_y,
+    * axis scales by ADDING PARTITIONS; gazebench's `fleet_qc` runs this
+    * lineage over planted sessions (its 10⁴-session standing is in
+    * docs/SCALE.md). Inputs: markers (session, timestamp, norm_x, norm_y,
     * marker_cluster_index), per-eye pupil streams (session, timestamp,
     * norm_x, norm_y, confidence), and the session universe (failed
     * sessions appear here with their products absent). */
@@ -4479,10 +4479,11 @@ object Queries {
 
   /** S4: .pldata (msgpack) + _timestamps.npy round-trip
     * (file_methods.py:133-193): events → PLData write (topic stream +
-    * sidecar) → distributed binaryFile scan + decode → rows. Exact:
-    * msgpack and npy both carry IEEE doubles losslessly. */
+    * sidecar) → `format("pldata")` scan with the schema INFERRED from the
+    * first record → rows. Exact: msgpack and npy both carry IEEE doubles
+    * losslessly. [[pldataV2Roundtrip]] reads the same fixture with an
+    * explicit catalog schema. */
   def pldataRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val tmp = fixtureTmp("graft_pldata")
     // bounded + bounded-job fixture write: range-partitioned 8-way sort
     // (see timestampScan) feeding PldataSource.write's toLocalIterator
@@ -4493,9 +4494,7 @@ object Queries {
       array(col("value") / 500.0, (col("user_id") % 20) / 20.0).as("norm_pos"),
       (col("value") / 1000.0).as("confidence"), col("event_id").as("id"))
     PldataSource.write(rows, tmp, "gaze")
-    PldataSource.read(s, tmp, "gaze", Seq(
-        "norm_pos" -> ArrayType(DoubleType), "confidence" -> DoubleType,
-        "id" -> LongType))
+    s.read.format("pldata").option("topic", "gaze").load(tmp)
       .select(col("id"), col("timestamp"),
         element_at(col("norm_pos"), 1).as("nx"),
         element_at(col("norm_pos"), 2).as("ny"), col("confidence"))
@@ -4505,9 +4504,8 @@ object Queries {
     * identical fixture and output to `s4_pldata_roundtrip`, read via
     * `spark.read.format("pldata")` with an explicit catalog schema —
     * the V2 scan prunes to the projected columns (plan-pinned by
-    * PldataV2Spec) and plans one partition per session file. Same
-    * oracle SQL as the programmatic path: the two readers share decode
-    * and conversion, so they cannot drift. */
+    * PldataV2Spec) and plans one partition per session file. The two
+    * rows pin the explicit and the inferred schema against one oracle. */
   def pldataV2Roundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val tmp = fixtureTmp("graft_pldata_v2")

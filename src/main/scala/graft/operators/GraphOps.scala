@@ -203,7 +203,7 @@ object GraphOps {
     * ((1−d)/n < 5·10⁻⁷ already at n > 300k rounds the teleport term to
     * ZERO) and quantization destroys the distribution. Corpus-scale
     * runs pass None — full fp precision, rank sum conserved to fp ulps
-    * (asserted by tools/Graph100x). */
+    * (the 900k-node standing in docs/SCALE.md). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85,
                quantize: Option[Int] = Some(6)): DataFrame = {

@@ -125,11 +125,4 @@ object Schemas {
     StructField("onset", DoubleType),
     StructField("offset", DoubleType),
     StructField("duration", DoubleType)))
-
-  /** A catalog schema → the `(name, type)` field list PldataSource.read
-    * expects (timestamp comes from the .npy sidecar, so it is excluded). */
-  def pldataFields(schema: StructType): Seq[(String, DataType)] =
-    schema.fields.toSeq.collect {
-      case f if f.name != "timestamp" && f.name != "topic" => (f.name, f.dataType)
-    }
 }

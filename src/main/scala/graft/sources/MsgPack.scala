@@ -15,16 +15,25 @@ object MsgPack {
 
   // ------------------------------------------------------------- decode
 
+  /** Deepest array/map nesting a [[Reader]] accepts. pldata records nest
+    * at most 4 deep (record pair → payload map → detector dict → array);
+    * the bound keeps a crafted stream of nested headers from recursing
+    * the decoder into a `StackOverflowError`, which `NonFatal` does not
+    * match. */
+  final val MaxDepth = 16
+
   final class Reader(buf: ByteBuffer) {
     def hasNext: Boolean = buf.hasRemaining
 
-    def unpack(): Any = {
+    def unpack(): Any = value(0)
+
+    private def value(depth: Int): Any = {
       val b = buf.get() & 0xff
       b match {
         case x if x <= 0x7f => x.toLong // positive fixint
         case x if x >= 0xe0 => (x - 256).toLong // negative fixint
-        case x if (x & 0xf0) == 0x80 => readMap(x & 0x0f) // fixmap
-        case x if (x & 0xf0) == 0x90 => readArray(x & 0x0f) // fixarray
+        case x if (x & 0xf0) == 0x80 => readMap(x & 0x0f, depth) // fixmap
+        case x if (x & 0xf0) == 0x90 => readArray(x & 0x0f, depth) // fixarray
         case x if (x & 0xe0) == 0xa0 => readStr(x & 0x1f) // fixstr
         case 0xc0 => null
         case 0xc2 => false
@@ -45,10 +54,10 @@ object MsgPack {
         case 0xd9 => readStr(buf.get() & 0xff)
         case 0xda => readStr(buf.getShort() & 0xffff)
         case 0xdb => readStr(buf.getInt())
-        case 0xdc => readArray(buf.getShort() & 0xffff)
-        case 0xdd => readArray(buf.getInt())
-        case 0xde => readMap(buf.getShort() & 0xffff)
-        case 0xdf => readMap(buf.getInt())
+        case 0xdc => readArray(buf.getShort() & 0xffff, depth)
+        case 0xdd => readArray(buf.getInt(), depth)
+        case 0xde => readMap(buf.getShort() & 0xffff, depth)
+        case 0xdf => readMap(buf.getInt(), depth)
         case other =>
           throw new IllegalArgumentException(f"unsupported msgpack byte 0x$other%02x")
       }
@@ -73,12 +82,26 @@ object MsgPack {
     private def readBin(n: Int): Array[Byte] = {
       val a = new Array[Byte](checkLen(n, "bin")); buf.get(a); a
     }
-    private def readArray(n: Int): Vector[Any] =
-      Vector.fill(checkLen(n, "array"))(unpack())
-    private def readMap(n: Int): Map[String, Any] =
+    private def nested(depth: Int): Int = {
+      if (depth >= MaxDepth)
+        throw new IllegalArgumentException(
+          s"msgpack nesting deeper than $MaxDepth before byte offset ${buf.position()}")
+      depth + 1
+    }
+    private def readArray(n: Int, depth: Int): Vector[Any] = {
+      val d = nested(depth)
+      Vector.fill(checkLen(n, "array"))(value(d))
+    }
+    private def readMap(n: Int, depth: Int): Map[String, Any] = {
+      val d = nested(depth)
       (0 until checkLen(n, "map")).map { _ =>
-        val k = unpack().toString; k -> unpack()
+        val at = buf.position()
+        val k = value(d)
+        if (k == null)
+          throw new IllegalArgumentException(s"msgpack nil map key at byte offset $at")
+        k.toString -> value(d)
       }.toMap
+    }
   }
 
   def reader(bytes: Array[Byte]): Reader =

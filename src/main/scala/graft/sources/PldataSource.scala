@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
   * (externals/file_methods.py:133-193, odometry.py:43-58) as a Spark
   * source/sink.
   *
-  * Read shape: `binaryFile` scan → per-file msgpack decode in
-  * mapPartitions → rows. Each file is one session-topic stream (MBs), so
-  * the distribution axis is files — exactly the engine's session
-  * partitioning. The .npy sidecar rides along by path convention.
+  * This object holds the `.npy` sidecar codec and the driver-side
+  * writer; reads go through `spark.read.format("pldata")`
+  * ([[PldataV2]]), which decodes one session-topic file per task.
   */
 object PldataSource {
 
@@ -102,85 +101,6 @@ object PldataSource {
       try raf.write(headerBytes(n)) finally raf.close()
       n
     }
-  }
-
-  /** Decode one pldata byte stream into (topic, payload-map) pairs. */
-  def decodeStream(bytes: Array[Byte]): Vector[(String, Map[String, Any])] =
-    MsgPack.unpackStream(bytes).map {
-      case Vector(topic: String, payload: Array[Byte]) =>
-        topic -> MsgPack.unpackStream(payload).head.asInstanceOf[Map[String, Any]]
-      case other =>
-        throw new IllegalArgumentException(s"bad pldata record: $other")
-    }
-
-  /** Read `<dir>/<topic>.pldata` (+ `<topic>_timestamps.npy`) into rows of
-    * the given projection. Fields are pulled from the payload dicts with
-    * the arraydict convention (missing → null); `timestamp` comes from the
-    * sidecar (position-aligned, the reference's zip).
-    *
-    * `fields` maps column name → Spark type (DoubleType,
-    * ArrayType(DoubleType), LongType, StringType supported).
-    */
-  def read(spark: SparkSession, dir: String, topic: String,
-           fields: Seq[(String, DataType)]): DataFrame = {
-    val schema = StructType(
-      StructField("topic", StringType) +:
-        StructField("timestamp", DoubleType) +:
-        fields.map { case (n, t) => StructField(n, t) })
-    // files are session-scoped (MBs): decode distributed, one task per file
-    val binDf = spark.read.format("binaryFile")
-      .load(s"$dir/$topic.pldata")
-      .select("path", "content")
-    val ts = readNpyDoubles(s"$dir/${topic}_timestamps.npy")
-    val tsB = spark.sparkContext.broadcast(ts)
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-    binDf.mapPartitions { it =>
-      it.flatMap { r =>
-        val recs = decodeStream(r.getAs[Array[Byte]]("content"))
-        // a short sidecar is corruption — fail loudly (the V2 reader's
-        // contract), never fabricate NaN rows that slide past filters
-        if (recs.length > tsB.value.length)
-          throw new java.io.IOException(
-            s"pldata sidecar misalignment in ${r.getAs[String]("path")}: " +
-              s"${recs.length} records but only ${tsB.value.length} timestamps")
-        recs.iterator.zipWithIndex.map { case ((top, payload), i) =>
-          Row.fromSeq(top +: tsB.value(i) +: fields.map { case (name, dt) =>
-            convert(payload.get(name).orNull, dt)
-          })
-        }
-      }
-    }
-  }
-
-  /** Read a topic with a [[graft.schemas.Schemas]] catalog StructType
-    * (timestamp supplied by the .npy sidecar). */
-  def readAs(spark: SparkSession, dir: String, topic: String,
-             schema: StructType): DataFrame =
-    read(spark, dir, topic, graft.schemas.Schemas.pldataFields(schema))
-
-  private[sources] def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (x: Long, DoubleType) => x.toDouble
-    case (x: Double, DoubleType) => x
-    case (x: Long, LongType) => x
-    case (x: Double, LongType) => x.toLong
-    case (x: Long, IntegerType) => x.toInt
-    case (x: String, StringType) => x
-    case (x: Vector[_], ArrayType(DoubleType, _)) =>
-      x.map {
-        case d: Double => d
-        case l: Long => l.toDouble
-        case other => Double.NaN
-      }
-    case (x: Vector[_], ArrayType(inner, _)) => x.map(convert(_, inner))
-    // nested detector dicts (e.g. the pupil `ellipse` struct)
-    case (x: Map[_, _], st: StructType) =>
-      val m = x.asInstanceOf[Map[String, Any]]
-      Row.fromSeq(st.fields.toSeq.map(f => convert(m.get(f.name).orNull, f.dataType)))
-    case (x, StringType) => String.valueOf(x)
-    case (x, _) =>
-      throw new IllegalArgumentException(s"cannot convert $x to $dt")
   }
 
   /** Write rows as a pldata stream + timestamp sidecar (PLData_Writer,

@@ -15,10 +15,10 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 front-end for the .pldata session store — the
-  * `spark.read.format("pldata")` surface over the same decode
-  * ([[PldataSource.decodeStream]]) and conversion rules the programmatic
-  * [[PldataSource.read]] uses, so the two paths cannot drift.
+/** DataSource V2 front-end for the .pldata session store — the one read
+  * path (`spark.read.format("pldata")`, batch and streaming) and the
+  * distributed sink. The msgpack record decode and the msgpack → Spark
+  * value conversion live here and nowhere else.
   *
   * ```
   * spark.read.format("pldata")
@@ -27,7 +27,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .load("/data/session_0001")
   * ```
   *
-  * What the V2 plumbing buys over the binaryFile+mapPartitions form:
+  * What the V2 plumbing buys over a `binaryFile` scan plus a decode in
+  * `mapPartitions`:
   *  - COLUMN PRUNING pushed into the reader
   *    ([[SupportsPushDownRequiredColumns]]): only requested fields are
   *    converted, and the `_timestamps.npy` sidecar is not even OPENED
@@ -60,6 +61,42 @@ class PldataV2 extends TableProvider with DataSourceRegister {
 }
 
 object PldataV2 {
+
+  /** Decode one pldata byte stream into (topic, payload-map) pairs. */
+  private def decodeStream(bytes: Array[Byte]): Vector[(String, Map[String, Any])] =
+    MsgPack.unpackStream(bytes).map {
+      case Vector(topic: String, payload: Array[Byte]) =>
+        topic -> MsgPack.unpackStream(payload).head.asInstanceOf[Map[String, Any]]
+      case other =>
+        throw new IllegalArgumentException(s"bad pldata record: $other")
+    }
+
+  /** Msgpack value → Spark value of `dt` (missing → null, the arraydict
+    * convention). */
+  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (x: Long, DoubleType) => x.toDouble
+    case (x: Double, DoubleType) => x
+    case (x: Long, LongType) => x
+    case (x: Double, LongType) => x.toLong
+    case (x: Long, IntegerType) => x.toInt
+    case (x: String, StringType) => x
+    case (x: Vector[_], ArrayType(DoubleType, _)) =>
+      x.map {
+        case d: Double => d
+        case l: Long => l.toDouble
+        case other => Double.NaN
+      }
+    case (x: Vector[_], ArrayType(inner, _)) => x.map(convert(_, inner))
+    // nested detector dicts (e.g. the pupil `ellipse` struct)
+    case (x: Map[_, _], st: StructType) =>
+      val m = x.asInstanceOf[Map[String, Any]]
+      org.apache.spark.sql.Row.fromSeq(
+        st.fields.toSeq.map(f => convert(m.get(f.name).orNull, f.dataType)))
+    case (x, StringType) => String.valueOf(x)
+    case (x, _) =>
+      throw new IllegalArgumentException(s"cannot convert $x to $dt")
+  }
 
   private def topicOf(options: Map[String, String]): String =
     options.getOrElse("topic",
@@ -156,7 +193,7 @@ object PldataV2 {
     val payload = decodeFirstRecord(first, bytes)
     // topic/timestamp are STRUCTURAL (record tag + sidecar clock); a
     // payload that also carries them — PLData_Writer payloads usually
-    // duplicate timestamp — must not shadow them (the pldataFields rule)
+    // duplicate timestamp — must not shadow them
     StructType(
       StructField("topic", StringType) +:
       StructField("timestamp", DoubleType) +:
@@ -464,7 +501,7 @@ object PldataV2 {
       if (!needTs) Array.empty
       else PldataSource.readNpyDoubles(
         file.stripSuffix(".pldata") + "_timestamps.npy")
-    private val recs = PldataSource.decodeStream(
+    private val recs = decodeStream(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
     // a sidecar SHORTER than the record stream is data corruption —
     // fabricating NaN timestamps for the overflow rows would slide
@@ -501,7 +538,7 @@ object PldataV2 {
           case "topic" => topic
           case "timestamp" => ts(i) // length checked at open
           case name =>
-            PldataSource.convert(payload.get(name).orNull, f.dataType)
+            convert(payload.get(name).orNull, f.dataType)
         }
       }
       toCatalyst(org.apache.spark.sql.Row.fromSeq(vals.toSeq))

@@ -3,14 +3,13 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The shared planted multi-session construction behind the 100×
-  * standings (`Sessions100x`, `Qc100x`): `nSessions` sessions, `per`
-  * samples each on the m9 5×5 marker-cluster grid, one marker per
-  * second, with deterministic sub-milli jitter and the known m9
-  * inverse affine for the eye streams — so every session's fitted
-  * model must reproduce the planted forward affine analytically. One
-  * source of truth: a change to the planted affine or jitter
-  * propagates to every standing tool instead of silently diverging. */
+/** The planted multi-session construction behind gazebench's `fleet_qc`
+  * workload: `nSessions` sessions, `per` samples each on the m9 5×5
+  * marker-cluster grid, one marker per second, with deterministic
+  * sub-milli jitter and the known m9 inverse affine for the eye streams
+  * — so every session's fitted model must reproduce the planted forward
+  * affine analytically ([[forwardAffine]], which `fleet_qc` verifies
+  * against). */
 object PlantedSessions {
 
   /** Base frame: session, k (seconds), cluster (0-24), rep (repeat

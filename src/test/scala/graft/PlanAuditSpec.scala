@@ -830,4 +830,47 @@ class PlanAuditSpec extends SparkSpec {
       s"vad RLE chain stopped reusing the media partitioning:\n$p")
     graft.CacheRegistry.releaseAll()
   }
+
+  /** Queries allowed a keyless logical `Window`, each with why its input
+    * stays bounded at any scale. */
+  val keylessWindowAllowed: Map[String, String] = Map(
+    "emb_cluster_mixture" ->
+      "mixtureTemperature's c_min window runs over one row per k-means cell",
+    "quality_classify_audit" ->
+      "cumulative windows over the round-6 score groups, at most 10^6+1 rows",
+    "retrieval_rrf" ->
+      "row_number over the two top-k lists, at most 20 rows each",
+    "sample_mixture" ->
+      "mixtureTemperature's c_min window runs over one row per language")
+
+  test("no query plans a keyless window outside the whitelist") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    def keylessIn(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)]): Seq[(String, Int)] =
+      qs.map { case (name, q) =>
+        name -> q(spark, dir).queryExecution.optimizedPlan
+          .collectWithSubqueries {
+            case w: LWindow if w.partitionSpec.isEmpty => w
+          }.length
+      }.filter(_._2 > 0)
+    // building a query runs its fixture and index jobs; the ANN/embedding
+    // family (its index artifacts live under per-query tagged paths)
+    // builds on a second thread to keep the lint under two minutes. Caches
+    // are released once at the end, so no thread unpersists what another
+    // thread's plan reads.
+    val t0 = System.nanoTime()
+    val (indexFamily, rest) = SparkEntry.queries.toSeq.sortBy(_._1)
+      .partition { case (n, _) => n.startsWith("ann_") || n.startsWith("emb_") }
+    val second = Future(keylessIn(indexFamily))(ExecutionContext.global)
+    val keyless = (keylessIn(rest) ++ Await.result(second, Duration.Inf)).toMap
+    graft.CacheRegistry.releaseAll()
+    info(f"${SparkEntry.queries.size} query plans built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val offenders = keyless.keySet -- keylessWindowAllowed.keySet
+    assert(offenders.isEmpty, "keyless window(s) — single-partition stage: " +
+      offenders.toSeq.sorted.map(q => s"$q (${keyless(q)})").mkString(", "))
+    val stale = keylessWindowAllowed.keySet -- keyless.keySet
+    assert(stale.isEmpty, s"whitelisted queries with no keyless window: $stale")
+  }
 }

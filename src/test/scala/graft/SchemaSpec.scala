@@ -56,7 +56,8 @@ class SchemaSpec extends SparkSpec {
       .withColumn("ellipse", col("ellipse").cast(Schemas.ellipse))
       .withColumn("topic", lit("pupil"))
     graft.sources.PldataSource.write(df, dir, "pupil")
-    val back = graft.sources.PldataSource.readAs(spark, dir, "pupil", Schemas.pupil)
+    val back = spark.read.format("pldata").option("topic", "pupil")
+      .schema(Schemas.pupil).load(dir)
     assert(back.schema("ellipse").dataType == Schemas.ellipse)
     val got = back.orderBy("timestamp").collect()
     assert(got.length == 2)

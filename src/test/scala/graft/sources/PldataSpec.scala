@@ -94,10 +94,14 @@ class PldataSpec extends SparkSpec {
       (0.3, 0.7, Seq(0.6, 0.7), 0L))
       .toDF("timestamp", "confidence", "norm_pos", "id")
     PldataSource.write(df, dir, "pupil")
-    val back = PldataSource.read(spark, dir, "pupil", Seq(
-      "confidence" -> DoubleType,
-      "norm_pos" -> ArrayType(DoubleType),
-      "id" -> LongType))
+    def read(fields: StructField*) = spark.read.format("pldata")
+      .option("topic", "pupil")
+      .schema(StructType(StructField("topic", StringType) +:
+        StructField("timestamp", DoubleType) +: fields))
+      .load(dir)
+    val back = read(StructField("confidence", DoubleType),
+      StructField("norm_pos", ArrayType(DoubleType)),
+      StructField("id", LongType))
     assert(back.count() == 3)
     val r = back.orderBy("timestamp").collect()
     assert(r(0).getAs[String]("topic") == "pupil")
@@ -106,8 +110,8 @@ class PldataSpec extends SparkSpec {
       Seq(0.4, 0.5))
     assert(r(2).getAs[Long]("id") == 0L)
     // missing field → null column
-    val withMissing = PldataSource.read(spark, dir, "pupil", Seq(
-      "confidence" -> DoubleType, "nope" -> DoubleType))
+    val withMissing = read(StructField("confidence", DoubleType),
+      StructField("nope", DoubleType))
     assert(withMissing.filter(col("nope").isNull).count() == 3)
   }
 
