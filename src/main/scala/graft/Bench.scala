@@ -174,11 +174,18 @@ object Bench {
     def drain(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
 
+    // a failed run is timed as -1; stderr names its innermost cause
+    def failed(phase: String, name: String, e: Throwable): Boolean = {
+      System.err.println(
+        s"[bench] $phase $name failed: ${pipeline.Pipeline.rootCause(e)}")
+      false
+    }
+
     // warmup: exercise scan/join/window/agg codegen paths on the tiny sf
     val warmDir = "/root/testdata/sf0.001"
     Seq("join_agg_revenue", "w2_sessionize", "j2_asof_nearest")
       .foreach(q => try drain(SparkEntry.queries(q)(spark, warmDir))
-      catch { case NonFatal(_) => () })
+      catch { case NonFatal(e) => failed("warmup", q, e) })
 
     // dev-only subset filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 (driver runs unset)
     val only: Option[Set[String]] =
@@ -201,7 +208,7 @@ object Bench {
           val ok = try {
             fn(spark, calibrationSf).write.mode("overwrite")
               .format("noop").save(); true
-          } catch { case NonFatal(_) => false }
+          } catch { case NonFatal(e) => failed("calibration", name, e) }
           CacheRegistry.releaseAll()
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
@@ -219,7 +226,7 @@ object Bench {
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try { drain(fn(spark, sfDir)); true }
-      catch { case NonFatal(_) => false }
+      catch { case NonFatal(e) => failed("query", name, e) }
       val dt = (System.nanoTime() - t0) / 1e9
       // between queries: operator-scoped caches from this query must not
       // occupy storage while the next one is measured
@@ -300,7 +307,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try {
           drain(SparkEntry.queries(name)(spark, calibrationSf)); true
-        } catch { case NonFatal(_) => false }
+        } catch { case NonFatal(e) => failed("deep probe", name, e) }
         CacheRegistry.releaseAll()
         val t = (System.nanoTime() - t0) / 1e9
         calibrationRef.toMap.get(name).filter(_ => ok).map(t / _)

@@ -48,7 +48,7 @@ object Oracles {
 
   /** Shared MinHash CTE chain (shingles → 60-bit hash arrays → 16-hash
     * signatures → 4 LSH bands, hot buckets capped) — mirrors
-    * TextOps.minhashSignature/lshBands + the default-on capBuckets skew
+    * TextHash.minhash_sig/TextOps.lshBands + the default-on capBuckets skew
     * lever; prefix for both the LSH-candidate and the gated-exact-Jaccard
     * oracles. */
   private def minhashBandCtes: String = minhashBandCtesK(3)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * any corpus size, so AQE collapses it to one or a few partitions and
   * the kernel chain downstream serializes onto one task (measured on
   * this engine: the blink-video render 10 s vs 0.8 s at sf0.1, and
-  * TextOps.shingled observed running at ONE partition — immaterial at
+  * a doc-shingle pass observed running at ONE partition — immaterial at
   * local bench scale where a single task absorbs 5k docs, fatal on a
   * 1000-executor cluster where the same shape parks the corpus-wide
   * shingle pass on one core per 64 MB of key bytes). An explicit user

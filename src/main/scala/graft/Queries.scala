@@ -54,6 +54,38 @@ object Queries {
     java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(privateIndexBase), tag).toString
 
+  private val indexLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Build-once memo for a derived index artifact: the directory
+    * `graft_<name>_<tag>` under [[privateIndexBase]] is keyed by the MD5
+    * of `key` (the input dir plus every parameter the artifact depends
+    * on, so a parameter change never reuses a stale index), and `build`
+    * runs at most once per JVM per key. A `_BUILT` marker written after
+    * `build` returns is what makes the directory reusable: a build that
+    * throws part-way — a multi-step chain whose first step already wrote
+    * `index/` — leaves no marker, so the next call clears the directory
+    * (and any swap leftovers beside it) and builds again instead of
+    * serving the partial artifact. Returns the artifact path. */
+  private[graft] def memoIndex(s: SparkSession, name: String, key: String)(
+      build: String => Unit): String = {
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8"))
+      .take(6).map("%02x".format(_)).mkString
+    val path = s"$privateIndexBase/graft_${name}_$tag"
+    val marker = new java.io.File(path, "_BUILT")
+    indexLocks.computeIfAbsent(path, _ => new Object).synchronized {
+      if (!marker.exists()) {
+        Seq(path, s"${path}_next", s"${path}_prev")
+          .foreach(operators.ArtifactSwap.clearStale(s, _))
+        build(path)
+        java.nio.file.Files.createDirectories(marker.toPath.getParent)
+        java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
+      }
+    }
+    path
+  }
+
 
   /** Partition count for driver-side fixture exports (s2/s4/s5): sorted
     * output goes through `repartitionByRange(n) + sortWithinPartitions`
@@ -2637,15 +2669,12 @@ object Queries {
     * explicit forms. */
   def annIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    // the tag keys the cached artifact by input AND quantizer arity, so a
-    // parameter change can never silently reuse a stale index
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|nCells=$annIvfPqCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_idx_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists())
-      operators.AnnIndexIO.buildAuto(emb, "vec_id", "embedding", idxPath,
+    // the memo key covers input AND quantizer arity, so a parameter
+    // change can never silently reuse a stale index
+    val idxPath = memoIndex(s, "ann_idx", s"$dir|nCells=$annIvfPqCells") { p =>
+      operators.AnnIndexIO.buildAuto(emb, "vec_id", "embedding", p,
         nCells = annIvfPqCells)
+    }
     operators.AnnIndexIO.searchAuto(s, idxPath, emb, "vec_id", "embedding",
         col("v_id") < 10, k = 3, nprobe = annIvfPqNprobe,
         rerank = annIvfPqRerank)
@@ -2666,14 +2695,11 @@ object Queries {
   def annIndexAppend(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val isNew = col("vec_id") % 5 === 4
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|append|nCells=$annIvfPqCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_app_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists()) {
+    val idxPath = memoIndex(s, "ann_app",
+        s"$dir|append|nCells=$annIvfPqCells") { p =>
       operators.AnnIndexIO.buildAuto(emb.filter(!isNew), "vec_id",
-        "embedding", idxPath, nCells = annIvfPqCells)
-      operators.AnnIndexIO.appendAuto(s, idxPath, emb.filter(isNew),
+        "embedding", p, nCells = annIvfPqCells)
+      operators.AnnIndexIO.appendAuto(s, p, emb.filter(isNew),
         "vec_id", "embedding")
     }
     operators.AnnIndexIO.searchAuto(s, idxPath, emb, "vec_id", "embedding",
@@ -2697,19 +2723,16 @@ object Queries {
   def annIndexCompact(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val isNew = col("vec_id") % 5 === 4
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|compact|nCells=$annIvfPqCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_cpt_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists()) {
+    val idxPath = memoIndex(s, "ann_cpt",
+        s"$dir|compact|nCells=$annIvfPqCells") { p =>
       operators.AnnIndexIO.buildAuto(emb.filter(!isNew), "vec_id",
-        "embedding", idxPath, nCells = annIvfPqCells)
+        "embedding", p, nCells = annIvfPqCells)
       (0 until 3).foreach { slice =>
-        operators.AnnIndexIO.appendAuto(s, idxPath,
+        operators.AnnIndexIO.appendAuto(s, p,
           emb.filter(isNew && col("vec_id") % 3 === slice),
           "vec_id", "embedding")
       }
-      operators.AnnIndexIO.compact(s, idxPath)
+      operators.AnnIndexIO.compact(s, p)
     }
     operators.AnnIndexIO.searchAuto(s, idxPath, emb, "vec_id", "embedding",
         col("v_id") < 10, k = 3, nprobe = annIvfPqNprobe,
@@ -2735,16 +2758,13 @@ object Queries {
   def annIndexRetrain(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val isNew = col("vec_id") % 5 === 4
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|retrain|nCells=$annIvfPqCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_rt_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists()) {
+    val idxPath = memoIndex(s, "ann_rt",
+        s"$dir|retrain|nCells=$annIvfPqCells") { p =>
       operators.AnnIndexIO.buildAuto(emb.filter(!isNew), "vec_id",
-        "embedding", idxPath, nCells = annIvfPqCells)
-      operators.AnnIndexIO.appendAuto(s, idxPath, emb.filter(isNew),
+        "embedding", p, nCells = annIvfPqCells)
+      operators.AnnIndexIO.appendAuto(s, p, emb.filter(isNew),
         "vec_id", "embedding")
-      operators.AnnIndexIO.retrain(emb, "vec_id", "embedding", idxPath)
+      operators.AnnIndexIO.retrain(emb, "vec_id", "embedding", p)
     }
     operators.AnnIndexIO.searchAuto(s, idxPath, emb, "vec_id", "embedding",
         col("v_id") < 10, k = 3, nprobe = annIvfPqNprobe,
@@ -2753,7 +2773,7 @@ object Queries {
         (round(col("sim"), 6) + 0.0).as("sim"))
   }
 
-  /** OPQ REBUILD — the maintenance valve for the two index kinds
+  /** OPQ REBUILD — the maintenance valve for the OPQ×IVF index kind
     * [[operators.AnnIndexIO.retrain]] rightly refuses (r14 verdict
     * missing #2: the OPQ families had a drift gauge but no action): the
     * quantizer — rotation, codebooks, coarse cells — is fitted on the
@@ -2767,21 +2787,18 @@ object Queries {
     * [[operators.AnnIndexIO.buildOpqIvf]] over everything (the
     * deterministic sample makes the Procrustes fit replayable), or the
     * shared hash breaks. With `ann_index_retrain` this puts a hash-pinned
-    * retrain valve on ALL FOUR persisted index families. */
+    * retrain valve on every persisted index family. */
   def annIndexRebuildOpq(s: SparkSession, dir: String): DataFrame = {
     val planted = Tables.embeddings(s, dir)
       .select(col("vec_id"), opqIvfPlanted(col("vec_id")).as("pv"))
     val n = planted.count()
     val rerank = math.max(20L, (n + annOpqIvfCells - 1) / annOpqIvfCells).toInt
     val isNew = col("vec_id") % 5 === 4
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|rebuild_opq|nCells=$annOpqIvfCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_rbo_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists()) {
+    val idxPath = memoIndex(s, "ann_rbo",
+        s"$dir|rebuild_opq|nCells=$annOpqIvfCells") { p =>
       operators.AnnIndexIO.buildOpqIvf(planted.filter(!isNew), "vec_id",
-        "pv", idxPath, nCells = annOpqIvfCells)
-      operators.AnnIndexIO.rebuildOpq(planted, "vec_id", "pv", idxPath)
+        "pv", p, nCells = annOpqIvfCells)
+      operators.AnnIndexIO.rebuildOpq(planted, "vec_id", "pv", p)
     }
     operators.AnnIndexIO.searchOpqIvf(s, idxPath, planted, "vec_id", "pv",
         col("v_id") < 10, k = 3, nprobe = annOpqIvfNprobe,
@@ -2861,8 +2878,7 @@ object Queries {
     * ([[operators.AnnIndexIO.buildOpqIvf]]/[[operators.AnnIndexIO
     * .searchOpqIvf]]): the learned rotation as a pre-transform over the
     * cell-partitioned flat layout, so OPQ's accuracy rides the
-    * probe-pruned regime (the plain [[operators.AnnIndexIO.buildOpq]]
-    * tier scans every code). The OPQ rotation fit (alternating
+    * probe-pruned regime. The OPQ rotation fit (alternating
     * Procrustes SVD) cannot be replayed in SQL, so the oracle is the
     * PLANTED-RECALL kind (the m9 discipline): the fixture guarantees
     * the composed search returns the exact brute-force top-3 — own cell
@@ -2883,13 +2899,11 @@ object Queries {
     // a true top-3 neighbor at the approximate stage. One count() job.
     val n = planted.count()
     val rerank = math.max(20L, (n + annOpqIvfCells - 1) / annOpqIvfCells).toInt
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|opq_ivf|nCells=$annOpqIvfCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_opqivf_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists())
-      operators.AnnIndexIO.buildOpqIvf(planted, "vec_id", "pv", idxPath,
+    val idxPath = memoIndex(s, "ann_opqivf",
+        s"$dir|opq_ivf|nCells=$annOpqIvfCells") { p =>
+      operators.AnnIndexIO.buildOpqIvf(planted, "vec_id", "pv", p,
         nCells = annOpqIvfCells)
+    }
     operators.AnnIndexIO.searchOpqIvf(s, idxPath, planted, "vec_id", "pv",
         col("v_id") < 10, k = 3, nprobe = annOpqIvfNprobe,
         rerank = rerank)
@@ -2940,13 +2954,10 @@ object Queries {
       "index-fed arity must match the inline/oracle form")
     val emb = Tables.embeddings(s, dir)
     val nCells = annIvfPqHierK1 * annIvfPqHierK2
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|nCells=$nCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_idx_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists())
-      operators.AnnIndexIO.buildAuto(emb, "vec_id", "embedding", idxPath,
+    val idxPath = memoIndex(s, "ann_idx", s"$dir|nCells=$nCells") { p =>
+      operators.AnnIndexIO.buildAuto(emb, "vec_id", "embedding", p,
         nCells = nCells)
+    }
     operators.AnnIndexIO.searchAuto(s, idxPath, emb, "vec_id", "embedding",
         col("v_id") < 10, k = 3, nprobe = annIvfPqHierNprobe,
         rerank = annIvfPqHierRerank,
@@ -3041,13 +3052,11 @@ object Queries {
       VectorOps.bruteTopK(emb.filter(col("vec_id") < 10), emb,
           "vec_id", "embedding", annRecallK)
         .select(col("q_id"), col("n_id")))
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|opq_real|nCells=$annOpqRealCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_opqreal_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists())
-      operators.AnnIndexIO.buildOpqIvf(emb, "vec_id", "embedding", idxPath,
+    val idxPath = memoIndex(s, "ann_opqreal",
+        s"$dir|opq_real|nCells=$annOpqRealCells") { p =>
+      operators.AnnIndexIO.buildOpqIvf(emb, "vec_id", "embedding", p,
         nCells = annOpqRealCells)
+    }
     val approx = operators.AnnIndexIO.searchOpqIvf(s, idxPath, emb,
       "vec_id", "embedding", col("v_id") < 10, k = annRecallK,
       nprobe = annOpqRealNprobe, rerank = annOpqRealRerank)
@@ -3058,9 +3067,9 @@ object Queries {
   }
 
   /** OPQ INCREMENTAL APPEND ([[operators.AnnIndexIO.appendOpq]]) — the
-    * admission path for the two families [[operators.AnnIndexIO
-    * .appendAuto]] refuses, closing the last lifecycle asymmetry (all
-    * four persisted kinds now build → append → monitor → maintain): the
+    * admission path for the OPQ×IVF family [[operators.AnnIndexIO
+    * .appendAuto]] refuses, closing the last lifecycle asymmetry (every
+    * persisted kind builds → appends → is monitored → is maintained): the
     * rotation/codebooks/coarse quantizer are FROZEN on the snapshot
     * (vec_id % 5 ≠ 4), the new batch is admitted through them (encode +
     * cell-partitioned append, no refit, no rewrite), and the search runs
@@ -3080,14 +3089,11 @@ object Queries {
       VectorOps.bruteTopK(emb.filter(col("vec_id") < 10), emb,
           "vec_id", "embedding", annRecallK)
         .select(col("q_id"), col("n_id")))
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|opq_append|nCells=$annOpqRealCells".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_ann_opqapp_$tag"
-    if (!new java.io.File(s"$idxPath/index").exists()) {
+    val idxPath = memoIndex(s, "ann_opqapp",
+        s"$dir|opq_append|nCells=$annOpqRealCells") { p =>
       operators.AnnIndexIO.buildOpqIvf(emb.filter(!isNew), "vec_id",
-        "embedding", idxPath, nCells = annOpqRealCells)
-      operators.AnnIndexIO.appendOpq(s, idxPath, emb.filter(isNew),
+        "embedding", p, nCells = annOpqRealCells)
+      operators.AnnIndexIO.appendOpq(s, p, emb.filter(isNew),
         "vec_id", "embedding")
     }
     val approx = operators.AnnIndexIO.searchOpqIvf(s, idxPath, emb,
@@ -3371,12 +3377,9 @@ object Queries {
     * the hash. */
   def textPhraseSearch(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|postings".getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val idxPath = s"${Queries.privateIndexBase}/graft_postings_$tag"
-    if (!new java.io.File(s"$idxPath/_SUCCESS").exists())
-      TextOps.buildPostings(docs, "doc_id", "text", idxPath)
+    val idxPath = memoIndex(s, "postings", s"$dir|postings") { p =>
+      TextOps.buildPostings(docs, "doc_id", "text", p)
+    }
     def hits(phrase: Seq[String]): DataFrame =
       TextOps.phraseSearch(s, idxPath, phrase)
         .groupBy(col("doc"))
@@ -3822,7 +3825,7 @@ object Queries {
     * marker_detection.py:33-47) — planted scenes carry 1-2 markers at
     * separated centers; the detector labels connected components and
     * groups rings into markers by recovered center
-    * ([[graft.multimodal.VisionOps.concentricMarkers]]), emitting a
+    * ([[graft.multimodal.VisionOps.concentricMarkersTyped]]), emitting a
     * frame-local ordered marker index. Oracle: per-marker ring replay +
     * a window for the index. */
   def cvMultiMarkers(s: SparkSession, dir: String): DataFrame = {

@@ -68,7 +68,8 @@ object Verify {
         }
       }
       catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[verify] $name failed: ${pipeline.Pipeline.rootCause(e)}")
       }
       // operator-scoped caches die with their query (SCALE.md pitfall 4)
       CacheRegistry.releaseAll()

@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Merge-table BPE tokenization (native kernel).
@@ -89,17 +88,6 @@ object BpeMerge {
     toks.toArray
   }
 
-  /** Shared eval: pre-tokenize, merge each word, collect the results
-    * (plain loop — a matcher-driven Iterator would side-effect `find()`
-    * inside hasNext, which breaks under double-hasNext callers). */
-  private def tokenize(text: String, pattern: java.util.regex.Pattern,
-                       ranks: java.util.HashMap[String, Integer]): Array[String] = {
-    val m = pattern.matcher(text)
-    val out = Array.newBuilder[String]
-    while (m.find()) out ++= mergeWord(m.group(), ranks)
-    out.result()
-  }
-
   /** Exact merge-table BPE token count of a string column. */
   case class BpeMergeCount(child: Expression, merges: Seq[(String, String)],
                            pattern: String)
@@ -129,39 +117,7 @@ object BpeMerge {
       copy(child = c)
   }
 
-  /** The merged token sequence itself (debug / downstream vocab joins). */
-  case class BpeMergeTokens(child: Expression, merges: Seq[(String, String)],
-                            pattern: String)
-      extends UnaryExpression with CodegenFallback {
-
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-    override def checkInputDataTypes():
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      if (child.dataType == StringType)
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"bpe_merge_tokens needs a string arg, got ${child.dataType.simpleString}")
-
-    @transient private lazy val ranks = ranksOf(merges)
-    @transient private lazy val re = java.util.regex.Pattern.compile(pattern)
-
-    override def nullSafeEval(input: Any): Any = {
-      val text = input.asInstanceOf[UTF8String].toString
-      val out: Array[AnyRef] = tokenize(text, re, ranks)
-        .map(t => UTF8String.fromString(t).asInstanceOf[AnyRef])
-      new GenericArrayData(out)
-    }
-
-    override protected def withNewChildInternal(c: Expression): BpeMergeTokens =
-      copy(child = c)
-  }
-
   def bpe_merge_count(text: Column, merges: Seq[(String, String)],
                       pattern: String): Column =
     Bridge.column(BpeMergeCount(Bridge.expression(text), merges, pattern))
-
-  def bpe_merge_tokens(text: Column, merges: Seq[(String, String)],
-                       pattern: String): Column =
-    Bridge.column(BpeMergeTokens(Bridge.expression(text), merges, pattern))
 }

@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * String.trim for ASCII); shingles joined with one space, first-occurrence
   * distinct; hash = first 15 lowercase-hex chars of md5(UTF-8 bytes)
   * parsed base-16 (60 bits, always non-negative) mod M; minhash_i =
-  * min over shingles of (h·a_i + b_i) mod M — identical to
-  * TextOps.hash60 / minhashSignature.
+  * min over shingles of (h·a_i + b_i) mod M — identical to the
+  * declarative TextOps.shingles → TextOps.hash60 chain.
   */
 object TextHash {
 

@@ -119,7 +119,7 @@ object AudioOps {
       org.apache.spark.sql.Encoders.row(outSchema)
     import org.apache.spark.sql.functions.col
     // pre-render repartition: same single-file-parallelism rationale as
-    // VisionFixtures.plantMedia / TextOps.shingled — and the same
+    // VisionFixtures.plantMedia / graft.Par — and the same
     // EXPLICIT arity, because AQE coalesces a keys-only exchange to one
     // partition and would serialize the WAV render onto one task
     df.select(col(idCol).cast("long"))
@@ -226,64 +226,6 @@ object AudioOps {
         Window.partitionBy("media_id").orderBy("start_win")))
       .select(col("media_id"), col("seg_id"), col("start_win"),
         col("end_win"), col("n_win"), col("energy"))
-  }
-
-  /** ROW-LOCAL twin of [[vadSegments]]: a clip is self-contained, so
-    * the threshold + run-length merge can run INSIDE the decode kernel
-    * and emit segment rows directly — no exchange at all, and therefore
-    * stream-legal in append mode with zero state stores (non-time
-    * window functions are not available on streams; this is the
-    * at-ingest shape). Bit-identical to the declarative form
-    * (spec-pinned): same windows, same integer compares, same
-    * renumbering by start window. Prefer the declarative form when the
-    * windows are already a table; prefer this one at ingest. */
-  def vadSegmentsInline(media: DataFrame, win: Int = 160,
-                        threshold: Long = 5000000000L): DataFrame = {
-    require(win >= 1, s"window must be >= 1, got $win")
-    val idIdx = media.schema.fieldIndex("media_id")
-    val bIdx = media.schema.fieldIndex("bytes")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("seg_id", IntegerType),
-      StructField("start_win", IntegerType),
-      StructField("end_win", IntegerType),
-      StructField("n_win", LongType),
-      StructField("energy", LongType)))
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    media.mapPartitions { it =>
-      it.flatMap { r =>
-        decodeWav(r.getAs[Array[Byte]](bIdx)).iterator.flatMap { w =>
-          val id = r.getLong(idIdx)
-          val n = w.samples.length
-          val nWin = (n + win - 1) / win
-          val segs = Vector.newBuilder[Row]
-          var segId = 0
-          var start = -1; var count = 0L; var acc = 0L
-          var wi = 0
-          while (wi < nWin) {
-            var e = 0L
-            var i = wi * win
-            val end = math.min(i + win, n)
-            while (i < end) { val s = w.samples(i); e += s.toLong * s; i += 1 }
-            if (e >= threshold) {
-              if (start < 0) { start = wi; count = 0L; acc = 0L }
-              count += 1; acc += e
-            } else if (start >= 0) {
-              segId += 1
-              segs += Row(id, segId, start, wi - 1, count, acc)
-              start = -1
-            }
-            wi += 1
-          }
-          if (start >= 0) {
-            segId += 1
-            segs += Row(id, segId, start, nWin - 1, count, acc)
-          }
-          segs.result()
-        }
-      }
-    }
   }
 
   /** Per-clip features from exact integer samples:

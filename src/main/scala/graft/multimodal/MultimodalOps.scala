@@ -893,25 +893,6 @@ object MultimodalOps {
     }
   }
 
-  /** Frame sampling: fan each media row out to every `stride`-th frame
-    * index (0..n_frames) — the S1 "frame-range batch" shape, rows stay
-    * partition-local until a downstream shuffle asks otherwise. */
-  def sampleFrames(media: DataFrame, stride: Int): DataFrame =
-    media.select(col("media_id"), col("meta"),
-      explode(sequence(lit(0),
-        greatest(col("meta.n_frames") - 1, lit(0)), lit(stride)))
-        .as("frame_index"))
-
-  /** Resize: metadata-only transform (dims update is the contract
-    * downstream operators read). For image formats [[resizeHalf]] is the
-    * REAL pixel path. */
-  def resizeMeta(media: DataFrame, scale: Double): DataFrame =
-    media.withColumn("meta", struct(
-      col("meta.format").as("format"),
-      (col("meta.width") * scale).cast("int").as("width"),
-      (col("meta.height") * scale).cast("int").as("height"),
-      col("meta.n_frames").as("n_frames")))
-
   /** REAL 2× downsample of decodable images: decode through the JDK
     * codec, AREA-AVERAGE each 2×2 luma block (the antialias-correct
     * pyramid step; block mean of ≤255 ints is exact in doubles — sums

@@ -438,7 +438,7 @@ object VisionFixtures {
     // repartition BEFORE the render/decode/detect lineage: media corpora
     // often arrive as few large files, and the whole per-row kernel chain
     // would otherwise inherit single-file parallelism (same rationale as
-    // TextOps.shingled). The exchange moves only the tiny id column —
+    // graft.Par). The exchange moves only the tiny id column —
     // which is exactly why the partition count must be EXPLICIT: AQE
     // sizes coalescing by shuffled BYTES, so a keys-only exchange
     // collapses to one partition and the heavy per-row kernels downstream

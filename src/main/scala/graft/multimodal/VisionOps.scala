@@ -388,20 +388,6 @@ object VisionOps {
     rings
   }
 
-  /** MULTI-marker concentric-circle detection — the reference's true
-    * output shape: `find_pupil_circle_marker` returns a LIST of markers
-    * per frame (world_circles, marker_detection.py:33-47), each an
-    * ellipse cluster. Here: binarize → 4-connected component labeling
-    * (each ring is its own component) → group components into markers by
-    * their rounded centroids (every ring of a concentric marker has the
-    * SAME center; for symmetric rings the centroid recovers it exactly,
-    * so integer rounding is a safe group key at ≥ 2 px marker
-    * separation) → per marker the [[CircleMarker]] statistics. Emitted
-    * sorted by (locX, locY) with a frame-local marker index — no shuffle
-    * needed for a deterministic order. */
-  def concentricMarkers(g: Gray, thresh: Double = DarkThreshold): Seq[CircleMarker] =
-    concentricMarkersTyped(g, inverted = false, thresh).map(_.marker)
-
   /** Ref/Stop-classified marker (r5): the reference classifies each
     * concentric marker by ring-vs-dot brightness — dark rings around a
     * light center are calibration "Ref" markers, the inverted polarity is
@@ -454,9 +440,21 @@ object VisionOps {
     (label, next)
   }
 
-  /** [[concentricMarkers]] + the Ref/Stop classification. `inverted`
-    * says the plane was contrast-inverted BEFORE detection (the C7 arm),
-    * so original gray = 255 − plane value for the luma statistics. */
+  /** MULTI-marker concentric-circle detection with the Ref/Stop
+    * classification — the reference's true output shape:
+    * `find_pupil_circle_marker` returns a LIST of markers per frame
+    * (world_circles, marker_detection.py:33-47), each an ellipse
+    * cluster. Here: binarize → 4-connected component labeling (each ring
+    * is its own component) → group components into markers by their
+    * rounded centroids (every ring of a concentric marker has the SAME
+    * center; for symmetric rings the centroid recovers it exactly, so
+    * integer rounding is a safe group key at ≥ 2 px marker separation)
+    * → per marker the [[CircleMarker]] statistics plus [[TypedMarker]]'s
+    * ring/dot luma and type. Emitted sorted by (locX, locY) with a
+    * frame-local marker index — no shuffle needed for a deterministic
+    * order. `inverted` says the plane was contrast-inverted BEFORE
+    * detection (the C7 arm), so original gray = 255 − plane value for
+    * the luma statistics. */
   def concentricMarkersTyped(g: Gray, inverted: Boolean,
                              thresh: Double = DarkThreshold): Seq[TypedMarker] = {
     val n = g.w * g.h

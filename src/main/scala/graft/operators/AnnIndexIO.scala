@@ -72,13 +72,12 @@ object AnnIndexIO {
   /** Requested-configuration sidecar (`path/_CONF`, space-separated
     * ASCII integers; the kind comes from `_KIND`, never repeated here —
     * flat: "nCells m codebookK"; hier: "k1 k2 m codebookK";
-    * opq: "m codebookK altIters"; opq_ivf: "nCells m codebookK
-    * altIters"), written at build time so maintenance ([[retrain]],
+    * opq_ivf: "nCells m codebookK altIters"), written at build time so maintenance ([[retrain]],
     * [[rebuildOpq]]) preserves the operating point the caller REQUESTED
     * rather than re-deriving it from fitted rows — fitted arity can
     * silently narrow on sample-bounded builds (a hier child list is
     * ragged when few sample points land in a super), and the OPQ
-    * families' `altIters` leaves no trace in the artifact at all.
+    * family's `altIters` leaves no trace in the artifact at all.
     * Pre-sidecar (or unparseable) artifacts fall back to the fitted-row
     * derivation in [[persistedConfig]]/[[derivedBookConf]]. */
   private def confPath(path: String) =
@@ -103,7 +102,7 @@ object AnnIndexIO {
     }
 
   /** Fitted-row derivation of (nCells-if-coarse, m, codebookK) for the
-    * OPQ families — the pre-sidecar fallback [[rebuildOpq]] uses so a
+    * OPQ×IVF family — the pre-sidecar fallback [[rebuildOpq]] uses so a
     * rebuild never silently changes an artifact's operating point to
     * compile-time defaults (only `altIters` is genuinely untraceable
     * from fitted rows). One model-sized driver collect, the
@@ -150,9 +149,6 @@ object AnnIndexIO {
     modelToDF(spark, model).write.mode("overwrite")
       .parquet(s"$path/quantizer")
 
-  def loadModel(spark: SparkSession, path: String): VectorOps.IvfPqModel =
-    modelFromDF(spark.read.parquet(s"$path/quantizer"))
-
   /** Build the index: fit the quantizer on a deterministic corpus sample,
     * persist it, and write the encoded `(v_id, cid, codes)` table
     * cell-partitioned. One full pass over the corpus; returns the fitted
@@ -170,27 +166,6 @@ object AnnIndexIO {
         writeConf(vecs.sparkSession, path, Seq(nCells, m, codebookK))
         model
       }
-
-  /** Load the persisted (quantizer, index-table) pair. Heals a
-    * stranded-prev crash state first ([[retrain]]/[[rebuildOpq]] swap
-    * the WHOLE artifact dir, so their crash window leaves `path` absent
-    * with the old generation under `_prev`) — a serving read during the
-    * window must see the retired generation, not a missing-path error. */
-  def load(spark: SparkSession, path: String): (VectorOps.IvfPqModel, DataFrame) = {
-    recoverRoots(spark, path)
-    (loadModel(spark, path), spark.read.parquet(s"$path/index"))
-  }
-
-  /** Search a prebuilt index: bit-identical to the inline
-    * [[VectorOps.ivfPqTopK]] on the same corpus (spec-proven), minus the
-    * refit and the corpus re-encode. */
-  def search(spark: SparkSession, path: String, corpus: DataFrame,
-             idCol: String, vecCol: String, queryPred: Column, k: Int,
-             nprobe: Int = 4, rerank: Int = 100): DataFrame = {
-    val (model, index) = load(spark, path)
-    VectorOps.ivfPqSearch(model, index, corpus, idCol, vecCol, queryPred,
-      k, nprobe, rerank)
-  }
 
   // -------------------------------------------- two-level (hier) layout
 
@@ -301,104 +276,6 @@ object AnnIndexIO {
     }
   }
 
-  /** Search a prebuilt hier index — bit-identical to the inline
-    * [[VectorOps.ivfPqHierTopK]] on the same corpus (spec-proven). */
-  def searchHier(spark: SparkSession, path: String, corpus: DataFrame,
-                 idCol: String, vecCol: String, queryPred: Column, k: Int,
-                 probeSupers: Int = 4, nprobe: Int = 16,
-                 rerank: Int = 100): DataFrame = {
-    recoverRoots(spark, path) // serve through a maintenance crash
-    val model = hierModelFromDF(spark.read.parquet(s"$path/quantizer"))
-    val v = graft.CacheRegistry.persistTracked(
-      VectorOps.normalized(corpus, idCol, vecCol)
-        .select(org.apache.spark.sql.functions.col(idCol).as("v_id"),
-          org.apache.spark.sql.functions.col("vn")))
-    val index = prunedHierIndex(spark, path, model, v.filter(queryPred),
-      probeSupers, nprobe)
-    VectorOps.ivfPqSearchHierNormalized(model, index, v,
-      queryPred, k, probeSupers, nprobe, rerank)
-  }
-
-  // ------------------------------------------------- OPQ artifact tier
-
-  def opqModelToDF(spark: SparkSession, rot: Array[Array[Double]],
-                   books: Array[Array[Array[Double]]]): DataFrame = {
-    import spark.implicits._
-    val rotRows = rot.zipWithIndex.toSeq.map { case (r, i) =>
-      ("rot", i, 0, r.toSeq)
-    }
-    val bookRows = for {
-      (book, s) <- books.zipWithIndex.toSeq
-      (c, j) <- book.zipWithIndex
-    } yield ("book", s, j, c.toSeq)
-    (rotRows ++ bookRows).toDF("kind", "i", "j", "vec")
-  }
-
-  def opqModelFromDF(df: DataFrame)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val rows = df.collect()
-    def vec(r: Row): Array[Double] =
-      r.getAs[scala.collection.Seq[Double]]("vec").toArray
-    val rot = rows.filter(_.getAs[String]("kind") == "rot")
-      .sortBy(_.getAs[Int]("i")).map(vec)
-    val books = rows.filter(_.getAs[String]("kind") == "book")
-      .groupBy(_.getAs[Int]("i")).toArray.sortBy(_._1)
-      .map { case (_, rs) => rs.sortBy(_.getAs[Int]("j")).map(vec) }
-    (rot, books)
-  }
-
-  /** Build the OPQ index: learned-rotation PQ fitted on the
-    * deterministic sample, persisted as (rotation rows + codebooks) and
-    * the `(v_id, codes)` table. The CELL-LESS tier of the artifact
-    * family — every search scans all codes asymmetrically (no probe
-    * pruning), which is the right trade when the corpus fits a scan but
-    * the 8-byte codes must replace the raw vectors; the probe-pruned
-    * regimes are [[build]]/[[buildHier]]. Returns false on an empty
-    * corpus. */
-  def buildOpq(vecs: DataFrame, idCol: String, vecCol: String, path: String,
-               m: Int = 8, codebookK: Int = 16, altIters: Int = 5,
-               sampleN: Int = 10000): Boolean = {
-    val spark = vecs.sparkSession
-    val v = graft.CacheRegistry.persistTracked(
-      VectorOps.normalized(vecs, idCol, vecCol)
-        .select(col(idCol).as("v_id"), col("vn")))
-    val sample = v.orderBy("v_id").limit(sampleN).collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("vn").toArray)
-    if (sample.isEmpty) false
-    else {
-      val (rot, books) = VectorOps.opqTrain(sample, m, codebookK, altIters)
-      opqModelToDF(spark, rot, books).write.mode("overwrite")
-        .parquet(s"$path/quantizer")
-      // build-time quantization-error baseline (the objective opqTrain
-      // descends, on its own training sample) — [[quantDrift]]'s
-      // self-calibrating reference
-      writeQerr(spark, path, VectorOps.pqMse(sample, rot, books))
-      VectorOps.opqEncode(vecs, idCol, vecCol, rot, books)
-        .select(col("v_id"), col("codes"))
-        .write.mode("overwrite").parquet(s"$path/index")
-      writeKind(spark, path, "opq")
-      writeConf(spark, path, Seq(m, codebookK, altIters))
-      true
-    }
-  }
-
-  /** Search a prebuilt OPQ index — bit-identical to the inline
-    * [[VectorOps.opqTopK]] on the same corpus (spec-pinned): the
-    * deterministic sample yields the same rotation and codebooks, and
-    * the on-the-fly query rotation is the same arithmetic the encode
-    * ran. */
-  def searchOpq(spark: SparkSession, path: String, corpus: DataFrame,
-                idCol: String, vecCol: String, queryPred: Column, k: Int,
-                rerank: Int = 100): DataFrame = {
-    recoverRoots(spark, path) // serve through a maintenance crash
-    val (rot, books) = opqModelFromDF(spark.read.parquet(s"$path/quantizer"))
-    val v = graft.CacheRegistry.persistTracked(
-      VectorOps.normalized(corpus, idCol, vecCol)
-        .select(col(idCol).as("v_id"), col("vn")))
-    VectorOps.opqSearchNormalized(rot, books,
-      spark.read.parquet(s"$path/index"), v, queryPred, k, rerank)
-  }
-
   // -------------------------------------------- OPQ × IVF artifact tier
 
   /** OPQ+IVF quantizer → typed Parquet rows: kind='rot' (rotation rows)
@@ -427,9 +304,9 @@ object AnnIndexIO {
     * layout — quantizer rows (rot + coarse + books) and the
     * `(v_id, cid, codes)` table CELL-PARTITIONED, so a search probing
     * `nprobe` of `nCells` cells prunes the rest at the file-listing
-    * level exactly like [[build]]. This closes [[buildOpq]]'s documented
-    * gap (the cell-less tier scans every code); OPQ's accuracy now rides
-    * the pruned regime. Returns false on an empty corpus. */
+    * level exactly like [[build]]. The training sample's reconstruction
+    * MSE is written as the `_QERR` baseline [[quantDrift]] gauges
+    * against. Returns false on an empty corpus. */
   def buildOpqIvf(vecs: DataFrame, idCol: String, vecCol: String,
                   path: String, nCells: Int = 16, m: Int = 8,
                   codebookK: Int = 16, altIters: Int = 5,
@@ -441,9 +318,10 @@ object AnnIndexIO {
     VectorOps.opqIvfTrainNormalized(v, nCells, m, codebookK, altIters,
         sampleN) match {
       case None => false
-      case Some((rot, model)) =>
+      case Some((rot, model, mse)) =>
         opqIvfModelToDF(spark, rot, model).write.mode("overwrite")
           .parquet(s"$path/quantizer")
+        writeQerr(spark, path, mse)
         VectorOps.opqIvfEncodeNormalized(v, rot, model)
           .write.mode("overwrite").partitionBy("cid")
           .parquet(s"$path/index")
@@ -568,19 +446,16 @@ object AnnIndexIO {
     }
   }
 
-  /** INCREMENTAL append for the OPQ families — [[appendAuto]]'s
-    * discipline on the two kinds it refuses: encode `newVecs` against
-    * the PERSISTED rotation + codebooks (and, for `opq_ivf`, the
-    * persisted coarse quantizer) and append the encoded rows to the
-    * index table (cell-partitioned for `opq_ivf` — only the touched
-    * `cid=` dirs gain files; plain for the cell-less `opq`). The model
-    * is FROZEN: the rotation/codebooks never change under append, so
-    * searching appended rows is bit-identical to a fresh encode of the
-    * union under the same model (spec-pinned), and the drift the frozen
-    * rotation accrues is exactly what [[occupancyStats]] watches
-    * (`opq_ivf`) and [[rebuildOpq]] heals. With this, all four
-    * persisted families carry the full lifecycle:
-    * build → append → monitor → maintain. */
+  /** INCREMENTAL append for the OPQ×IVF family — [[appendAuto]]'s
+    * discipline on the kind it refuses: encode `newVecs` against the
+    * PERSISTED rotation, coarse quantizer and codebooks and append the
+    * encoded rows to the cell-partitioned index table (only the touched
+    * `cid=` dirs gain files). The model is FROZEN: the rotation/codebooks
+    * never change under append, so searching appended rows is
+    * bit-identical to a fresh encode of the union under the same model
+    * (spec-pinned), and the drift the frozen rotation accrues is what
+    * [[occupancyStats]] and [[quantDrift]] watch and [[rebuildOpq]]
+    * heals: build → append → monitor → maintain. */
   def appendOpq(spark: SparkSession, path: String, newVecs: DataFrame,
                 idCol: String, vecCol: String): Unit = {
     recoverRoots(spark, path) // heal a stranded-prev crash state
@@ -592,23 +467,15 @@ object AnnIndexIO {
       if (q.filter(col("kind") === "coarse").limit(1).count() > 0) "opq_ivf"
       else "opq"
     }
-    require(kind == "opq" || kind == "opq_ivf",
+    require(kind == "opq_ivf",
       s"appendOpq supports the OPQ families only; $path is '$kind' — " +
         "use appendAuto instead")
-    if (kind == "opq") {
-      val (rot, books) = opqModelFromDF(
-        spark.read.parquet(s"$path/quantizer"))
-      VectorOps.opqEncode(newVecs, idCol, vecCol, rot, books)
-        .select(col("v_id"), col("codes"))
-        .write.mode("append").parquet(s"$path/index")
-    } else {
-      val (rot, model) = opqIvfModelFromDF(
-        spark.read.parquet(s"$path/quantizer"))
-      val v = VectorOps.normalized(newVecs, idCol, vecCol)
-        .select(col(idCol).as("v_id"), col("vn"))
-      VectorOps.opqIvfEncodeNormalized(v, rot, model)
-        .write.mode("append").partitionBy("cid").parquet(s"$path/index")
-    }
+    val (rot, model) = opqIvfModelFromDF(
+      spark.read.parquet(s"$path/quantizer"))
+    val v = VectorOps.normalized(newVecs, idCol, vecCol)
+      .select(col(idCol).as("v_id"), col("vn"))
+    VectorOps.opqIvfEncodeNormalized(v, rot, model)
+      .write.mode("append").partitionBy("cid").parquet(s"$path/index")
   }
 
   /** The persisted quantizer's configuration — flat: coarse-cell count;
@@ -694,7 +561,7 @@ object AnnIndexIO {
     require(kind.forall(k => k == "flat" || k == "hier") && !hasRot,
       s"retrain supports flat/hier indexes only; $path is " +
         s"'${kind.getOrElse("opq-family (rot rows present)")}' — use " +
-        "rebuildOpq (or buildOpq/buildOpqIvf) instead")
+        "rebuildOpq (or buildOpqIvf) instead")
     val cfg = persistedConfig(spark, path)
     val next = s"${path}_next"
     ArtifactSwap.clearStale(spark, next)
@@ -714,35 +581,11 @@ object AnnIndexIO {
     built
   }
 
-  /** Drift-gated maintenance: read the [[occupancyStats]] monitor and
-    * [[retrain]] only when it recommends to — the closed loop a snapshot
-    * chain runs after each [[appendAuto]] batch. Returns true iff a
-    * retrain happened. The monitor read is one tiny aggregate job; the
-    * skew threshold is the monitor's (see its toy-arity note).
-    *
-    * NOTE the skew gauge measures cell CONCENTRATION, which retrain
-    * cures only when the cause is a stale quantizer (codebooks that
-    * cannot resolve the drifted region — the damage the spec measures
-    * as code-word collapse). A corpus whose mass is GENUINELY
-    * concentrated keeps a high skew after a perfect retrain, so a
-    * deployment driving this in a loop should re-arm on skew INCREASE
-    * since the last retrain (one stored number next to the artifact)
-    * rather than on the absolute flag, or it will retrain every
-    * batch. */
-  def retrainIfDrifted(spark: SparkSession, path: String, vecs: DataFrame,
-                       idCol: String, vecCol: String,
-                       skewThreshold: Double = 8.0,
-                       sampleN: Int = 10000): Boolean = {
-    val drifted = occupancyStats(spark, path, skewThreshold)
-      .select("recommend_retrain").head().getBoolean(0)
-    drifted && retrain(vecs, idCol, vecCol, path, sampleN)
-  }
-
-  /** REBUILD an OPQ-family index from the accumulated corpus — the
-    * retrain valve for the two kinds [[retrain]] rightly refuses: an OPQ
+  /** REBUILD an OPQ×IVF index from the accumulated corpus — the
+    * retrain valve for the kind [[retrain]] rightly refuses: an OPQ
     * artifact's accuracy lives in the LEARNED ROTATION (the alternating
-    * Procrustes fit), so healing drift means re-learning rotation AND
-    * codebooks (and, for `opq_ivf`, the coarse quantizer) from the
+    * Procrustes fit), so healing drift means re-learning rotation,
+    * coarse quantizer and codebooks from the
     * current corpus, then re-encoding everything — a flat refit would
     * silently destroy the rotation (the guard the r14 round added; this
     * is the action it pointed at). Preserves the persisted operating
@@ -750,19 +593,17 @@ object AnnIndexIO {
     * time) and promotes with the same [[ArtifactSwap]] atomic
     * generation swap as [[retrain]]: searches serve the old generation
     * until the new one is complete, and the promoted artifact is
-    * indistinguishable from a from-scratch [[buildOpq]]/[[buildOpqIvf]]
-    * over the same corpus (the deterministic sample makes the fit
-    * replayable — oracle-pinned VERBATIM against the from-scratch SQL).
-    * With this, all four persisted index kinds have an actionable
-    * maintenance valve for the occupancy monitor's drift signal.
-    * Returns false (nothing changed) on an empty corpus. */
+    * indistinguishable from a from-scratch [[buildOpqIvf]] over the
+    * same corpus (the deterministic sample makes the fit replayable —
+    * oracle-pinned VERBATIM against the from-scratch SQL). Returns false
+    * (nothing changed) on an empty corpus. */
   def rebuildOpq(vecs: DataFrame, idCol: String, vecCol: String,
                  path: String, sampleN: Int = 10000): Boolean = {
     val spark = vecs.sparkSession
     recoverRoots(spark, path) // heal a stranded-prev crash state
     val kind = readKind(spark, path).getOrElse {
-      // pre-sidecar artifact: the rot rows identify the family, the
-      // coarse rows split opq_ivf from the cell-less opq
+      // pre-sidecar artifact: the rot rows identify the OPQ family, the
+      // coarse rows the OPQ×IVF kind (the cell-less kind is refused)
       val q = spark.read.parquet(s"$path/quantizer")
       require(q.filter(col("kind") === "rot").limit(1).count() > 0,
         s"rebuildOpq supports the OPQ families only; $path has no " +
@@ -770,25 +611,20 @@ object AnnIndexIO {
       if (q.filter(col("kind") === "coarse").limit(1).count() > 0) "opq_ivf"
       else "opq"
     }
-    require(kind == "opq" || kind == "opq_ivf",
+    require(kind == "opq_ivf",
       s"rebuildOpq supports the OPQ families only; $path is '$kind' — " +
         "use retrain instead")
     val next = s"${path}_next"
     ArtifactSwap.clearStale(spark, next)
-    val built = (kind, readConfFields(spark, path)) match {
-      case ("opq", Some(c)) if c.length == 3 =>
-        buildOpq(vecs, idCol, vecCol, next, c(0), c(1), c(2), sampleN)
-      case ("opq", _) =>
-        // pre-sidecar artifact: derive m/codebookK from the fitted rows
-        // (altIters alone falls to the build default — it leaves no
-        // trace); hardcoded defaults here would silently change the
-        // index's operating point, the one thing maintenance must not do
-        val (_, m, codebookK) = derivedBookConf(spark, path)
-        buildOpq(vecs, idCol, vecCol, next, m, codebookK, 5, sampleN)
-      case (_, Some(c)) if c.length == 4 =>
+    val built = readConfFields(spark, path) match {
+      case Some(c) if c.length == 4 =>
         buildOpqIvf(vecs, idCol, vecCol, next, c(0), c(1), c(2), c(3),
           sampleN)
       case _ =>
+        // pre-sidecar artifact: derive nCells/m/codebookK from the fitted
+        // rows (altIters alone falls to the build default — it leaves no
+        // trace); hardcoded defaults here would silently change the
+        // index's operating point, the one thing maintenance must not do
         val (nCellsOpt, m, codebookK) = derivedBookConf(spark, path)
         buildOpqIvf(vecs, idCol, vecCol, next, nCellsOpt.getOrElse(16), m,
           codebookK, 5, sampleN)
@@ -796,20 +632,6 @@ object AnnIndexIO {
     if (built) ArtifactSwap.swap(spark, path, next)
     else ArtifactSwap.clearStale(spark, next)
     built
-  }
-
-  /** Drift-gated OPQ rebuild — [[retrainIfDrifted]]'s twin for the
-    * probe-pruned OPQ family (`opq_ivf`: the occupancy monitor reads
-    * `cid`, which the cell-less `opq` kind does not have — gate that one
-    * on corpus-growth policy and call [[rebuildOpq]] directly). Returns
-    * true iff a rebuild happened. */
-  def rebuildOpqIfDrifted(spark: SparkSession, path: String,
-                          vecs: DataFrame, idCol: String, vecCol: String,
-                          skewThreshold: Double = 8.0,
-                          sampleN: Int = 10000): Boolean = {
-    val drifted = occupancyStats(spark, path, skewThreshold)
-      .select("recommend_retrain").head().getBoolean(0)
-    drifted && rebuildOpq(vecs, idCol, vecCol, path, sampleN)
   }
 
   /** COMPACT the encoded index table — the file-merge maintenance the
@@ -826,8 +648,7 @@ object AnnIndexIO {
     * after (the `ann_index_compact` oracle shares `ann_index_append`'s
     * SQL verbatim). Returns (files_before, files_after). */
   def compact(spark: SparkSession, path: String,
-              targetPartitions: Int = 0,
-              knownBefore: Long = -1L): (Long, Long) = {
+              targetPartitions: Int = 0): (Long, Long) = {
     // heal a prior crash BEFORE the layout sniff: compactTable recovers
     // its own swap root, but the isHier read below precedes it and would
     // throw missing-path inside the crash window otherwise
@@ -840,25 +661,7 @@ object AnnIndexIO {
           .sortWithinPartitions("sid", "cid")
         else df.repartitionByRange(parts, col("cid"))
           .sortWithinPartitions("cid"),
-      if (isHier) "sid" else "cid", targetPartitions, knownBefore)
-  }
-
-  /** Fragmentation-gated compaction ([[LshIndexIO.compactIfFragmented]]'s
-    * twin, sharing [[ArtifactSwap.fragmentedAt]] — the gate's listing is
-    * reused as the compactor's `before`): healthy indexes are a
-    * listing-only no-op. Returns true iff a compaction ran. */
-  def compactIfFragmented(spark: SparkSession, path: String,
-                          maxFiles: Int = 0,
-                          targetPartitions: Int = 0): Boolean = {
-    // heal BEFORE the gate's listing: in compact()'s crash window the
-    // live dir is absent, so dataFileCount would report 0 (healthy) and
-    // a gated-only maintenance loop would never recover the stranded
-    // corpus under _prev
-    recoverRoots(spark, path)
-    ArtifactSwap.fragmentedAt(spark, s"$path/index", maxFiles) match {
-      case Some(n) => compact(spark, path, targetPartitions, n); true
-      case None => false
-    }
+      if (isHier) "sid" else "cid", targetPartitions)
   }
 
   /** Cell-occupancy monitor for a built index: one map-side-combined
@@ -894,7 +697,7 @@ object AnnIndexIO {
   }
 
   /** Build-time quantization-error sidecar (`path/_QERR`, one ASCII
-    * double): [[buildOpq]] records its training sample's reconstruction
+    * double): [[buildOpqIvf]] records its training sample's reconstruction
     * MSE so [[quantDrift]] can compare the CURRENT corpus against the
     * quantizer's own birth certificate — self-calibrating, no absolute
     * threshold to size per corpus. */
@@ -909,15 +712,15 @@ object AnnIndexIO {
     try out.write(mse.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Quantization-error drift monitor for the CELL-LESS `opq` family —
-    * [[occupancyStats]]' counterpart where there is no `cid` to gauge:
+  /** Quantization-error drift monitor for the OPQ×IVF family —
+    * [[occupancyStats]]' counterpart on the axis cell counts miss:
     * drift under a frozen rotation/codebook shows up as RECONSTRUCTION
     * ERROR (regions the books never saw quantize onto far-away code
     * words — asymmetric ranks go arbitrary there, the recall damage the
     * retrain spec measures). Takes a deterministic hash-spread sample of
     * the CURRENT corpus (old and appended rows alike), measures its MSE
-    * through the persisted rotation + books ([[VectorOps.pqMse]], the
-    * objective the build descended), and compares against the
+    * through the persisted rotation, coarse cells and residual books
+    * ([[VectorOps.pqMse]]), and compares against the
     * build-time baseline the artifact carries (`_QERR`): a healthy
     * corpus sits near 1×; `recommend_rebuild` trips past `factor`. The
     * actuator is [[rebuildOpq]], which resets the baseline. Driver-side
@@ -935,13 +738,14 @@ object AnnIndexIO {
       .getOrElse(throw new IllegalArgumentException(
         s"$path carries no _QERR baseline (pre-r15 artifact) — " +
           "rebuildOpq once to mint one"))
-    val (rot, books) = opqModelFromDF(spark.read.parquet(s"$path/quantizer"))
+    val (rot, model) = opqIvfModelFromDF(
+      spark.read.parquet(s"$path/quantizer"))
     val sample = VectorOps.normalized(vecs, idCol, vecCol)
       .select(col(idCol).cast("string").as("_k"), col("vn"))
       .orderBy(md5(col("_k"))) // hash-spread: old AND appended rows
       .limit(sampleN)
       .collect().map(_.getAs[scala.collection.Seq[Double]]("vn").toArray)
-    val mse = VectorOps.pqMse(sample, rot, books)
+    val mse = VectorOps.pqMse(sample, rot, model.books, model.cents)
     val ratio = mse / math.max(baseline, 1e-300)
     // a legitimately ~zero baseline (toy corpus with <= codebookK
     // distinct vectors — the books memorize the training sample exactly)
@@ -957,22 +761,12 @@ object AnnIndexIO {
         "recommend_rebuild")
   }
 
-  /** Drift-gated rebuild for the cell-less family — the closed
-    * monitor→actuator loop ([[retrainIfDrifted]]'s shape) on the one
-    * kind with no occupancy axis. Returns true iff a rebuild ran. */
-  def rebuildOpqIfQuantDrifted(spark: SparkSession, path: String,
-                               vecs: DataFrame, idCol: String,
-                               vecCol: String, sampleN: Int = 2000,
-                               factor: Double = 2.0): Boolean = {
-    val drifted = quantDrift(spark, path, vecs, idCol, vecCol, sampleN,
-      factor).select("recommend_rebuild").head().getBoolean(0)
-    drifted && rebuildOpq(vecs, idCol, vecCol, path)
-  }
-
   /** Search a [[buildAuto]]-built index: dispatches on the persisted
     * quantizer kind (hier ⇒ probed `probeSupers` supers wide; flat ⇒
-    * `probeSupers` ignored). Bit-identical to the matching explicit
-    * search either way. The kind comes from the `_KIND` sidecar written
+    * `probeSupers` ignored). Bit-identical to the inline
+    * [[VectorOps.ivfPqTopK]] (flat) or [[VectorOps.ivfPqHierTopK]] (hier)
+    * on the same corpus (spec-proven), minus the refit and the corpus
+    * re-encode. The kind comes from the `_KIND` sidecar written
     * at build time — a driver-side FS read, NO Spark job; indexes
     * predating the sidecar fall back to a one-row probe of the
     * quantizer table. */

@@ -104,7 +104,7 @@ private[graft] object ArtifactSwap {
     * sort at `parts` writer arity), land it partitioned on
     * `partitionCol` next to the live dir, promote by [[swap]]. Pass
     * `knownBefore` when the caller already listed the tree (the
-    * fragmentation gates do) so the listing isn't paid twice — on
+    * streaming tables' fragmentation gates do) so the listing isn't paid twice — on
     * object stores the listing RPCs are exactly what compaction exists
     * to bound. `carrySidecars` names in-dir sidecar files (e.g. `_CONF`)
     * copied from the live generation into the next one BEFORE the swap,

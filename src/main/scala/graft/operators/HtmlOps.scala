@@ -56,7 +56,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: fully row-local (regexp chains + one HOF pass over the
   * block array; each intermediate array is materialized in its own
   * Project so Catalyst reads attributes instead of re-evaluating the
-  * chain inside every lambda — the [[TextOps.shingled]] CSE discipline).
+  * chain inside every lambda).
   * No shuffle, no join, no window: at 100 TB this pipelines inside the
   * WARC scan with zero exchanges.
   */

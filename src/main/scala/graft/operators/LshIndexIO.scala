@@ -224,32 +224,15 @@ object LshIndexIO {
     * TOTAL across all band dirs — bounded by writer arity, never by
     * append count. Returns (files_before, files_after). */
   def compact(spark: SparkSession, path: String,
-              targetPartitions: Int = 0,
-              knownBefore: Long = -1L): (Long, Long) = {
+              targetPartitions: Int = 0): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     ArtifactSwap.compactTable(spark, s"$path/bands",
       (df, parts) => df
         .repartitionByRange(parts, col("band_id"), col("band_hash"))
         .sortWithinPartitions("band_id", "band_hash"),
-      "band_id", targetPartitions, knownBefore,
+      "band_id", targetPartitions,
       carrySidecars = Seq("_CONF"))
   }
-
-  /** Fragmentation-gated compaction — the closed monitor→actuator loop
-    * a snapshot chain runs after each [[append]] (the text tier's
-    * [[AnnIndexIO.retrainIfDrifted]]): the gauge is the artifact's own
-    * DATA FILE COUNT via [[ArtifactSwap.fragmentedAt]] (listing cost is
-    * exactly what compaction exists to bound; the gate's listing is
-    * reused as the compactor's `before`, never paid twice). Returns
-    * true iff a compaction ran; a healthy index is a no-op (one file
-    * listing, no job). */
-  def compactIfFragmented(spark: SparkSession, path: String,
-                          maxFiles: Int = 0,
-                          targetPartitions: Int = 0): Boolean =
-    ArtifactSwap.fragmentedAt(spark, s"$path/bands", maxFiles) match {
-      case Some(n) => compact(spark, path, targetPartitions, n); true
-      case None => false
-    }
 
   /** RE-SHINGLE the index into a new generation — the actuator for
     * [[stats]]'s `capped_buckets` signal: when boilerplate-heavy content

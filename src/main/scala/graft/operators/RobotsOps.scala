@@ -185,26 +185,6 @@ object RobotsOps {
       .unionByName(entries(base.filter(idx), "</sitemap>", isIndex = true))
   }
 
-  /** [[sitemapUrls]] over RAW FETCH BYTES — the shape a crawler actually
-    * holds: sitemaps.org serves both `sitemap.xml` and `sitemap.xml.gz`,
-    * so bodies whose bytes start with the gzip magic (0x1f 0x8b) are
-    * inflated through [[graft.functions.Gzip.gunzip]] (corrupt archives
-    * null-poison, the WARC convention) and everything else is decoded as
-    * UTF-8 directly. Null bodies (fetch failure, corrupt gzip) yield no
-    * rows. */
-  def sitemapUrlsBin(sitemaps: DataFrame, hostCol: String,
-                     bytesCol: String): DataFrame = {
-    val b = col(bytesCol)
-    val isGz = length(b) >= 2 &&
-      substring(b, 1, 2) === lit(Array(0x1f.toByte, 0x8b.toByte))
-    val xml = when(isGz, graft.functions.Gzip.gunzip(b)).otherwise(b)
-      .cast("string")
-    sitemapUrls(
-      sitemaps.select(col(hostCol).as("host"), xml.as("_xml"))
-        .filter(col("_xml").isNotNull),
-      "host", "_xml")
-  }
-
   /** Add the rule-match machinery to a rules frame carrying `rule_path`:
     * wildcard rules compile to an anchored regex ONCE per rule row (the
     * rules table is robots-file-sized, tiny next to the request join) —

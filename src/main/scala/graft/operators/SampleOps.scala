@@ -35,13 +35,6 @@ object SampleOps {
     math.round(rate * HashSpace.toDouble)
   }
 
-  /** Deterministic Bernoulli sample: keep a row iff
-    * hash60(salt ++ id) < rate·2^60. Row-local — no shuffle, reproducible
-    * across runs, engines, and partial re-runs. */
-  def bernoulli(df: DataFrame, idCol: String, rate: Double,
-                salt: String = "graft"): DataFrame =
-    df.filter(hash60(col(idCol), salt) < threshold(rate))
-
   /** Deterministic STRATIFIED sample: per-stratum keep-rates (e.g.
     * down-sample the dominant language, keep the rest). Strata absent
     * from `rates` keep `defaultRate`. The rate lookup folds into one

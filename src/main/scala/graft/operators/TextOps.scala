@@ -50,8 +50,9 @@ object TextOps {
     *
     * PERF: only use this single-Column form on small inputs — `toks` is
     * re-evaluated inside every lambda invocation (Catalyst does not CSE
-    * across higher-order-function boundaries). The pipeline path is
-    * [[shingled]], which materializes the token array first. */
+    * across higher-order-function boundaries). The query paths hash
+    * shingles with the native [[graft.functions.TextHash]] kernels; this
+    * declarative form is their parity reference. */
   def shingles(text: Column, k: Int): Column =
     shinglesOf(tokens(text), k)
 
@@ -62,28 +63,6 @@ object TextOps {
         i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + j)): _*))))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** (doc, sh) with the token array materialized in its own Project so the
-    * shingle transform reads an attribute, not a re-computed split.
-    *
-    * The input is repartitioned by doc id first: document corpora often
-    * arrive as few large files, and without the exchange every downstream
-    * shingle/hash/join stage inherits single-file parallelism (locally: one
-    * task doing all the work; on a cluster: one executor). The extra
-    * shuffle moves only (id, text) rows. */
-  def shingled(docs: DataFrame, idCol: String, textCol: String,
-               k: Int): DataFrame =
-    graft.Par.byKey(docs, col(idCol))
-      .select(col(idCol).as("doc"), tokens(col(textCol)).as("_toks"))
-      .select(col("doc"), shinglesOf(col("_toks"), k).as("sh"))
-
-  /** MinHash signature from a numeric shingle-hash array: for hash i,
-    * min over shingles of (a_i·h + b_i) mod M. One md5 per shingle total;
-    * the 16 hash functions are integer arithmetic. */
-  def minhashSignature(hashArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(hashArr, h =>
-        pmod(h * MinhashA(i) + MinhashB(i), lit(HashMod))))): _*)
 
   /** LSH band keys: positional rolling hash of each band's signature rows
     * (integer arithmetic, engine-portable). */
@@ -783,11 +762,6 @@ object TextOps {
                          merges: Seq[(String, String)] = DefaultBpeMerges): Column =
     graft.functions.BpeMerge.bpe_merge_count(text, merges, BpeTokenRe)
 
-  /** The merged BPE token sequence (see [[mergeBpeTokenCount]]). */
-  def mergeBpeTokens(text: Column,
-                     merges: Seq[(String, String)] = DefaultBpeMerges): Column =
-    graft.functions.BpeMerge.bpe_merge_tokens(text, merges, BpeTokenRe)
-
   /** PII patterns (portable Java-regex / RE2 subset — shared verbatim with
     * the DuckDB oracle; no lookarounds, no backreferences). */
   val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -1165,9 +1139,7 @@ object TextOps {
     }.reduce(_ + _)
 
   /** TRAIN step alone: the 1-row per-class centroid frame
-    * (a1..a3 = positive class, b1..b3 = negative) — what a deployment
-    * persists and later feeds to [[centroidApplyFrozen]] at the ingest
-    * edge. The 6-dp round is the parity contract (see
+    * (a1..a3 = positive class, b1..b3 = negative). The 6-dp round is the parity contract (see
     * [[centroidClassifier]]). */
   def centroidFit(docs: DataFrame, idCol: String, textCol: String,
                   isTrain: Column, label: Column): DataFrame =
@@ -1189,26 +1161,6 @@ object TextOps {
     base.crossJoin(broadcast(
         centroidFit(docs, idCol, textCol, isTrain, label)))
       .select(col("doc"), col("is_train"),
-        (sqDistTo("a") < sqDistTo("b")).as("label_pred"),
-        (sqDistTo("b") - sqDistTo("a")).as("margin"))
-  }
-
-  /** Serve-side apply of FROZEN centroids (the 6 doubles a batch train
-    * produced): pure row-local projection — no aggregate, no state, no
-    * watermark — so it runs UNCHANGED over `readStream` for
-    * classify-at-ingest, like the other row-local text scorers. Feature
-    * and distance arithmetic are the same shared definitions as
-    * [[centroidClassifier]], so frozen-apply ≡ batch apply bit-for-bit
-    * when fed that train's centroids (spec-pinned over stream splits). */
-  def centroidApplyFrozen(docs: DataFrame, idCol: String, textCol: String,
-                          pos: Seq[Double], neg: Seq[Double]): DataFrame = {
-    require(pos.length == 3 && neg.length == 3, "3 features per centroid")
-    val centCols =
-      pos.zipWithIndex.map { case (v, i) => lit(v).as(s"a${i + 1}") } ++
-      neg.zipWithIndex.map { case (v, i) => lit(v).as(s"b${i + 1}") }
-    docs.select(col(idCol).cast("long").as("doc") +:
-        (qualityFeatureCols(textCol) ++ centCols): _*)
-      .select(col("doc"),
         (sqDistTo("a") < sqDistTo("b")).as("label_pred"),
         (sqDistTo("b") - sqDistTo("a")).as("margin"))
   }
@@ -1312,20 +1264,6 @@ object TextOps {
       }
     }
     LogregModel(mu, sd, w)
-  }
-
-  /** Serve-side apply of a FROZEN logistic model: pure row-local
-    * projection (standardize, z = b + w·f̂, score = σ(z)) — no
-    * aggregate, no state — so it runs UNCHANGED over `readStream` for
-    * classify-at-ingest, exactly like [[centroidApplyFrozen]]. Returns
-    * (doc, score round-6, label_pred = score ≥ 0.5). */
-  def logregApplyFrozen(docs: DataFrame, idCol: String, textCol: String,
-                        model: LogregModel): DataFrame = {
-    val p = logregP(model)
-    docs.select(col(idCol).cast("long").as("doc") +:
-        qualityFeatureCols(textCol): _*)
-      .select(col("doc"), (round(p, 6) + 0.0).as("score"),
-        (p >= 0.5).as("label_pred"))
   }
 
   private def logregP(m: LogregModel): Column = {
@@ -2058,7 +1996,7 @@ object TextOps {
 
   /** Collect a counter table into per-row literal lookup maps — the
     * FROZEN sketch (config-bounded: ≤ depth·width entries). */
-  def cmSketchMaps(counters: DataFrame, depth: Int): Array[Map[Long, Long]] = {
+  private def cmSketchMaps(counters: DataFrame, depth: Int): Array[Map[Long, Long]] = {
     val rows = counters.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     Array.tabulate(depth)(i =>
@@ -2067,21 +2005,12 @@ object TextOps {
 
   /** Count-min estimate of gram `g` under a frozen sketch — min over the
     * depth rows' literal-map lookups; row-local, stream-legal. */
-  def cmEstimateCol(maps: Array[Map[Long, Long]], g: Column,
-                    width: Int): Column = {
+  private def cmEstimateCol(maps: Array[Map[Long, Long]], g: Column,
+                            width: Int): Column = {
     val est = maps.indices.map(i =>
       coalesce(element_at(typedLit(maps(i)), cmBucket(i, g, width)), lit(0L)))
     if (est.length == 1) est.head else least(est: _*)
   }
-
-  /** Frozen-sketch DOC gate: true iff any n-gram of `text` has count-min
-    * estimate ≥ `minCount` — the row-local ingest-side flag ("this new
-    * doc contains a candidate corpus-heavy gram"); no false negatives
-    * by the count-min overestimate property. */
-  def cmHeavyFlag(text: Column, maps: Array[Map[Long, Long]], n: Int,
-                  width: Int, minCount: Long): Column =
-    exists(gramArray(text, n), g =>
-      cmEstimateCol(maps, g, width) >= minCount)
 
   /** The count-min sketch prefilter (passes 1+2 of [[frequentNgrams]]):
     * one bounded-shuffle counter aggregate over `grams.g`, counters
@@ -2136,8 +2065,8 @@ object TextOps {
 
   /** BPE VOCABULARY INDUCTION — learn the merge table itself (Sennrich
     * et al. 2016), the "train a tokenizer on the corpus" pipeline stage
-    * next to the APPLY side ([[mergeBpeTokens]], which consumes a given
-    * table). Textbook loop: start from characters, repeatedly merge the
+    * next to the APPLY side ([[mergeBpeTokenCount]], which consumes a
+    * given table). Textbook loop: start from characters, repeatedly merge the
     * most frequent adjacent symbol pair (ties broken lexicographically
     * on (left, right) — fully deterministic), weighting pairs by word
     * frequency. Returns the learned table (rank, lhs, rhs, cnt); fewer

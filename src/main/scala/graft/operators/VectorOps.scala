@@ -446,108 +446,28 @@ object VectorOps {
   }
 
   /** Mean squared PQ reconstruction error of `sample` under rotation +
-    * codebooks — the objective [[opqTrain]] descends; exposed so specs
-    * (and capacity planning) can compare quantizer variants. */
+    * codebooks — the objective [[opqTrain]] descends. With coarse
+    * centroids `cents` the books code the residual of each rotated vector
+    * from its nearest centroid (the OPQ×IVF layout); without, the rotated
+    * vector itself. */
   def pqMse(sample: Array[Array[Double]], rot: Array[Array[Double]],
-            books: Array[Array[Array[Double]]]): Double = {
+            books: Array[Array[Array[Double]]],
+            cents: Array[Array[Double]] = Array.empty): Double = {
+    val coarse = IvfPqModel(cents, books)
     val errs = sample.map { x =>
-      val y = matVec(rot, x)
+      val r = matVec(rot, x)
+      val y =
+        if (cents.isEmpty) r
+        else {
+          val c = cents(coarse.nearestCell(r))
+          Array.tabulate(r.length)(i => r(i) - c(i))
+        }
       val h = pqReconstructArr(y, books)
       var d = 0.0; var i = 0
       while (i < y.length) { val t = y(i) - h(i); d += t * t; i += 1 }
       d
     }
     errs.sum / errs.length
-  }
-
-  /** OPQ-encode: rotate each unit-normalized vector in-plan (the
-    * rotation folds in as a matrix literal over the native dot kernel,
-    * like the centroid matrices) and PQ-code the rotated copy. Keeps
-    * (v_id, vn, codes) — `vn` stays the ORIGINAL normalized vector so
-    * the exact re-rank needs no inverse rotation. */
-  def opqEncode(vecs: DataFrame, idCol: String, vecCol: String,
-                rot: Array[Array[Double]],
-                codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebooks.length
-    val subDim = codebooks(0)(0).length
-    val v = normalized(vecs, idCol, vecCol)
-      .select(col(idCol).as("v_id"), col("vn"))
-      .withColumn("_vr", transform(centMatrixLit(rot),
-        r => graft.functions.ArrayDot.array_dot(r, col("vn"))))
-    val sliced = v.select(col("v_id") +: col("vn") +: col("_vr") +:
-      (0 until m).map(s => slice(col("_vr"), s * subDim + 1, subDim).as(s"_s$s")): _*)
-    def code(s: Int): Column = {
-      val dists = transform(centMatrixLit(codebooks(s)),
-        c => graft.functions.ArrayDot.array_sq_dist(col(s"_s$s"), c))
-      array_position(dists, array_min(dists)).cast("int")
-    }
-    sliced.select(col("v_id"), col("vn"), col("_vr"),
-      array((0 until m).map(code): _*).as("codes"))
-  }
-
-  /** OPQ ANN top-k — [[pqTopK]] with the learned rotation: asymmetric
-    * ranking happens in the ROTATED space (rotated query dot
-    * reconstructed rotated-centroid chain), the exact re-rank on the
-    * original vectors (orthogonal R preserves cosine, so the two spaces
-    * rank identically in the exact tier). `altIters = 0` is bit-identical
-    * to [[pqTopK]] (spec-pinned). */
-  def opqTopK(vecs: DataFrame, idCol: String, vecCol: String,
-              queryPred: Column, k: Int, m: Int = 8, codebookK: Int = 16,
-              rerank: Int = 100, sampleN: Int = 10000,
-              altIters: Int = 5): DataFrame = {
-    val spark = vecs.sparkSession
-    val v0 = normalized(vecs, idCol, vecCol)
-      .select(col(idCol).as("v_id"), col("vn"))
-    val sample = v0.orderBy("v_id").limit(sampleN).collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("vn").toArray)
-    if (sample.isEmpty)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("q_id"), lit(0).as("rank"),
-          lit(0L).as("n_id"), lit(0.0).as("sim")).limit(0)
-    val (rot, books) = opqTrain(sample, m, codebookK, altIters)
-    val encoded = graft.CacheRegistry.persistTracked(
-      opqEncode(vecs, idCol, vecCol, rot, books))
-    opqSearchNormalized(rot, books,
-      encoded.select(col("v_id"), col("codes")),
-      encoded.select(col("v_id"), col("vn"), col("_vr")),
-      queryPred, k, rerank)
-  }
-
-  /** Search an OPQ-coded index given the fitted (rotation, codebooks):
-    * asymmetric rank in the rotated space, exact re-rank on the
-    * original normalized vectors. `v` must carry (v_id, vn) and MAY
-    * carry a pre-rotated `_vr` (the inline path reuses the encode's);
-    * without one the query rows rotate on the fly — identical
-    * arithmetic, so both forms are bit-identical (spec). */
-  private[graft] def opqSearchNormalized(rot: Array[Array[Double]],
-                                         books: Array[Array[Array[Double]]],
-                                         index: DataFrame, v: DataFrame,
-                                         queryPred: Column, k: Int,
-                                         rerank: Int): DataFrame = {
-    val qsrc =
-      if (v.columns.contains("_vr")) v
-      else v.withColumn("_vr", transform(centMatrixLit(rot),
-        r => graft.functions.ArrayDot.array_dot(r, col("vn"))))
-    val q = qsrc.filter(queryPred)
-      .select(col("v_id").as("q_id"), col("_vr").as("qr"))
-    // native ADC kernel (flat form) — see ivfPqSearchNormalized
-    val approx = broadcast(q)
-      .join(index.select(col("v_id"), col("codes")),
-        col("q_id") =!= col("v_id"))
-      .withColumn("asim",
-        graft.functions.PqAsim.pq_asim(col("qr"), col("codes"), books))
-    val wa = Window.partitionBy(col("q_id")).orderBy(col("asim").desc, col("v_id"))
-    val cand = approx.withColumn("_arn", row_number().over(wa))
-      .filter(col("_arn") <= rerank)
-      .select(col("q_id"), col("v_id"))
-    val qx = qsrc.filter(queryPred)
-      .select(col("v_id").as("q_id"), col("vn").as("qv"))
-    val exact = cand.join(broadcast(qx), "q_id")
-      .join(v.select(col("v_id"), col("vn")), "v_id")
-      .withColumn("sim", dot(col("qv"), col("vn")))
-    val we = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("v_id"))
-    exact.withColumn("rank", row_number().over(we)).filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("v_id").as("n_id"), col("sim"))
   }
 
   // ------------------------------------------- OPQ × IVF (probe-pruned)
@@ -562,11 +482,13 @@ object VectorOps {
     * residuals. Orthogonal R preserves norms and angles, so the rotated
     * vectors stay unit and every cell/probe margin carries over; the
     * exact re-rank runs on the ORIGINAL normalized vectors, so rotation
-    * fp noise can't perturb the reported similarities. */
+    * fp noise can't perturb the reported similarities. Returns the
+    * rotation, the model and the sample's reconstruction MSE
+    * ([[pqMse]]), the build-time baseline of the drift monitor. */
   private[graft] def opqIvfTrainNormalized(v: DataFrame, nCells: Int, m: Int,
                                            codebookK: Int, altIters: Int,
                                            sampleN: Int)
-      : Option[(Array[Array[Double]], IvfPqModel)] = {
+      : Option[(Array[Array[Double]], IvfPqModel, Double)] = {
     val sample = v.orderBy("v_id").limit(sampleN).collect()
       .map(_.getAs[scala.collection.Seq[Double]]("vn").toArray)
     if (sample.isEmpty) None
@@ -579,7 +501,8 @@ object VectorOps {
         val ct = cents(coarse.nearestCell(y))
         Array.tabulate(y.length)(i => y(i) - ct(i))
       }
-      Some((rot, IvfPqModel(cents, pqTrain(residuals, m, codebookK))))
+      val model = IvfPqModel(cents, pqTrain(residuals, m, codebookK))
+      Some((rot, model, pqMse(sample, rot, model.books, cents)))
     }
   }
 
@@ -617,8 +540,8 @@ object VectorOps {
     * the asymmetric similarity IN THE ROTATED SPACE (the space the cells
     * and codebooks live in); the top `rerank` re-score exactly against
     * the ORIGINAL normalized vectors (orthogonal R preserves cosine, so
-    * the two spaces rank identically in the exact tier — same contract
-    * as [[opqSearchNormalized]]). Probe and candidate joins are the same
+    * the two spaces rank identically in the exact tier). Probe and
+    * candidate joins are the same
     * equi-joins as [[ivfPqSearchNormalized]]. */
   private[graft] def opqIvfSearchNormalized(rot: Array[Array[Double]],
                                             model: IvfPqModel,

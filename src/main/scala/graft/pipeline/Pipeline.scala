@@ -82,15 +82,27 @@ object Pipeline {
   }
 
   /** The failure text: the exception's own message, or, when it wraps
-    * causes, the innermost cause with its class — Spark's
-    * `Job aborted due to stage failure` preamble hides it otherwise. */
-  private def failureCause(e: Throwable): String = {
+    * causes, [[rootCause]] — Spark's `Job aborted due to stage failure`
+    * preamble hides the cause otherwise. */
+  private def failureCause(e: Throwable): String =
+    if (innermost(e) eq e) message(e).take(200) else rootCause(e)
+
+  /** The innermost cause of `e` as `Class: message` (at most 200 chars),
+    * the form the harness logs name a failure by. */
+  private[graft] def rootCause(e: Throwable): String = {
+    val root = innermost(e)
+    s"${root.getClass.getName}: ${message(root)}".take(200)
+  }
+
+  private def innermost(e: Throwable): Throwable = {
     var root = e
     while (root.getCause != null && (root.getCause ne root)) root = root.getCause
-    // getMessage can be null (bare RuntimeException, errors)
-    val msg = Option(root.getMessage).getOrElse(root.getClass.getName)
-    (if (root eq e) msg else s"${root.getClass.getName}: $msg").take(200)
+    root
   }
+
+  // getMessage can be null (bare RuntimeException, errors)
+  private def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
 
   def tagHash(tags: Map[String, String]): String =
     java.security.MessageDigest.getInstance("MD5")

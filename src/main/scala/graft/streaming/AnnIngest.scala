@@ -5,8 +5,7 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.VectorOps
 
 /** Streaming ANN ingest: encode ARRIVING vectors against a persisted
-  * IVF-PQ quantizer — the embeddings mirror of [[DedupStream]]'s
-  * dedup-at-ingest.
+  * IVF-PQ quantizer.
   *
   * A 100 TB deployment builds its quantizer once ([[graft.operators
   * .AnnIndexIO.build]]); new corpus vectors then only need the encode
@@ -31,20 +30,6 @@ object AnnIngest {
                    model: VectorOps.IvfPqModel): DataFrame = {
     import org.apache.spark.sql.functions.col
     VectorOps.ivfPqEncodeNormalized(
-      VectorOps.normalizedNarrow(vecs, idCol, vecCol)
-        .select(col(idCol).as("v_id"), col("vn")),
-      model)
-  }
-
-  /** [[encodeStream]] against a TWO-LEVEL quantizer
-    * ([[graft.operators.AnnIndexIO.buildHier]]) — the same stateless
-    * shape (two-level assignment + residual codes are pure per-row
-    * functions of the matrix literals), shared verbatim with the batch
-    * encode so stream rows equal batch rows for any micro-batch split. */
-  def encodeStreamHier(vecs: DataFrame, idCol: String, vecCol: String,
-                       model: VectorOps.IvfPqHierModel): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    VectorOps.ivfPqEncodeHierNormalized(
       VectorOps.normalizedNarrow(vecs, idCol, vecCol)
         .select(col(idCol).as("v_id"), col("vn")),
       model)

@@ -181,7 +181,7 @@ object FrontierStream {
 
   /** Fragmentation-gated crawled-table compaction — the closed
     * monitor→actuator loop an epoch chain runs after each
-    * [[snapshotAdmitted]] (the index families' `compactIfFragmented`):
+    * [[snapshotAdmitted]]:
     * one recursive listing, reused as the compactor's before-count.
     * Returns true iff a compaction ran. */
   def compactCrawledIfFragmented(spark: SparkSession, crawledPath: String,

@@ -1,39 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.TextOps
 
-/** Streaming count-min maintenance + frozen-sketch serving — the stream
-  * form of the heavy-hitter tier ([[TextOps.frequentNgrams]] /
+/** Streaming count-min maintenance — the stream form of the heavy-hitter
+  * tier ([[TextOps.frequentNgrams]] /
   * [[graft.Queries.textTopNgramsPerSource]]).
   *
-  * Two production shapes:
-  *
-  *  1. MAINTENANCE ([[counters]]): the ingest stream keeps the corpus
-  *     sketch current. The batch sketch pass is already a declarative
-  *     explode → groupBy((i, b)) count, so the identical lineage runs as
-  *     a Structured Streaming stateful aggregate whose state is exactly
-  *     the depth×width counter grid — BOUNDED at any corpus size, which
-  *     is the whole point of the sketch (a groupBy(gram) stream would
-  *     hold distinct-gram state). Output mode Update/Complete feeds the
-  *     serving store; counts are associative, so the stream's counters
-  *     after any prefix equal the batch sketch over that prefix
-  *     (parity-pinned in SketchStreamSpec).
-  *
-  *  2. SERVING ([[heavyFlag]]): a sketch FROZEN from the accepted corpus
-  *     gates documents in flight — "does this new doc contain a
-  *     candidate corpus-heavy gram?" — as one row-local Column (literal
-  *     lookup maps, no state, no shuffle), the same
-  *     no-false-negatives contract as the batch prefilter: stream-kept
-  *     docs are a superset of the truly-heavy ones, and the periodic
-  *     batch pass removes the overestimate sliver exactly.
+  * The ingest stream keeps the corpus sketch current. The batch sketch
+  * pass is already a declarative explode → groupBy((i, b)) count, so the
+  * identical lineage runs as a Structured Streaming stateful aggregate
+  * whose state is exactly the depth×width counter grid — BOUNDED at any
+  * corpus size, which is the whole point of the sketch (a groupBy(gram)
+  * stream would hold distinct-gram state). Output mode Update/Complete
+  * feeds the serving store; counts are associative, so the stream's
+  * counters after any prefix equal the batch sketch over that prefix
+  * (parity-pinned in SketchStreamSpec).
   */
 object SketchStream {
 
-  /** Counter maintenance over a (possibly streaming) docs frame — see
-    * shape 1 above. State: ≤ depth·width rows. */
+  /** Counter maintenance over a (possibly streaming) docs frame.
+    * State: ≤ depth·width rows. */
   def counters(docs: DataFrame, textCol: String, n: Int = 2,
                depth: Int = 3, width: Int = 2048): DataFrame =
     TextOps.cmSketchCounters(docs, textCol, n, depth, width)
@@ -45,9 +33,4 @@ object SketchStream {
   def countersShared(docs: DataFrame, textCol: String, n: Int = 2,
                      depth: Int = 3, width: Int = 2048): DataFrame =
     TextOps.cmSketchCountersShared(docs, textCol, n, depth, width)
-
-  /** Frozen-sketch ingest gate — see shape 2 above. Row-local. */
-  def heavyFlag(text: Column, maps: Array[Map[Long, Long]], n: Int = 2,
-                width: Int = 2048, minCount: Long = 10): Column =
-    TextOps.cmHeavyFlag(text, maps, n, width, minCount)
 }

@@ -297,7 +297,7 @@ class PlanAuditSpec extends SparkSpec {
   test("modal kernels: only the pre-render id repartition shuffles") {
     // render → decode → detect is one mapPartitions lineage per media
     // arm, fed by ONE tiny id exchange that buys kernel parallelism when
-    // the corpus arrives as few files (TextOps.shingled rationale); any
+    // the corpus arrives as few files (the graft.Par rationale); any
     // exchange beyond one per arm means a kernel stage lost scan-locality
     for ((name, arms, df) <- Seq(
         ("cv_pupil", 1, Queries.cvPupil(spark, dir)),
@@ -574,10 +574,7 @@ class PlanAuditSpec extends SparkSpec {
     for ((name, fx) <- Seq(
         "plantMedia" -> Queries.fixtureFrames("cv_keypoints_pipeline"),
         "plantMediaKeyed" -> Queries.fixtureFrames("mm_image_neardup"),
-        "plantAudioMedia" -> Queries.fixtureFrames("audio_features"),
-        "TextOps.shingled" -> ((s: org.apache.spark.sql.SparkSession,
-            d: String) => graft.operators.TextOps.shingled(
-          Tables.documents(s, d), "doc_id", "text", 3)))) {
+        "plantAudioMedia" -> Queries.fixtureFrames("audio_features"))) {
       val parts = fx(spark, dir).rdd.getNumPartitions
       assert(parts >= spark.sparkContext.defaultParallelism,
         s"$name: render lineage collapsed to $parts partition(s) — " +

@@ -33,10 +33,17 @@ class BpeMergeSpec extends SparkSpec {
       (2L, "and"),
       (3L, ""),
       (4L, "xyz 42!")).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"),
-      TextOps.mergeBpeTokenCount(col("text")).as("n"),
-      TextOps.mergeBpeTokens(col("text")).as("toks")).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[String](2))).toMap
+    // the merged token sequence, built driver-side from the same
+    // pre-tokens and merge rule the column kernel counts
+    def tokens(text: String): Seq[String] = {
+      val m = java.util.regex.Pattern.compile(TextOps.BpeTokenRe).matcher(text)
+      val out = Seq.newBuilder[String]
+      while (m.find()) out ++= BpeMerge.mergeWord(m.group(), ranks)
+      out.result()
+    }
+    val out = df.select(col("doc_id"), col("text"),
+      TextOps.mergeBpeTokenCount(col("text")).as("n")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(2), tokens(r.getString(1)))).toMap
     // " the"=2, " interesting"=1+7, " thing"=[' ',th,in,g]=4 → 14
     assert(out(1L)._1 == 14L)
     assert(out(1L)._2.take(2) == Seq(" ", "the"))

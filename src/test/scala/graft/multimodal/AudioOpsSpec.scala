@@ -127,22 +127,6 @@ class AudioOpsSpec extends SparkSpec {
       (3, 7, 7, 1L, 16L)))
   }
 
-  test("vadSegmentsInline == declarative vadSegments, bit-for-bit") {
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), r.getLong(5))).sortBy(t => (t._1, t._2)).toSeq
-    // the planted speech fixture across varied params, plus the tiny
-    // hand fixtures (incl. a clip that ENDS voiced — the tail-flush law)
-    val speech = AudioOps.plantSpeechMedia(
-      (0L to 25L).toDF("doc_id"), "doc_id")
-    assert(rows(AudioOps.vadSegments(speech)) ==
-      rows(AudioOps.vadSegmentsInline(speech)))
-    val tail = mediaOf(3L, Array(0, 0, 5, 5, 5, 5)) // ends voiced
-    val a = rows(AudioOps.vadSegments(tail, win = 2, threshold = 10L))
-    assert(a == rows(AudioOps.vadSegmentsInline(tail, win = 2, threshold = 10L)))
-    assert(a == Seq((3L, 1, 1, 2, 2L, 100L)))
-  }
-
   test("fft: matches a naive DFT, linearity, and the analytic lines") {
     val rnd = new scala.util.Random(11)
     def naive(x: Array[Double]): (Array[Double], Array[Double]) = {

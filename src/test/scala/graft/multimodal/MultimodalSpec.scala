@@ -28,28 +28,6 @@ class MultimodalSpec extends SparkSpec {
     assert(f == f2)
   }
 
-  test("sampleFrames fans out by stride and keeps metadata") {
-    val frames = MultimodalOps.sampleFrames(media, 2)
-    val byId = frames.groupBy("media_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nf = media.select(col("media_id"), col("meta.n_frames")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    nf.foreach { case (id, n) =>
-      assert(byId(id) == (0 until n by 2).length ||
-        (n == 0 && byId(id) == 1))
-    }
-  }
-
-  test("resizeMeta scales dimensions, preserves bytes untouched") {
-    val r = MultimodalOps.resizeMeta(media, 0.5)
-      .filter(col("media_id") === 2)
-      .select(col("meta.width"), col("bytes")).collect()(0)
-    val orig = media.filter(col("media_id") === 2)
-      .select(col("meta.width"), col("bytes")).collect()(0)
-    assert(r.getInt(0) == (orig.getInt(0) * 0.5).toInt)
-    assert(r.getAs[Array[Byte]](1).sameElements(orig.getAs[Array[Byte]](1)))
-  }
-
   test("resizeHalf: real 2x2 area-average through decode -> re-encode") {
     // gray 4×4 with known blocks: means 20, 100, (60+80+120+140)/4=100, 255
     val g = Array(

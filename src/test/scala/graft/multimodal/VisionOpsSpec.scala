@@ -172,7 +172,8 @@ class VisionOpsSpec extends SparkSpec {
   test("multi-marker detection degrades to single-marker on circles fixtures") {
     // a one-marker scene through the multi path == the single-marker path
     val g = grayFrom(VisionFixtures.renderCircles(2L))
-    val multi = VisionOps.concentricMarkers(g)
+    val multi = VisionOps.concentricMarkersTyped(g, inverted = false)
+      .map(_.marker)
     val single = VisionOps.concentricCircles(g).get
     assert(multi.size == 1 && multi.head == single)
   }

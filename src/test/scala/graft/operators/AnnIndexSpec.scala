@@ -26,12 +26,18 @@ class AnnIndexSpec extends SparkSpec {
   def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"annindex_$tag").toString
 
+  /** The drift gate a maintenance loop runs after an append: the
+    * occupancy monitor's flag decides whether the actuator fires. */
+  def drifted(dir: String, skewThreshold: Double): Boolean =
+    AnnIndexIO.occupancyStats(spark, dir, skewThreshold)
+      .select("recommend_retrain").head().getBoolean(0)
+
   test("quantizer round-trips through typed Parquet exactly") {
     val model = VectorOps.ivfPqTrain(vecs, "vec_id", "embedding",
       nCells = 8).get
     val dir = tmpDir("model")
     AnnIndexIO.saveModel(spark, model, dir)
-    val loaded = AnnIndexIO.loadModel(spark, dir)
+    val loaded = AnnIndexIO.modelFromDF(spark.read.parquet(s"$dir/quantizer"))
     assert(loaded.nCells == model.nCells && loaded.m == model.m &&
       loaded.codebookK == model.codebookK && loaded.subDim == model.subDim)
     assert(loaded.cents.zip(model.cents).forall { case (a, b) => a.sameElements(b) })
@@ -56,7 +62,7 @@ class AnnIndexSpec extends SparkSpec {
     val idxDir = new java.io.File(s"$dir/index")
     assert(idxDir.listFiles().exists(_.getName.startsWith("cid=")),
       "index table not partitioned by cid")
-    val viaIndex = rows(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    val viaIndex = rows(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     assert(viaIndex.nonEmpty && viaIndex == inline)
@@ -84,33 +90,10 @@ class AnnIndexSpec extends SparkSpec {
     assert(loaded.coarse.children.zip(built.get.coarse.children).forall {
       case (ka, kb) => ka.length == kb.length &&
         ka.zip(kb).forall { case (a, b) => a.sameElements(b) } })
-    val viaIndex = rows(AnnIndexIO.searchHier(spark, dir, vecs, "vec_id",
+    val viaIndex = rows(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, probeSupers = 2, nprobe = 4))
     graft.CacheRegistry.releaseAll()
     assert(viaIndex.nonEmpty && viaIndex == inline)
-  }
-
-  test("OPQ build/search over the artifact == inline opqTopK, bit-for-bit") {
-    val qp = col("v_id") < 10
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("n_id"),
-        java.lang.Double.doubleToLongBits(r.getAs[Double]("sim"))))
-      .sortBy(t => (t._1, t._2)).toSeq
-    val inline = rows(VectorOps.opqTopK(vecs, "vec_id", "embedding", qp,
-      k = 3, m = 2, codebookK = 8, altIters = 3))
-    graft.CacheRegistry.releaseAll()
-    val dir = tmpDir("opq")
-    assert(AnnIndexIO.buildOpq(vecs, "vec_id", "embedding", dir,
-      m = 2, codebookK = 8, altIters = 3))
-    // the sidecar records the quantizer family
-    val kindBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_KIND"))
-    assert(new String(kindBytes, "UTF-8").trim == "opq")
-    val served = rows(AnnIndexIO.searchOpq(spark, dir, vecs, "vec_id",
-      "embedding", qp, k = 3))
-    graft.CacheRegistry.releaseAll()
-    assert(served.nonEmpty && served == inline)
   }
 
   test("OPQ×IVF: artifact round-trip, cid-pruned probe scan, exact planted recall") {
@@ -201,7 +184,7 @@ class AnnIndexSpec extends SparkSpec {
     val pqDir = tmpDir("rc_pq"); val opqDir = tmpDir("rc_opq")
     assert(AnnIndexIO.build(corr, "vec_id", "embedding", pqDir,
       nCells = 4, m = 2, codebookK = 4).nonEmpty)
-    val rPq = recallOf(AnnIndexIO.search(spark, pqDir, corr, "vec_id",
+    val rPq = recallOf(AnnIndexIO.searchAuto(spark, pqDir, corr, "vec_id",
       "embedding", qp, k = 3, nprobe = 2, rerank = 6).collect())
     graft.CacheRegistry.releaseAll()
     assert(AnnIndexIO.buildOpqIvf(corr, "vec_id", "embedding", opqDir,
@@ -259,7 +242,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(parts.length <= 3, s"more sid dirs than supers: ${parts.length}")
     // the served scan carries the static probe filters: partition
     // pruning on sid plus the cid row-group pushdown
-    val df = AnnIndexIO.searchHier(spark, dir, vecs, "vec_id", "embedding",
+    val df = AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id", "embedding",
       qp, k = 3, probeSupers = 1, nprobe = 2)
     val plan = df.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*sid".r.findFirstIn(plan).isDefined,
@@ -279,7 +262,7 @@ class AnnIndexSpec extends SparkSpec {
       .sortBy(t => (t._1, t._2)).toSeq
 
     // BELOW: buildAuto(8 cells) must be the flat path, bit-identical to
-    // the explicit build/search
+    // the inline flat composition
     val flatDir = tmpDir("auto_flat")
     assert(AnnIndexIO.buildAuto(vecs, "vec_id", "embedding", flatDir,
       nCells = 8))
@@ -293,10 +276,10 @@ class AnnIndexSpec extends SparkSpec {
     val viaAuto = rows(AnnIndexIO.searchAuto(spark, flatDir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
-    val viaFlat = rows(AnnIndexIO.search(spark, flatDir, vecs, "vec_id",
-      "embedding", qp, k = 3, nprobe = 3))
+    val inline = rows(VectorOps.ivfPqTopK(vecs, "vec_id", "embedding", qp,
+      k = 3, nCells = 8, nprobe = 3))
     graft.CacheRegistry.releaseAll()
-    assert(viaAuto.nonEmpty && viaAuto == viaFlat)
+    assert(viaAuto.nonEmpty && viaAuto == inline)
 
     // AT/ABOVE: a lowered threshold flips the same request to the
     // two-level quantizer with k1 = k2 = ceil(sqrt(nCells)), bit-identical
@@ -350,36 +333,6 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
-  test("hier streaming ingest encode == batch hier encode across splits") {
-    import org.apache.spark.sql.functions.col
-    val v = VectorOps.normalized(vecs, "vec_id", "embedding")
-      .select(col("vec_id").as("v_id"), col("vn"))
-    val model = VectorOps.ivfPqTrainHierNormalized(v, k1 = 3, k2 = 3,
-      m = 8, codebookK = 8, sampleN = 10000).get
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("v_id"), r.getAs[Int]("cid"),
-        r.getSeq[Int](r.fieldIndex("codes")).toList)
-    val batch = VectorOps.ivfPqEncodeHierNormalized(v, model)
-      .collect().map(key).toSet
-    val rows = vecs.as[(Long, Seq[Float])].collect().toSeq
-    for ((splitSize, tag) <- Seq(11 -> "a", rows.length -> "b")) {
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[(Long, Seq[Float])]
-      val name = s"ann_hier_ingest_${tag}_${System.nanoTime()}"
-      val q = AnnIngest.encodeStreamHier(
-          input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          model)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      rows.grouped(splitSize).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      }
-      q.stop()
-      val streamed = spark.table(name).collect().map(key).toSet
-      assert(streamed == batch, s"split $splitSize diverged from batch")
-    }
-  }
-
   test("appendAuto: built-on-half + appended-half == one encode of the union") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"),
@@ -398,7 +351,7 @@ class AnnIndexSpec extends SparkSpec {
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     // reference: the SAME frozen model encoding the whole corpus at once
-    val model = AnnIndexIO.loadModel(spark, dir)
+    val model = AnnIndexIO.modelFromDF(spark.read.parquet(s"$dir/quantizer"))
     val oneShot = rows(VectorOps.ivfPqSearch(model,
       VectorOps.ivfPqEncode(vecs, "vec_id", "embedding", model),
       vecs, "vec_id", "embedding", qp, k = 3, nprobe = 3))
@@ -473,9 +426,8 @@ class AnnIndexSpec extends SparkSpec {
     val thr = 3.0
     val dir = tmpDir("retrain")
     assert(AnnIndexIO.buildAuto(vecs, "vec_id", "embedding", dir, nCells = 8))
-    // healthy index: the drift gate must be a no-op (actuator not fired)
-    assert(!AnnIndexIO.retrainIfDrifted(spark, dir, vecs, "vec_id",
-      "embedding", skewThreshold = thr))
+    // healthy index: the drift gate must not fire the actuator
+    assert(!drifted(dir, thr))
     // drift: one tight off-distribution blob, admitted through the FROZEN
     // quantizer — every member lands in one cell, and the base-fitted
     // codebooks cannot discriminate inside the blob (residual = large
@@ -489,19 +441,19 @@ class AnnIndexSpec extends SparkSpec {
     // one code word)
     val rng = new scala.util.Random(97)
     val off = Array.fill(64)(rng.nextGaussian() * 3)
-    val drifted = Seq.tabulate(500) { i =>
+    val blob = Seq.tabulate(500) { i =>
       (10000L + i, off.map(x => (x + 0.6 * rng.nextGaussian()).toFloat).toSeq)
     }.toDF("vec_id", "embedding")
-    AnnIndexIO.appendAuto(spark, dir, drifted, "vec_id", "embedding")
-    val union = vecs.union(drifted)
+    AnnIndexIO.appendAuto(spark, dir, blob, "vec_id", "embedding")
+    val union = vecs.union(blob)
     val qp = col("v_id") >= 10000L && col("v_id") < 10005L
     def distinctBlobCodes(): Long = spark.read.parquet(s"$dir/index")
       .filter(col("v_id") >= 10000L)
       .select("codes").distinct().count()
     val codesBefore = distinctBlobCodes()
     // the closed loop: monitor trips -> actuator retrains -> swap
-    assert(AnnIndexIO.retrainIfDrifted(spark, dir, union, "vec_id",
-      "embedding", skewThreshold = thr), "drift did not trip the actuator")
+    assert(drifted(dir, thr), "drift did not trip the monitor")
+    assert(AnnIndexIO.retrain(union, "vec_id", "embedding", dir))
     val codesAfter = distinctBlobCodes()
     // code-level heal — the measurable damage drift does and retrain
     // undoes: the frozen books never saw the blob's region, so its 500
@@ -524,7 +476,8 @@ class AnnIndexSpec extends SparkSpec {
     graft.CacheRegistry.releaseAll()
     assert(servedHealed.nonEmpty && servedHealed == servedFresh)
     // retrain preserved the persisted configuration (arity unchanged)
-    assert(AnnIndexIO.loadModel(spark, dir).nCells == 8)
+    assert(AnnIndexIO.modelFromDF(
+      spark.read.parquet(s"$dir/quantizer")).nCells == 8)
   }
 
   test("OPQ drift trips the monitor and HEALS through rebuildOpqIfDrifted") {
@@ -541,22 +494,21 @@ class AnnIndexSpec extends SparkSpec {
     val dir = tmpDir("rebuild_loop")
     assert(AnnIndexIO.buildOpqIvf(vecs, "vec_id", "embedding", dir,
       nCells = 8, m = 2, codebookK = 8, altIters = 3))
-    // healthy index: the drift gate must be a no-op
-    assert(!AnnIndexIO.rebuildOpqIfDrifted(spark, dir, vecs, "vec_id",
-      "embedding", skewThreshold = thr))
+    // healthy index: the drift gate must not fire the valve
+    assert(!drifted(dir, thr))
     // drift: one tight off-distribution blob admitted through the FROZEN
     // rotation + coarse quantizer — every member lands in one cell
     val rng = new scala.util.Random(97)
     val off = Array.fill(64)(rng.nextGaussian() * 3)
-    val drifted = Seq.tabulate(500) { i =>
+    val blob = Seq.tabulate(500) { i =>
       (10000L + i, off.map(x => (x + 0.6 * rng.nextGaussian()).toFloat).toSeq)
     }.toDF("vec_id", "embedding")
-    AnnIndexIO.appendOpq(spark, dir, drifted, "vec_id", "embedding")
-    val union = vecs.union(drifted)
+    AnnIndexIO.appendOpq(spark, dir, blob, "vec_id", "embedding")
+    val union = vecs.union(blob)
     // the closed loop: monitor trips → rebuild re-learns rotation +
     // codebooks + coarse cells from the accumulated corpus → swap
-    assert(AnnIndexIO.rebuildOpqIfDrifted(spark, dir, union, "vec_id",
-      "embedding", skewThreshold = thr), "drift did not trip the valve")
+    assert(drifted(dir, thr), "drift did not trip the monitor")
+    assert(AnnIndexIO.rebuildOpq(union, "vec_id", "embedding", dir))
     // family and operating point survive the loop
     assert(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_KIND")), "UTF-8").trim == "opq_ivf")
@@ -576,16 +528,15 @@ class AnnIndexSpec extends SparkSpec {
     assert(healed.nonEmpty && healed == freshly)
   }
 
-  test("cell-less OPQ: quantization drift trips quantDrift; rebuild resets the baseline") {
-    // the fourth family's GAUGE: no cid to watch, so drift is measured
-    // as RECONSTRUCTION ERROR against the artifact's own build-time
-    // baseline (_QERR) — self-calibrating, unlike a code-share gauge,
-    // which cannot tell drift from genuine concentration (a blob that
-    // IS 80% of the corpus keeps its code share after a perfect
+  test("quantDrift: drift trips the gauge; rebuildOpq resets the baseline") {
+    // drift measured as RECONSTRUCTION ERROR against the artifact's own
+    // build-time baseline (_QERR) — self-calibrating, unlike a code-share
+    // gauge, which cannot tell drift from genuine concentration (a blob
+    // that IS 80% of the corpus keeps its code share after a perfect
     // rebuild; its reconstruction error does not stay high)
     val dir = tmpDir("quant_drift")
-    assert(AnnIndexIO.buildOpq(vecs, "vec_id", "embedding", dir,
-      m = 2, codebookK = 8, altIters = 3))
+    assert(AnnIndexIO.buildOpqIvf(vecs, "vec_id", "embedding", dir,
+      nCells = 8, m = 2, codebookK = 8, altIters = 3))
     val healthy = AnnIndexIO.quantDrift(spark, dir, vecs, "vec_id",
       "embedding").head()
     // gauge sample == training sample here (both cover the whole toy
@@ -597,11 +548,11 @@ class AnnIndexSpec extends SparkSpec {
     // rotation/books — a region the books never saw reconstructs badly
     val rng = new scala.util.Random(97)
     val off = Array.fill(64)(rng.nextGaussian() * 3)
-    val drifted = Seq.tabulate(500) { i =>
+    val blob = Seq.tabulate(500) { i =>
       (10000L + i, off.map(x => (x + 0.6 * rng.nextGaussian()).toFloat).toSeq)
     }.toDF("vec_id", "embedding")
-    AnnIndexIO.appendOpq(spark, dir, drifted, "vec_id", "embedding")
-    val union = vecs.union(drifted)
+    AnnIndexIO.appendOpq(spark, dir, blob, "vec_id", "embedding")
+    val union = vecs.union(blob)
     val after = AnnIndexIO.quantDrift(spark, dir, union, "vec_id",
       "embedding").head()
     assert(after.getAs[Boolean]("recommend_rebuild") &&
@@ -609,16 +560,12 @@ class AnnIndexSpec extends SparkSpec {
       s"drift not flagged: $after")
     // the closed loop: gauge trips → rebuild re-learns rotation + books
     // where the mass now is → the minted baseline reads healthy again
-    assert(AnnIndexIO.rebuildOpqIfQuantDrifted(spark, dir, union,
-      "vec_id", "embedding"), "drift did not trip the valve")
+    assert(AnnIndexIO.rebuildOpq(union, "vec_id", "embedding", dir))
     val healed = AnnIndexIO.quantDrift(spark, dir, union, "vec_id",
       "embedding").head()
     assert(!healed.getAs[Boolean]("recommend_rebuild") &&
       math.abs(healed.getAs[Double]("ratio") - 1.0) < 1e-9,
       s"rebuild did not reset the gauge: $healed")
-    // a healthy index is a no-op for the gated loop
-    assert(!AnnIndexIO.rebuildOpqIfQuantDrifted(spark, dir, union,
-      "vec_id", "embedding"))
   }
 
   test("compact: files collapse, search and occupancy bit-invisible, both layouts") {
@@ -638,16 +585,14 @@ class AnnIndexSpec extends SparkSpec {
           vecs.filter(col("vec_id") >= 60 && col("vec_id") % 3 === b),
           "vec_id", "embedding")
       }
-      // fresh build cap: under it the gate is a no-op only when healthy —
-      // the chain is NOT, so it fires
       val before = key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
         "embedding", qp, k = 3, nprobe = 4, probeSupers = 2))
       graft.CacheRegistry.releaseAll()
       val occBefore = AnnIndexIO.occupancyStats(spark, dir).head().toString
-      assert(AnnIndexIO.compactIfFragmented(spark, dir, maxFiles = cap,
-        targetPartitions = 4), s"$tag: chain did not trip the gate")
-      assert(!AnnIndexIO.compactIfFragmented(spark, dir, maxFiles = cap),
-        s"$tag: gate re-fired on a compacted index")
+      val (filesBefore, filesAfter) =
+        AnnIndexIO.compact(spark, dir, targetPartitions = 4)
+      assert(filesAfter < filesBefore && filesAfter <= cap,
+        s"$tag: files did not collapse ($filesBefore -> $filesAfter)")
       // layout family preserved: hier keeps sid dirs, flat keeps cid dirs
       val dirs = new java.io.File(s"$dir/index").listFiles().map(_.getName)
       assert(dirs.exists(_.startsWith(if (tag == "hier") "sid=" else "cid=")),
@@ -807,7 +752,7 @@ class AnnIndexSpec extends SparkSpec {
     val qp = col("v_id") < 10
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toString).sorted.toSeq
-    val before = key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    val before = key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     // simulate retrain's crash window: live retired to _prev, the
@@ -824,7 +769,7 @@ class AnnIndexSpec extends SparkSpec {
     // re-create the window; the next maintenance entry also recovers
     assert(live.renameTo(prev) && !live.exists())
     assert(AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir))
-    val after = key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    val after = key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     // same corpus, same persisted configuration ⇒ same served answer
@@ -863,7 +808,7 @@ class AnnIndexSpec extends SparkSpec {
     val qp = col("v_id") < 10
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toString).sorted.toSeq
-    val before = key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    val before = key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     val live = new java.io.File(dir, "index")
@@ -872,7 +817,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(live.renameTo(prev) && !live.exists(), "could not strand")
     // 1. a SERVING read during the window heals the table root
     strand()
-    assert(key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    assert(key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3)) == before)
     graft.CacheRegistry.releaseAll()
     // 2. an append during the window must extend the REAL table
@@ -885,7 +830,7 @@ class AnnIndexSpec extends SparkSpec {
     val occ = AnnIndexIO.occupancyStats(spark, dir).head()
     assert(occ.getAs[Long]("n_rows") == 120L,
       s"gauge lost rows through the window: $occ")
-    val appended = key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    val appended = key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3))
     graft.CacheRegistry.releaseAll()
     // 4. compact itself heals before its layout sniff, and the rewrite
@@ -893,19 +838,7 @@ class AnnIndexSpec extends SparkSpec {
     strand()
     val (b, a) = AnnIndexIO.compact(spark, dir, targetPartitions = 1)
     assert(a <= b && !prev.exists())
-    assert(key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
-      "embedding", qp, k = 3, nprobe = 3)) == appended)
-    graft.CacheRegistry.releaseAll()
-    // 5. the fragmentation-GATED wrapper heals even when the gate does
-    // not trip: a stranded live dir lists 0 files (reads "healthy"), so
-    // without an up-front recover a gated-only maintenance loop would
-    // report false forever while the corpus stays under _prev
-    strand()
-    assert(!AnnIndexIO.compactIfFragmented(spark, dir,
-      maxFiles = 1000000), "gate tripped on a 1-partition table")
-    assert(!prev.exists(),
-      "gated wrapper returned without healing the crash window")
-    assert(key(AnnIndexIO.search(spark, dir, vecs, "vec_id",
+    assert(key(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 3)) == appended)
     graft.CacheRegistry.releaseAll()
   }
@@ -923,8 +856,8 @@ class AnnIndexSpec extends SparkSpec {
       (i.toLong, basis(i).map(_.toFloat).toSeq)
     }.toDF("vec_id", "embedding")
     val dir = tmpDir("qd_zero")
-    assert(AnnIndexIO.buildOpq(tiny, "vec_id", "embedding", dir,
-      m = 2, codebookK = 8, altIters = 3))
+    assert(AnnIndexIO.buildOpqIvf(tiny, "vec_id", "embedding", dir,
+      nCells = 2, m = 2, codebookK = 8, altIters = 3))
     // a near-duplicate admission (1e-6 off basis(0)) makes the gauge
     // sample's MSE tiny-but-NONZERO — exactly the state whose ratio
     // blows up against a zero baseline
@@ -938,8 +871,5 @@ class AnnIndexSpec extends SparkSpec {
       s"scenario not realized — baseline should memorize: $g")
     assert(!g.getAs[Boolean]("recommend_rebuild"),
       s"zero-baseline false alarm: $g")
-    assert(!AnnIndexIO.rebuildOpqIfQuantDrifted(spark, dir,
-      tiny.union(eps), "vec_id", "embedding"),
-      "memorizing quantizer tripped the rebuild valve")
   }
 }

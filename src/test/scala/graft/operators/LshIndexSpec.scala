@@ -145,23 +145,6 @@ class LshIndexSpec extends SparkSpec {
     assert(LshIndexIO.stats(spark, dir).head().toString == statsBefore)
   }
 
-  test("compactIfFragmented: no-op on a fresh build, fires past the cap") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh_cif").toString
-    LshIndexIO.build(docs.filter("doc_id in (0, 1, 2, 3)"), "doc_id",
-      "text", dir)
-    // a fresh build sits under any sane cap: the gate must not rewrite
-    assert(!LshIndexIO.compactIfFragmented(spark, dir, maxFiles = 12))
-    (4 to 6).foreach { i =>
-      LshIndexIO.append(docs.filter(s"doc_id = ${i % 6}"), "doc_id",
-        "text", dir)
-    }
-    // 3 appends × 4 band dirs push past 12 files: the gate fires and
-    // the rewrite lands under the cap again
-    assert(LshIndexIO.compactIfFragmented(spark, dir, maxFiles = 12,
-      targetPartitions = 4))
-    assert(!LshIndexIO.compactIfFragmented(spark, dir, maxFiles = 12))
-  }
-
   test("reshingle == from-scratch build at the new k, frame-identical") {
     def bandKey(df: DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc"), r.getAs[Int]("band_id"),

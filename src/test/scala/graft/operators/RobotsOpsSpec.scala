@@ -273,25 +273,4 @@ class RobotsOpsSpec extends SparkSpec {
       ("a.com", "https://a.com/see-sitemapindex-docs", false),
       ("b.com", "https://b.com/sm1.xml", true)), s"got $out")
   }
-
-  test("sitemapUrlsBin: gzip bodies inflate, plain bytes pass, corrupt drops") {
-    val urlset =
-      """<urlset><url><loc>https://g.com/p1</loc></url></urlset>"""
-    def gz(s: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(s.getBytes("UTF-8")); g.close()
-      bos.toByteArray
-    }
-    val rows = Seq(
-      ("g.com", gz(urlset)),                        // .xml.gz body
-      ("p.com", urlset.getBytes("UTF-8")),          // plain .xml body
-      ("x.com", Array[Byte](0x1f, 0x8b.toByte, 9, 9, 9))) // corrupt gzip
-      .toDF("host", "body")
-    val out = RobotsOps.sitemapUrlsBin(rows, "host", "body")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(out == Set(
-      ("g.com", "https://g.com/p1"),
-      ("p.com", "https://g.com/p1")), s"got $out")
-  }
 }

@@ -9,23 +9,29 @@ class SampleOpsSpec extends SparkSpec {
   private val docs = (0L until 2000L).map(i =>
     (i, if (i % 4 == 0) "de" else "en")).toDF("id", "lang")
 
+  /** Deterministic Bernoulli sample: the keep rule every sampler here
+    * shares, hash60(salt ++ id) < threshold(rate). */
+  private def bernoulli(df: org.apache.spark.sql.DataFrame, idCol: String,
+                        rate: Double, salt: String = "graft") =
+    df.filter(SampleOps.hash60(col(idCol), salt) < SampleOps.threshold(rate))
+
   test("bernoulli is deterministic, rate-accurate, and a pure subset") {
-    val s1 = SampleOps.bernoulli(docs, "id", 0.3, "s1").select("id").as[Long].collect().toSet
-    val s2 = SampleOps.bernoulli(docs, "id", 0.3, "s1").select("id").as[Long].collect().toSet
+    val s1 = bernoulli(docs, "id", 0.3, "s1").select("id").as[Long].collect().toSet
+    val s2 = bernoulli(docs, "id", 0.3, "s1").select("id").as[Long].collect().toSet
     assert(s1 == s2)
     // md5 uniformity: 2000 draws at p=0.3 → ±5σ ≈ ±102
     assert(math.abs(s1.size - 600) < 110, s"got ${s1.size}")
     // a higher rate with the same salt is a superset (threshold semantics)
-    val s3 = SampleOps.bernoulli(docs, "id", 0.5, "s1").select("id").as[Long].collect().toSet
+    val s3 = bernoulli(docs, "id", 0.5, "s1").select("id").as[Long].collect().toSet
     assert(s1.subsetOf(s3))
     // different salt decorrelates
-    val s4 = SampleOps.bernoulli(docs, "id", 0.3, "other").select("id").as[Long].collect().toSet
+    val s4 = bernoulli(docs, "id", 0.3, "other").select("id").as[Long].collect().toSet
     assert(s4 != s1)
   }
 
   test("rate 0 and 1 are exact") {
-    assert(SampleOps.bernoulli(docs, "id", 0.0).count() == 0)
-    assert(SampleOps.bernoulli(docs, "id", 1.0).count() == 2000)
+    assert(bernoulli(docs, "id", 0.0).count() == 0)
+    assert(bernoulli(docs, "id", 1.0).count() == 2000)
   }
 
   test("stratified applies per-stratum rates") {
@@ -35,7 +41,7 @@ class SampleOpsSpec extends SparkSpec {
     assert(byLang("de") == 500) // default rate 1.0 keeps all
     assert(math.abs(byLang("en") - 300) < 100) // 1500 × 0.2 ± 5σ
     // per-stratum selection must equal the bernoulli of that stratum alone
-    val enOnly = SampleOps.bernoulli(docs.filter($"lang" === "en"), "id", 0.2, "s9")
+    val enOnly = bernoulli(docs.filter($"lang" === "en"), "id", 0.2, "s9")
       .select("id").as[Long].collect().toSet
     assert(out.filter($"lang" === "en").select("id").as[Long].collect().toSet == enOnly)
   }
@@ -113,7 +119,7 @@ class SampleOpsSpec extends SparkSpec {
     // 1500 × 0.577 ≈ 866 ± 5σ ≈ ±96
     assert(math.abs(byLang("en") - 866) < 100, s"got ${byLang("en")}")
     // the en selection equals a bernoulli at the derived rate (same salt)
-    val enOnly = SampleOps.bernoulli(docs.filter($"lang" === "en"), "id",
+    val enOnly = bernoulli(docs.filter($"lang" === "en"), "id",
       math.sqrt(500.0 / 1500.0), "mt").select("id").as[Long].collect().toSet
     assert(out.filter($"lang" === "en").select("id").as[Long].collect().toSet
       == enOnly)

@@ -45,6 +45,13 @@ class TextVectorOpsSpec extends SparkSpec {
         TextHash.shingle_hash60(col("text"), 3, HashMod).as("hv"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native == declar)
+    // the declarative signature: for hash i, the min over shingles of
+    // (a_i·h + b_i) mod M
+    def minhashSignature(hashArr: org.apache.spark.sql.Column,
+                         numHashes: Int): org.apache.spark.sql.Column =
+      array((0 until numHashes).map(i =>
+        array_min(transform(hashArr, h =>
+          pmod(h * MinhashA(i) + MinhashB(i), lit(HashMod))))): _*)
     val hvDf = tricky.select(col("doc_id"),
       TextHash.shingle_hash60(col("text"), 3, HashMod).as("hv"))
       .filter(size(col("hv")) > 0)
@@ -692,37 +699,6 @@ class TextVectorOpsSpec extends SparkSpec {
     // deterministic refit
     val (rot2, _) = VectorOps.opqTrain(sample, m = 2, k = 8, altIters = 8)
     assert(rot.zip(rot2).forall { case (a, b) => a.sameElements(b) })
-  }
-
-  test("opqTopK at altIters=0 == pqTopK bit-for-bit; rotated path sane") {
-    val rng = new scala.util.Random(73)
-    val centers = Array.fill(4)(Array.fill(16)(rng.nextGaussian() * 2))
-    val vecs = (0 until 120).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.map(x => (x + rng.nextGaussian() * 0.1).toFloat))
-    }.toDF("vec_id", "embedding")
-    val qp = col("v_id") < 6
-    val pq = VectorOps.pqTopK(vecs, "vec_id", "embedding", qp,
-      k = 3, m = 2, codebookK = 8).collect().map(_.toSeq).toSet
-    graft.CacheRegistry.releaseAll()
-    val opq0 = VectorOps.opqTopK(vecs, "vec_id", "embedding", qp,
-      k = 3, m = 2, codebookK = 8, altIters = 0).collect()
-      .map(_.toSeq).toSet
-    graft.CacheRegistry.releaseAll()
-    assert(opq0 == pq, "identity-rotation OPQ must equal plain PQ")
-    // learned rotation: valid ranked output, deterministic
-    val opq = VectorOps.opqTopK(vecs, "vec_id", "embedding", qp,
-      k = 3, m = 2, codebookK = 8, altIters = 4).collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("n_id"))).toSet
-    graft.CacheRegistry.releaseAll()
-    val opq2 = VectorOps.opqTopK(vecs, "vec_id", "embedding", qp,
-      k = 3, m = 2, codebookK = 8, altIters = 4).collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rank"),
-        r.getAs[Long]("n_id"))).toSet
-    graft.CacheRegistry.releaseAll()
-    assert(opq.nonEmpty && opq == opq2)
-    assert(opq.groupBy(_._1).forall(_._2.size == 3))
   }
 
   test("semDedup hot-cell cap: bounded pairs, documented recall miss") {

@@ -54,26 +54,4 @@ class MediaStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
     assert(got == want && got.size == ids.size)
   }
-
-  test("VAD at ingest: inline segments stream == batch, stateless") {
-    // the row-local twin (vadSegmentsInline) is the stream shape — the
-    // declarative form's window functions are not stream-legal, which
-    // is exactly why the twin exists
-    val op = (df: DataFrame) =>
-      AudioOps.vadSegmentsInline(AudioOps.plantSpeechMedia(df, "doc_id"))
-    val got = streamed("media_vad", op)
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), r.getLong(5))).sortBy(t => (t._1, t._2))
-    val want = op(ids.toDF("doc_id")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), r.getLong(5))).toSeq.sortBy(t => (t._1, t._2))
-    assert(got == want && got.nonEmpty)
-    // and the stream rows equal the DECLARATIVE batch segmentation too
-    val decl = AudioOps.vadSegments(
-        AudioOps.plantSpeechMedia(ids.toDF("doc_id"), "doc_id"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getLong(4), r.getLong(5))).toSeq.sortBy(t => (t._1, t._2))
-    assert(got == decl)
-  }
 }

@@ -8,13 +8,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.DataFrame
 
 object RestartRecoverySpec {
-  /** foreachBatch target keyed by batchId: a re-delivered batch after
-    * restart OVERWRITES its slot instead of double-counting — the
-    * downstream contract foreachBatch consumers carry anyway. */
-  val drained: mutable.Map[Long, Seq[(Long, Long, Double)]] =
-    mutable.Map.empty
-  /** Generic row drain for the pack/binocular restart tests, keyed
-    * (test, batchId). */
+  /** foreachBatch target keyed by (test, batchId): a re-delivered
+    * batch after restart OVERWRITES its slot instead of double-counting
+    * — the downstream contract foreachBatch consumers carry anyway. */
   val drainedRows: mutable.Map[(String, Long), Seq[String]] =
     mutable.Map.empty
 }
@@ -74,58 +70,6 @@ class RestartRecoverySpec extends SparkSpec {
     spark.catalog.dropTempView("cm_restart")
   }
 
-  test("dedup candidate state recovers: cross-restart pairs still found") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs: Seq[(Long, String)] = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog today"),
-      (2L, "the quick brown fox jumps over the lazy dog tonight"),
-      (3L, "completely different words appear here without overlap whatsoever"),
-      (4L, "the quick brown fox jumps over the lazy dog today"),
-      (5L, "unrelated tokens that no other document shares at all"),
-      (6L, "the quick brown fox jumps over that lazy dog today"))
-    val cp = tmp()
-    RestartRecoverySpec.drained.clear()
-    val input = MemoryStream[(Long, String)]
-    def start() = DedupStream.candidatesStream(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[DedupStream.CandPair],
-                       batchId: Long) =>
-        RestartRecoverySpec.drained.synchronized {
-          RestartRecoverySpec.drained(batchId) = batch.collect()
-            .map(p => (p.doc_a, p.doc_b, p.est_jaccard)).toSeq
-        }
-      }
-      .outputMode("append").start()
-
-    // phase 1: docs 1-3 accepted into buckets, then the query dies
-    val q1 = start()
-    input.addData(docs.take(3))
-    q1.processAllAvailable()
-    q1.stop()
-    // phase 2: docs 4-6 arrive AFTER the restart; their duplicates are
-    // all in phase 1, so every emitted pair crosses the restart
-    val q2 = start()
-    input.addData(docs.drop(3))
-    q2.processAllAvailable()
-    q2.stop()
-
-    val streamed = RestartRecoverySpec.drained.synchronized {
-      RestartRecoverySpec.drained.values.flatten.toSet
-    }
-    val batch = TextOps.minhashLshPairs(
-        docs.toDF("doc_id", "text"), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    graft.CacheRegistry.releaseAll()
-    assert(streamed == batch,
-      s"restarted dedup stream diverged: got $streamed want $batch")
-    // the planted exact dup (1,4) spans the restart — only reachable if
-    // doc 1's bucket membership survived the state-store round-trip
-    assert(streamed.exists(p => (p._1, p._2) == ((1L, 4L))),
-      "cross-restart pair missing: bucket state did not recover")
-  }
-
   /** foreachBatch sink into [[RestartRecoverySpec.drainedRows]] under
     * `test` (rows stringified — schema-agnostic). */
   private def rowSink[T](test: String)(
@@ -141,37 +85,6 @@ class RestartRecoverySpec extends SparkSpec {
         case ((t, _), rows) if t == test => rows
       }.flatten.toSeq
     }
-
-  test("pack shard offsets recover: chunks after restart continue mid-shard") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = (0 until 40).map { i =>
-      PackDoc(i.toLong, ("word" + i + " ") * (5 + (i * 7) % 23))
-    }
-    val cp = tmp()
-    val input = MemoryStream[PackDoc]
-    def start() = PackStream.packChunksStream(input.toDF(), "doc_id", "text",
-        contextTokens = 64, numShards = 4)
-      .writeStream.option("checkpointLocation", cp)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       id: Long) => rowSink("pack")(b, id) }
-      .outputMode("append").start()
-
-    val q1 = start()
-    input.addData(docs.take(20))
-    q1.processAllAvailable()
-    q1.stop() // each shard's running token offset lives in the state store
-    val q2 = start()
-    input.addData(docs.drop(20))
-    q2.processAllAvailable()
-    q2.stop()
-
-    val want = graft.operators.SampleOps.packChunks(docs.toDF(), "doc_id",
-        "text", contextTokens = 64, numShards = 4)
-      .collect().map(_.toString).sorted.toSeq
-    val got = drainedOf("pack").sorted
-    assert(got == want,
-      "restarted packing diverged from batch: shard offsets did not recover")
-  }
 
   test("binocular FSM queues recover: a pair split across the restart merges") {
     implicit val sqlCtx = spark.sqlContext

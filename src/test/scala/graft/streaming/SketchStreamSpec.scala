@@ -69,31 +69,4 @@ class SketchStreamSpec extends SparkSpec {
       .map(t => math.max(0, t - (n - 1))).sum
     assert(streamed.values.sum == depth.toLong * grams)
   }
-
-  test("frozen sketch gates a stream row-locally == batch prefilter") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = docs.toDF("doc_id", "text")
-    val maps = TextOps.cmSketchMaps(
-      TextOps.cmSketchCounters(corpus, "text", n, depth, width), depth)
-    val minCount = 10L
-    // batch truth: docs whose any bigram estimate clears the gate
-    val want = corpus
-      .filter(TextOps.cmHeavyFlag(col("text"), maps, n, width, minCount))
-      .select("doc_id").as[Long].collect().toSet
-    assert(want == docs.collect { case (i, _) if i % 3 == 0 => i }.toSet,
-      "fixture: exactly the planted heavy-gram docs should flag")
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDS().toDF("doc_id", "text")
-      .filter(SketchStream.heavyFlag(col("text"), maps, n, width, minCount))
-      .select("doc_id")
-      .writeStream.format("memory").queryName("cm_gate")
-      .outputMode("append").start()
-    input.addData(docs.take(31))
-    q.processAllAvailable()
-    input.addData(docs.drop(31))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("cm_gate").as[Long].collect().toSet
-    assert(got == want, "stream gate diverged from the batch prefilter")
-  }
 }

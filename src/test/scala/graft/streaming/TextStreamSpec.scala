@@ -146,42 +146,6 @@ class TextStreamSpec extends SparkSpec {
       !got.exists(_._1 == 7L))
   }
 
-  test("logreg classify-at-ingest: frozen model over stream == batch") {
-    // batch-train once, freeze (mu, sd, w), serve at the ingest edge —
-    // standardize + sigmoid is a pure row-local projection, zero state
-    val m = TextOps.logregFit(docs.toDF(), "doc_id", "text",
-      isTrain = col("doc_id") % 2 === 0,
-      label = TextOps.qualityCol(col("text")) >= 0.8)
-    graft.CacheRegistry.releaseAll()
-    val op = (df: DataFrame) =>
-      TextOps.logregApplyFrozen(df, "doc_id", "text", m)
-    val got = streamed("logreg_stream", op)
-      .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2)))
-    val want = op(docs.toDF()).orderBy("doc").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSeq
-    assert(got == want && got.size == docs.size)
-  }
-
-  test("centroid classify-at-ingest: frozen apply over stream == batch") {
-    // batch-train once, freeze the 6 centroid doubles, serve them at the
-    // ingest edge — pure row-local projection, zero state operators
-    val isTrain = col("doc_id") % 2 === 0
-    val label = TextOps.qualityCol(col("text")) >= 0.8
-    val c = TextOps.centroidFit(docs.toDF(), "doc_id", "text", isTrain, label)
-      .collect()(0)
-    val pos = Seq(c.getDouble(0), c.getDouble(1), c.getDouble(2))
-    val neg = Seq(c.getDouble(3), c.getDouble(4), c.getDouble(5))
-    val op = (df: DataFrame) =>
-      TextOps.centroidApplyFrozen(df, "doc_id", "text", pos, neg)
-    val got = streamed("centroid_stream", op)
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getDouble(2)))
-    val want = TextOps.centroidClassifier(docs.toDF(), "doc_id", "text",
-        isTrain, label)
-      .orderBy("doc").collect().toSeq
-      .map(r => (r.getLong(0), r.getBoolean(2), r.getDouble(3)))
-    assert(got == want)
-  }
-
   test("html extract at ingest: stream == batch, stateless") {
     // the WET path's extraction stage is pure row-local column logic —
     // it must ride a readStream unchanged, growing zero state operators
