@@ -590,8 +590,7 @@ object Queries {
     * stream (r15 verdict #3): the model is FITTED IN BATCH from the
     * calibration slice (the reference persists `map_params` and replays
     * it over the session), then pupils arrive as a `readStream` and the
-    * broadcast model table maps each micro-batch append-mode — the
-    * model-apply analogue of the LmStream score-at-ingest shape. The
+    * broadcast model table maps each micro-batch append-mode. The
     * mapping join is STATELESS (stream–static broadcast join + the
     * data-driven TPS columns): no state store rows, no watermark, so a
     * 100 TB/day pupil firehose maps with per-batch cost only.
@@ -4363,8 +4362,8 @@ object Queries {
     * query derives the gate the same way: [[AsOfJoin.cadenceGate]] over
     * the UNION of both matched streams (purchase+error = the two "eyes"),
     * `multiplier` × the pooled median inter-sample interval per user,
-    * then runs the same triple as-of against it. `exact = true` so the
-    * DuckDB replay (`median` = the same interpolating quantile) derives
+    * then runs the same triple as-of against it. The gate's median is
+    * exact, so the DuckDB replay (`median` = the same interpolating quantile) derives
     * the bit-identical gate — the derived value itself ships as a
     * `gate` output column, so the oracle attests the derivation, not
     * just the filter. Multiplier 1.0 (vs the helper's reference-shaped
@@ -4385,7 +4384,7 @@ object Queries {
     val pupils = a.select(col("user_id"), col("t"))
       .unionAll(b.select(col("user_id"), col("t")))
     val gate = AsOfJoin.cadenceGate(pupils, "t", Seq("user_id"),
-      multiplier = j3CadenceMultiplier, exact = true)
+      multiplier = j3CadenceMultiplier)
       .getOrElse(Double.PositiveInfinity)
     AsOfJoin.triple(refs, a, b, "t", "t", "t", Seq("user_id"),
         maxDispersion = gate)
@@ -4442,7 +4441,7 @@ object Queries {
     val pupils = eyeA.select(lit(0).as("eye"), col("t"))
       .unionAll(eyeB.select(lit(1).as("eye"), col("t")))
     val gate = AsOfJoin.cadenceGatePerKey(pupils, "t", Seq("eye"),
-      multiplier = 8.0, exact = true)
+      multiplier = 8.0)
       .getOrElse(Double.PositiveInfinity)
     AsOfJoin.triple(refs, eyeA, eyeB, "t", "t", "t", Seq("g"),
         maxDispersion = gate)

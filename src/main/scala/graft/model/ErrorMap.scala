@@ -2,7 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.operators.AsOfJoin
 
@@ -11,12 +11,13 @@ import graft.operators.AsOfJoin
   * in three forms:
   *
   *  - [[summary]]: one session's summary row, the pipelines' error stage.
-  *    Match → reduce → per-point error → occupied gaze-histogram cells →
-  *    the model work run in one Spark task over the session's arrays
-  *    ([[SessionPoints]]); the vres×hres grid is never built, because
+  *    Match → reduce ([[SessionPoints]]) → per-point error → occupied
+  *    gaze-histogram cells → the model work, run in one Spark task over
+  *    the session's arrays; the vres×hres grid is never built, because
   *    empty cells carry no gaze weight.
-  *  - [[summaryBySession]]: the same summary per session over a corpus,
-  *    keyed by session (cogroup of reduced points and occupied cells).
+  *  - [[summaryBySession]]: the same per-session work, once per session
+  *    of a corpus: markers and gaze cogrouped by session, one task per
+  *    session ([[SessionPoints.bySession]]).
   *  - [[compute]]: the distributed reference form that also returns the
   *    points and the full grid: matching (as-of join), per-point error
   *    (arithmetic), the grid evaluation (sequence crossJoin + the TPS
@@ -194,29 +195,8 @@ object ErrorMap {
       s"summary is single-session; Config.matchKeys (${cfg.matchKeys.mkString(",")}) " +
         "would be ignored")
     val points = SessionPoints(markers, cfg.minPupilConfidence, cfg.clusterReduce)
-    val ppd = pixelsPerDegree(cfg)
-    val (iw, ih) = cfg.imageResolution
-    val (vres, hres) = cfg.resolution
     SessionPoints.rightColumns(gaze).coalesce(1).mapPartitions { it =>
-      val rows = it.toArray
-      val pts = points(rows).map { p =>
-        val exPix = (p.getDouble(3) - p.getDouble(1)) * iw
-        val eyPix = (p.getDouble(4) - p.getDouble(2)) * ih
-        (p.getDouble(1), p.getDouble(2), math.sqrt(exPix * exPix + eyPix * eyPix) / ppd)
-      }
-      // occupied histogram cells, the [[compute]] step-7 binning
-      val counts = new Array[Long](vres * hres)
-      rows.foreach { r =>
-        if (!r.isNullAt(1) && !r.isNullAt(2)) {
-          val (x, y) = (r.getDouble(1), r.getDouble(2))
-          if (x >= 0 && x <= 1 && y >= 0 && y <= 1)
-            counts(math.min(math.floor(y * vres).toInt, vres - 1) * hres +
-              math.min(math.floor(x * hres).toInt, hres - 1)) += 1
-        }
-      }
-      val cells = counts.indices.iterator.filter(counts(_) > 0)
-        .map(i => ((i % hres).toLong, (i / hres).toLong, counts(i)))
-      sessionSummary(pts, cells, cfg) match {
+      sessionError(points, it.toArray, cfg) match {
         case Left(n) =>
           throw new IllegalArgumentException(
             s"requirement failed: Too few points to compute error across visual field ($n)")
@@ -235,18 +215,46 @@ object ErrorMap {
 
   /** One session's summary; the weighted fields are None when they are
     * undefined (no in-frame gaze, or none inside the hull). */
-  private final case class SessionSummary(nPoints: Int, errMedian: Double,
-                                          errMean: Double, weighted: Option[Double],
-                                          excluded: Option[Double])
+  private[model] final case class SessionSummary(
+      nPoints: Int, errMedian: Double, errMean: Double,
+      weighted: Option[Double], excluded: Option[Double])
 
-  /** The per-session model work of [[summary]] and [[summaryBySession]]:
-    * outlier cut → TPS LOO-CV fit of the error surface → convex hull →
-    * gaze-weighted sums over the occupied histogram cells. `points` are
-    * (mx, my, err_deg), `cells` (ix, iy, gaze count). Left: the number of
-    * kept points when it is below 4. */
-  private def sessionSummary(points: Array[(Double, Double, Double)],
-                             cells: Iterator[(Long, Long, Long)],
-                             cfg: Config): Either[Int, SessionSummary] = {
+  /** One session's summary, shared by [[summary]] and [[summaryBySession]]:
+    * the session's points ([[SessionPoints]] over its gaze rows, in
+    * [[SessionPoints.rightColumns]] order) → per-point angular error →
+    * the occupied gaze-histogram cells (the [[compute]] step-7 binning)
+    * → [[sessionSummary]]. */
+  private def sessionError(points: SessionPoints, gaze: Array[Row],
+                           cfg: Config): Either[Int, SessionSummary] = {
+    val ppd = pixelsPerDegree(cfg)
+    val (iw, ih) = cfg.imageResolution
+    val (vres, hres) = cfg.resolution
+    val pts = points(gaze).map { p =>
+      val exPix = (p.getDouble(3) - p.getDouble(1)) * iw
+      val eyPix = (p.getDouble(4) - p.getDouble(2)) * ih
+      (p.getDouble(1), p.getDouble(2), math.sqrt(exPix * exPix + eyPix * eyPix) / ppd)
+    }
+    val counts = new Array[Long](vres * hres)
+    gaze.foreach { r =>
+      if (!r.isNullAt(1) && !r.isNullAt(2)) {
+        val (x, y) = (r.getDouble(1), r.getDouble(2))
+        if (x >= 0 && x <= 1 && y >= 0 && y <= 1)
+          counts(math.min(math.floor(y * vres).toInt, vres - 1) * hres +
+            math.min(math.floor(x * hres).toInt, hres - 1)) += 1
+      }
+    }
+    sessionSummary(pts, counts.indices.iterator.filter(counts(_) > 0)
+      .map(i => ((i % hres).toLong, (i / hres).toLong, counts(i))), cfg)
+  }
+
+  /** The per-session model work of [[sessionError]]: outlier cut → TPS
+    * LOO-CV fit of the error surface → convex hull → gaze-weighted sums
+    * over the occupied histogram cells. `points` are (mx, my, err_deg),
+    * `cells` (ix, iy, gaze count). Left: the number of kept points when
+    * it is below 4. */
+  private[model] def sessionSummary(points: Array[(Double, Double, Double)],
+                                    cells: Iterator[(Long, Long, Long)],
+                                    cfg: Config): Either[Int, SessionSummary] = {
     val (vres, hres) = cfg.resolution
     // deterministic fit-input order (shuffle-independent), the
     // SessionCalibrator discipline
@@ -302,20 +310,21 @@ object ErrorMap {
     *
     * [[compute]] is single-session by contract: its outlier stats, TPS
     * fit, and hull run on the driver, so "one compute per session" is a
-    * driver loop — the anti-pattern at 10⁵ sessions. This form keeps
-    * every step keyed by session: the nearest match and cluster
-    * reduction shuffle once on the session key, and the per-session
-    * model work (outlier cut → TPS LOO-CV fit → hull → weighted
-    * summary) runs inside a COGROUP of the session's reduced points
-    * (≤10² rows) with its OCCUPIED gaze-histogram cells — the vres×hres
+    * driver loop — the anti-pattern at 10⁵ sessions. This form groups the
+    * markers and the gaze by session (one cogroup, [[SessionPoints.bySession]])
+    * and runs [[summary]]'s per-session work in the session's task: the
+    * nearest match, gate and cluster reduction ([[SessionPoints]]), the
+    * per-point error, the OCCUPIED gaze-histogram cells — the vres×hres
     * grid is never materialized at all, because empty cells contribute
-    * zero to every summary sum (they carry no gaze weight); each
-    * session's fit is pure JVM work on one executor (the
-    * [[SessionCalibrator.fitModels]] discipline).
+    * zero to every summary sum (they carry no gaze weight) — and the
+    * model work (outlier cut → TPS LOO-CV fit → hull → weighted summary).
+    * The task holds the session's marker and gaze rows; each session's fit
+    * is pure JVM work on one executor (the [[SessionCalibrator.fitModels]]
+    * discipline).
     *
     * Same numbers as [[compute]].summary per session (parity-spec'd to
     * fp tolerance — anchor order inside the linear solve is the only
-    * difference): `session, n_points, err_median, err_mean,
+    * difference): `session` (as a string), `n_points, err_median, err_mean,
     * gaze_err_weighted, gaze_fraction_excluded`. Sessions whose reduced
     * points number < 4 after the outlier cut (the reference's too-few-
     * points failure, error_computation.py:149) emit NO row — the
@@ -324,12 +333,6 @@ object ErrorMap {
   def summaryBySession(markers: DataFrame, gaze: DataFrame,
                        sessionCol: String,
                        cfg: Config = Config()): DataFrame = {
-    val spark = markers.sparkSession
-    import spark.implicits._
-    val ppd = pixelsPerDegree(cfg)
-    val (vres, hres) = cfg.resolution
-    val (iw, ih) = cfg.imageResolution
-
     // sessionCol IS the match key of this form (the per-session analog
     // of compute's matchKeys); extra keys would silently change the
     // reduction grain, so reject them loudly rather than ignore them
@@ -337,60 +340,25 @@ object ErrorMap {
       s"summaryBySession keys by '$sessionCol'; Config.matchKeys " +
         s"(${cfg.matchKeys.mkString(",")}) would be silently ignored — " +
         "fold them into the session column instead")
-    // cluster reduction mirrors [[compute]] step 2 exactly: reduce only
-    // when configured AND the column exists; otherwise every matched
-    // point is its own anchor (same numbers as compute for the same
-    // Config + input shape)
-    val doReduce = cfg.clusterReduce &&
-      markers.columns.contains("marker_cluster_index")
-    val markerCols = Seq(col(sessionCol), col("timestamp"),
-      col("norm_x"), col("norm_y")) ++
-      (if (doReduce) Seq(col("marker_cluster_index")) else Nil)
-    val matched = AsOfJoin.nearest(
-        markers.select(markerCols: _*),
-        gaze.select(col(sessionCol), col("timestamp"),
-          col("norm_x").as("gx"), col("norm_y").as("gy"),
-          col("confidence")),
-        "timestamp", "timestamp", Seq(sessionCol), rightPrefix = "g_")
-      .filter(col("g_confidence") > cfg.minPupilConfidence)
-      .withColumnRenamed("g_gx", "gx").withColumnRenamed("g_gy", "gy")
-    val reduced =
-      if (doReduce) matched
-        .groupBy(col(sessionCol), col("marker_cluster_index")).agg(
-          expr("percentile(norm_x, 0.5)").as("mx"),
-          expr("percentile(norm_y, 0.5)").as("my"),
-          expr("percentile(gx, 0.5)").as("gx"),
-          expr("percentile(gy, 0.5)").as("gy"))
-      else matched.select(col(sessionCol), col("norm_x").as("mx"),
-        col("norm_y").as("my"), col("gx"), col("gy"))
-    val exPix = (col("gx") - col("mx")) * iw
-    val eyPix = (col("gy") - col("my")) * ih
-    val pts = reduced
-      .select(col(sessionCol).cast("string"), col("mx"), col("my"),
-        (sqrt(exPix * exPix + eyPix * eyPix) / ppd).as("err_deg"))
-      .as[(String, Double, Double, Double)]
-      .groupByKey(_._1)
-
-    // occupied histogram cells only (the [[compute]] step-7 binning)
-    val cells = gaze
-      .filter(col("norm_x").between(0, 1) && col("norm_y").between(0, 1))
-      .select(col(sessionCol).cast("string"),
-        least(floor(col("norm_x") * hres), lit(hres - 1)).cast("long").as("ix"),
-        least(floor(col("norm_y") * vres), lit(vres - 1)).cast("long").as("iy"))
-      .groupBy(sessionCol, "ix", "iy").agg(count(lit(1)).as("n"))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-
-    pts.cogroup(cells) { (session, ptIt, cellIt) =>
-      sessionSummary(ptIt.map(r => (r._2, r._3, r._4)).toArray,
-        cellIt.map(c => (c._2, c._3, c._4)), cfg) match {
-        // row ABSENCE is the too-few-points failure
-        case Left(_) => Iterator.empty
-        case Right(s) => Iterator((session, s.nPoints.toLong, s.errMedian,
-          s.errMean, s.weighted, s.excluded))
-      }
-    }.toDF(sessionCol, "n_points", "err_median", "err_mean",
-      "gaze_err_weighted", "gaze_fraction_excluded")
+    val schema = StructType(Seq(
+      StructField(sessionCol, markers.schema(sessionCol).dataType),
+      StructField("n_points", LongType, nullable = false),
+      StructField("err_median", DoubleType, nullable = false),
+      StructField("err_mean", DoubleType, nullable = false),
+      StructField("gaze_err_weighted", DoubleType),
+      StructField("gaze_fraction_excluded", DoubleType)))
+    SessionPoints.bySession(markers, gaze, sessionCol,
+        SessionPoints.byCluster(markers, cfg.clusterReduce),
+        cfg.minPupilConfidence, None) { (session, points, rows) =>
+        sessionError(points, rows, cfg) match {
+          // row ABSENCE is the too-few-points failure
+          case Left(_) => Iterator.empty
+          case Right(s) => Iterator(Row(session, s.nPoints.toLong, s.errMedian,
+            s.errMean, s.weighted.map(Double.box).orNull,
+            s.excluded.map(Double.box).orNull))
+        }
+      }(Encoders.row(schema))
+      .withColumn(sessionCol, col(sessionCol).cast("string"))
   }
 
   /** Convex hull of the anchor points (driver-side monotone chain) as a

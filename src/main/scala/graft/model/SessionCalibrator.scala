@@ -1,14 +1,16 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Multi-session calibration fan-out — the 100 TB shape (and the
   * reference's pipeline_mri layout, pipelines.py:826-1041: one fitted
   * model reused across many runs/epochs).
   *
-  * The corpus axis is sessions: cluster reduction runs distributed and
-  * GROUPED BY SESSION (one shuffle), and each session's TPS-CV model is
+  * The corpus axis is sessions: the match → gate → cluster reduction runs
+  * distributed, one [[SessionPoints]] per session in a cogroup of markers
+  * and pupils BY SESSION, and each session's TPS-CV model is
   * fitted INSIDE `flatMapGroups` over the reduced points — embarrassingly
   * parallel across executors, nothing but the model table ever exists on
   * the driver. The fitted models become a MODEL TABLE (session, anchors_x,
@@ -19,36 +21,34 @@ import org.apache.spark.sql.functions._
 object SessionCalibrator {
 
   /** Distributed cluster-median reduction per session: each session's
-    * markers nearest-matched to pupils (match_time_points window=None
-    * parity) via the keyed J2 union-sort join, confidence-gated on the
-    * matched rows, reduced to one (pupil, marker) pair per (session,
-    * cluster). `window` bounds the nearest match (a marker whose closest
-    * pupil is further than `window` away is dropped) — corpus hygiene for
-    * sessions with pupil dropouts;
-    * pass Double.MaxValue for the reference's unbounded behavior. */
+    * markers nearest-matched to its pupils (match_time_points window=None
+    * parity), confidence-gated on the matched rows, reduced to one
+    * (marker, pupil) pair per (session, cluster) — one [[SessionPoints]]
+    * per session in a cogroup of the two tables by session
+    * ([[SessionPoints.bySession]]). `window` bounds the nearest match (a
+    * marker whose closest pupil is further than `window` away is dropped)
+    * — corpus hygiene for sessions with pupil dropouts; pass
+    * Double.MaxValue for the reference's unbounded behavior.
+    * Rows: session, marker_cluster_index (both in the markers' types),
+    * mx, my, px, py. */
   def reducedPoints(markers: DataFrame, pupils: DataFrame,
                     sessionCol: String, window: Double,
                     minConfidence: Double): DataFrame = {
-    import graft.operators.AsOfJoin
-    val matched = AsOfJoin.nearest(
-      markers.select(col(sessionCol), col("timestamp"), col("norm_x"),
-        col("norm_y"), col("marker_cluster_index")),
-      pupils.select(col(sessionCol), col("timestamp"),
-        col("norm_x").as("pnx"), col("norm_y").as("pny"), col("confidence")),
-      "timestamp", "timestamp", Seq(sessionCol), rightPrefix = "p_",
-      tolerance = Some(window))
-      .filter(col("p_confidence") > minConfidence)
-      .withColumnRenamed("p_pnx", "px").withColumnRenamed("p_pny", "py")
-    matched.groupBy(col(sessionCol), col("marker_cluster_index")).agg(
-      expr("percentile(norm_x, 0.5)").as("mx"),
-      expr("percentile(norm_y, 0.5)").as("my"),
-      expr("percentile(px, 0.5)").as("px"),
-      expr("percentile(py, 0.5)").as("py"))
+    val schema = StructType(StructField(sessionCol, markers.schema(sessionCol).dataType) +:
+      SessionPoints.Schema.fields)
+    SessionPoints.bySession(markers, pupils, sessionCol, byCluster = true,
+        minConfidence, Some(window)) { (session, points, rows) =>
+        points(rows).iterator.map(p => Row.fromSeq(session +: p.toSeq))
+      }(Encoders.row(schema))
+      .select(col(sessionCol), col("marker_cluster_index")
+          .cast(markers.schema("marker_cluster_index").dataType).as("marker_cluster_index"),
+        col("mx"), col("my"), col("rx").as("px"), col("ry").as("py"))
   }
 
   /** Fit one TPS-CV model per session over the reduced points; returns
     * the model table. Sessions with < minPoints reduced clusters are
-    * dropped (the reference's too-few-clusters None gate).
+    * dropped (the reference's too-few-clusters None gate). Any other
+    * `cfg.calibrationType` throws IllegalArgumentException.
     *
     * Distributed: the fits run inside `flatMapGroups` over the session key
     * — one shuffle of the already-reduced points (10¹-10² rows/session),
@@ -61,6 +61,8 @@ object SessionCalibrator {
   def fitModels(spark: SparkSession, reduced: DataFrame, sessionCol: String,
                 cfg: Calibrator.Config = Calibrator.Config(),
                 minPoints: Int = 4): DataFrame = {
+    require(cfg.calibrationType == "monocular_tps_cv",
+      s"fitModels fits monocular_tps_cv only, not calibrationType ${cfg.calibrationType}")
     import spark.implicits._
     val lambdas = cfg.lambdas
     val maxStds = cfg.maxStdsForOutliers

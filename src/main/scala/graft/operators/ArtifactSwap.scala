@@ -102,34 +102,24 @@ private[graft] object ArtifactSwap {
     * with a family-specific range placement): read the live table,
     * rewrite it through `place` (range-repartition + within-partition
     * sort at `parts` writer arity), land it partitioned on
-    * `partitionCol` next to the live dir, promote by [[swap]]. Pass
-    * `knownBefore` when the caller already listed the tree (the
-    * streaming tables' fragmentation gates do) so the listing isn't paid twice — on
-    * object stores the listing RPCs are exactly what compaction exists
-    * to bound. `carrySidecars` names in-dir sidecar files (e.g. `_CONF`)
+    * `partitionCol` next to the live dir, promote by [[swap]].
+    * `carrySidecars` names in-dir sidecar files (e.g. `_CONF`)
     * copied from the live generation into the next one BEFORE the swap,
     * so operating-point metadata rides the same atomic rename as the
-    * data it describes. An EMPTY `partitionCol` writes unpartitioned —
-    * the flat-table form (crawled-url / seen-band sets), whose appends
-    * land unpartitioned files that a partitioned rewrite would split
-    * into a mixed, undiscoverable layout.
+    * data it describes.
     * Returns (files_before, files_after). */
   def compactTable(spark: SparkSession, live: String,
                    place: (DataFrame, Int) => DataFrame,
                    partitionCol: String, targetPartitions: Int,
-                   knownBefore: Long = -1L,
                    carrySidecars: Seq[String] = Nil): (Long, Long) = {
     recover(spark, live) // heal a prior crash's stranded-prev state first
     val parts = if (targetPartitions > 0) targetPartitions
                 else spark.sparkContext.defaultParallelism
-    val before = if (knownBefore >= 0) knownBefore
-                 else dataFileCount(spark, live)
+    val before = dataFileCount(spark, live)
     val next = live + "_next"
     clearStale(spark, next)
-    val placed = place(spark.read.parquet(live), parts)
-      .write.mode("overwrite")
-    (if (partitionCol.isEmpty) placed else placed.partitionBy(partitionCol))
-      .parquet(next)
+    place(spark.read.parquet(live), parts)
+      .write.mode("overwrite").partitionBy(partitionCol).parquet(next)
     val fs = new Path(live).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     carrySidecars.foreach { name =>
@@ -141,18 +131,6 @@ private[graft] object ArtifactSwap {
     }
     swap(spark, live, next)
     (before, dataFileCount(spark, live))
-  }
-
-  /** The shared fragmentation gate: ONE recursive listing, compared to
-    * `maxFiles` (default 8× cluster parallelism — above any single
-    * build's writer arity). Returns Some(count) when over the cap —
-    * the caller feeds it to [[compactTable]] as `knownBefore`. */
-  def fragmentedAt(spark: SparkSession, live: String,
-                   maxFiles: Int): Option[Long] = {
-    val cap = if (maxFiles > 0) maxFiles
-              else 8 * spark.sparkContext.defaultParallelism
-    val n = dataFileCount(spark, live)
-    if (n > cap) Some(n) else None
   }
 
   /** Recursive data-file count under a path (parquet part files only —

@@ -185,13 +185,11 @@ object AsOfJoin {
     * instead of hardcoding seconds.
     *
     * Cost: ONE extra aggregation job — a per-key lag diff (shuffle on
-    * `keys`, partition-local sort) reduced by a median. By default the
-    * median is `percentile_approx` (a single-pass distributed sketch, no
-    * sort of the diffs — the 100 TB shape); `exact = true` switches to
-    * the exact interpolating `percentile`, which buffers the diffs per
-    * partition — use it when the gate must be bit-reproducible (e.g. an
-    * oracle replay against DuckDB's `median`, which interpolates the
-    * same way), on streams where the diff count is bounded.
+    * `keys`, partition-local sort) reduced by Spark's exact interpolating
+    * `median` (`percentile(_, 0.5)`), which buffers the diffs per
+    * partition. Exact, so the gate is bit-reproducible: an oracle replay
+    * against DuckDB's `median`, which interpolates the same way, derives
+    * the same value.
     *
     * Returns None when NO key contributes a strictly positive
     * inter-sample interval — every key has < 2 rows, or all timestamps
@@ -203,20 +201,8 @@ object AsOfJoin {
     * wanted, compute a per-key median first and aggregate those.
     */
   def cadenceGate(df: DataFrame, tsCol: String, keys: Seq[String],
-                  multiplier: Double = 8.0,
-                  exact: Boolean = false): Option[Double] = {
-    val t = col(tsCol).cast("double")
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(t)
-    val medAgg =
-      if (exact) percentile(col("_dt"), lit(0.5))
-      else percentile_approx(col("_dt"), lit(0.5), lit(10000))
-    val med = df
-      .withColumn("_dt", t - lag(t, 1).over(w))
-      .filter(col("_dt").isNotNull && col("_dt") > 0)
-      .agg(medAgg.as("m"))
-      .head()
-    if (med.isNullAt(0)) None else Some(multiplier * med.getDouble(0))
-  }
+                  multiplier: Double = 8.0): Option[Double] =
+    gate(sampleIntervals(df, tsCol, keys).agg(median(col("_dt"))), multiplier)
 
   /** [[cadenceGate]] with per-key robustness: the median inter-sample
     * interval is computed PER KEY first, then the gate is `multiplier` ×
@@ -226,19 +212,22 @@ object AsOfJoin {
     * Same plan shape plus one extra (tiny: one row per key) aggregation;
     * same None condition as the pooled form. */
   def cadenceGatePerKey(df: DataFrame, tsCol: String, keys: Seq[String],
-                        multiplier: Double = 8.0,
-                        exact: Boolean = false): Option[Double] = {
+                        multiplier: Double = 8.0): Option[Double] =
+    gate(sampleIntervals(df, tsCol, keys)
+      .groupBy(keys.map(col): _*).agg(median(col("_dt")).as("_keyMed"))
+      .agg(median(col("_keyMed"))), multiplier)
+
+  /** The strictly positive per-key lag diffs of the time column, as `_dt`. */
+  private def sampleIntervals(df: DataFrame, tsCol: String,
+                              keys: Seq[String]): DataFrame = {
     val t = col(tsCol).cast("double")
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(t)
-    def med(c: Column) =
-      if (exact) percentile(c, lit(0.5))
-      else percentile_approx(c, lit(0.5), lit(10000))
-    val row = df
-      .withColumn("_dt", t - lag(t, 1).over(w))
+    df.withColumn("_dt", t - lag(t, 1).over(
+        Window.partitionBy(keys.map(col): _*).orderBy(t)))
       .filter(col("_dt").isNotNull && col("_dt") > 0)
-      .groupBy(keys.map(col): _*).agg(med(col("_dt")).as("_keyMed"))
-      .agg(med(col("_keyMed")).as("m"))
-      .head()
+  }
+
+  private def gate(med: DataFrame, multiplier: Double): Option[Double] = {
+    val row = med.head()
     if (row.isNullAt(0)) None else Some(multiplier * row.getDouble(0))
   }
 }

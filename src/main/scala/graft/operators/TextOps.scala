@@ -980,49 +980,6 @@ object TextOps {
         (col("role") === "assistant").as("in_loss"))
   }
 
-  /** Row-local twin of [[sftTurnSpans]]: the prefix sum folds INSIDE
-    * each row (`aggregate` over the turn array) instead of over a
-    * doc-keyed window, so the op is a pure projection + explode —
-    * stream-legal with zero state, the score-at-ingest form. Identical
-    * output contract (spec-pinned parity). Prefer this on streams and
-    * anywhere the doc-key shuffle isn't already paid; the window form
-    * reads better when turns are ALREADY exploded rows. */
-  def sftTurnSpansLocal(docs: DataFrame, idCol: String, textCol: String,
-                        turnTokens: Int = 8, maxTurns: Int = 4): DataFrame = {
-    val toks = tokens(col(textCol))
-    val nTurns = least(
-      ((size(toks) + lit(turnTokens - 1)) / lit(turnTokens)).cast("int"),
-      lit(maxTurns))
-    val turns = transform(sequence(lit(0), nTurns - 1), i => struct(
-      i.as("i"),
-      when(i % 2 === 0, "user").otherwise("assistant").as("role"),
-      when(i % 2 === 0, lit(9)).otherwise(lit(14)).as("mlen"),
-      length(array_join(slice(toks, i * turnTokens + 1, lit(turnTokens)),
-        " ")).as("tlen")))
-    val rowsType = "array<struct<turn_idx:int,role:string," +
-      "span_start:bigint,span_end:bigint>>"
-    val folded = aggregate(turns,
-      struct(lit(0L).as("off"),
-        array().cast(rowsType).as("rows")),
-      (acc, t) => struct(
-        (acc.getField("off") + t.getField("mlen") + t.getField("tlen")
-          + lit(1L)).as("off"),
-        concat(acc.getField("rows"), array(struct(
-          t.getField("i").as("turn_idx"),
-          t.getField("role").as("role"),
-          (acc.getField("off") + t.getField("mlen")).cast("long")
-            .as("span_start"),
-          (acc.getField("off") + t.getField("mlen") + t.getField("tlen"))
-            .cast("long").as("span_end")))).as("rows")))
-    // same null-text law as the window form: null ⇒ zero rows
-    docs.select(col(idCol).cast("long").as("doc"),
-        explode(when(col(textCol).isNotNull, folded.getField("rows")))
-          .as("_t"))
-      .select(col("doc"), col("_t.turn_idx"), col("_t.role"),
-        col("_t.span_start"), col("_t.span_end"),
-        (col("_t.role") === "assistant").as("in_loss"))
-  }
-
   /** Per-source token-length PROFILE — the corpus report that sizes
     * sequence-length and packing config (how long are documents per
     * source; where do the p95 tails sit): doc count, mean, exact
@@ -1954,20 +1911,6 @@ object TextOps {
   private def cmBucket(i: Int, g: Column, width: Int): Column =
     pmod(xxhash64(lit(i), g), lit(width))
 
-  /** The count-min COUNTER TABLE over n-grams of `textCol`: one row per
-    * occupied (sketch row `i`, bucket `b`) with its gram count — at most
-    * depth·width rows regardless of corpus size. Purely declarative
-    * (explode → explode → map-side-combined groupBy), so the SAME code
-    * runs batch (the [[frequentNgrams]] sketch pass) or STREAMING,
-    * where it is a stateful aggregate whose state is exactly the
-    * bounded counter grid — the ingest-side sketch maintenance
-    * ([[graft.streaming.SketchStream]]). */
-  def cmSketchCounters(docs: DataFrame, textCol: String, n: Int = 2,
-                       depth: Int = 3, width: Int = 2048): DataFrame =
-    cmCountersFromGrams(
-      docs.select(explode(gramArray(col(textCol), n)).as("g")),
-      depth, width, cmBucket)
-
   /** Oracle-shared bucket family: salted [[hash60]] rows. The count-min
     * exactness contract is hash-family-independent (overestimate-only +
     * exact verify), so the production path keeps the cheaper codegen'd
@@ -1978,8 +1921,13 @@ object TextOps {
   private def cmBucketShared(i: Int, g: Column, width: Int): Column =
     pmod(hash60(concat(lit(s"cm$i:"), g)), lit(width.toLong))
 
-  /** [[cmSketchCounters]] over the oracle-shared bucket family — same
-    * lineage, same bounded depth×width state, SQL-replayable rows. */
+  /** The count-min COUNTER TABLE over n-grams of `textCol` on the
+    * oracle-shared bucket family: one row per occupied (sketch row `i`,
+    * bucket `b`) with its gram count — at most depth·width rows
+    * regardless of corpus size. Purely declarative (explode → explode →
+    * map-side-combined groupBy), so the same lineage runs STREAMING as a
+    * stateful aggregate whose state is exactly the bounded counter grid
+    * ([[graft.streaming.SketchStream]]), with SQL-replayable rows. */
   def cmSketchCountersShared(docs: DataFrame, textCol: String, n: Int = 2,
                              depth: Int = 3, width: Int = 2048): DataFrame =
     cmCountersFromGrams(
@@ -2270,7 +2218,7 @@ object TextOps {
     // unseen-bucket floor: ln((0+1)/(nt+B) / ((0+1)/(nr+B))). Unreachable
     // while train and score share one frame (every scored bucket was
     // counted), but the lookup must stay TOTAL so a future build/serve
-    // split (the LmModelIO pattern) can't silently null-poison the fold.
+    // split can't silently null-poison the fold.
     val unseenLr = math.log((nr + buckets).toDouble / (nt + buckets))
     val model = Seq((1, lrMap)).toDF("_jk", "_m")
     // score over the SAME kernel gram array (materialized under the

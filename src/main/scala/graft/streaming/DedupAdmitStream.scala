@@ -31,8 +31,7 @@ import graft.operators.{ArtifactSwap, TextOps}
   *     the family (admit-set-only state would re-admit C).
   *
   * A document with NO bands (empty shingle set after tokenization) is
-  * admitted — there is nothing to collide. Exact-hash dedup is the
-  * 1-band special case ([[exactBands]]).
+  * admitted — there is nothing to collide.
   *
   * === The 100 TB state story (the [[FrontierStream]] discipline) ===
   * The seen-band set is NOT state-store state: it lives in a parquet
@@ -43,8 +42,7 @@ import graft.operators.{ArtifactSwap, TextOps}
   * fpp (spec-pinned at fpp = 0.5). After each drained batch,
   * [[snapshotSeen]] appends the batch's distinct bands, so the next
   * batch's Bloom + verify own them; nothing accumulates in executor
-  * memory, and [[compactSeenIfFragmented]] bounds the table's file
-  * count exactly like the crawl loop's crawled-set maintenance.
+  * memory.
   * Each admission pays one shuffle keyed on the band key (the window)
   * and one keyed on doc (the conjunction) — both partition-scaling.
   */
@@ -62,14 +60,6 @@ object DedupAdmitStream {
       .select(col("doc"), col("band_id"), col("band_hash"))
       .join(docs.select(col(idCol).as("doc"), col(ordCol)), Seq("doc"))
 
-  /** Exact-dedup degenerate banding: one band per doc, keyed by the
-    * 60-bit content hash — the same admission machinery then performs
-    * streaming EXACT dedup. */
-  def exactBands(docs: DataFrame, idCol: String, textCol: String,
-                 ordCol: String): DataFrame =
-    docs.select(col(idCol).as("doc"), col(ordCol),
-      lit(0).as("band_id"), TextOps.hash60(col(textCol)).as("band_hash"))
-
   private def bandKeyHash(bandId: Column, bandHash: Column): Column =
     TextOps.hash60(concat_ws(":", bandId, bandHash))
 
@@ -79,8 +69,8 @@ object DedupAdmitStream {
     * `ordCol`). `batchDocs` is the doc universe of the batch —
     * `(idCol named doc, ordCol)` — so shingle-less docs (absent from
     * `batchBands`) still get their admitted=true row. Heals an
-    * interrupted seen-table compaction before reading (the
-    * recover-at-every-entry crash-window discipline).
+    * interrupted ArtifactSwap promotion of the seen table before reading
+    * (the recover-at-every-entry crash-window discipline).
     * Returns `(doc, ord, admitted, n_bands)`. */
   def admitBatch(spark: SparkSession, batchDocs: DataFrame,
                  batchBands: DataFrame, ordCol: String, seenPath: String,
@@ -145,8 +135,8 @@ object DedupAdmitStream {
     * the batch's bands are appended (admitted or not — the
     * non-recursive semantics). Rows already present from earlier
     * batches may append again; the seen set is a set by semantics
-    * (membership joins are unaffected by duplicate rows) and
-    * [[compactSeen]] re-distincts. Returns rows appended. */
+    * (membership joins are unaffected by duplicate rows). Returns rows
+    * appended. */
   def snapshotSeen(spark: SparkSession, batchBands: DataFrame,
                    seenPath: String): Long = {
     import org.apache.spark.sql.Observation
@@ -156,36 +146,5 @@ object DedupAdmitStream {
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode("append").parquet(seenPath)
     obs.get("rows").asInstanceOf[Long]
-  }
-
-  /** Seen-table compaction: re-distinct + range-place on the band key
-    * into a fresh generation through the SHARED crash-window protocol
-    * ([[ArtifactSwap.compactTable]] — one implementation of the
-    * recover/clearStale/write/swap sequence across the index families,
-    * the crawled set, and this table; empty partition column = the
-    * flat layout the appends use). Membership — hence every future
-    * admission — is identical before and after.
-    * Returns (files_before, files_after). */
-  def compactSeen(spark: SparkSession, seenPath: String,
-                  targetPartitions: Int = 0,
-                  knownBefore: Long = -1L): (Long, Long) =
-    ArtifactSwap.compactTable(spark, seenPath,
-      (df, parts) => df.distinct()
-        .repartitionByRange(parts, col("band_hash"))
-        .sortWithinPartitions("band_hash", "band_id"),
-      partitionCol = "", targetPartitions = targetPartitions,
-      knownBefore = knownBefore)
-
-  /** Fragmentation-gated seen-table compaction (the epoch chain's
-    * monitor→actuator loop; heals the compactor's own crash window
-    * before the gate lists). Returns true iff a compaction ran. */
-  def compactSeenIfFragmented(spark: SparkSession, seenPath: String,
-                              maxFiles: Int = 0,
-                              targetPartitions: Int = 0): Boolean = {
-    ArtifactSwap.recover(spark, seenPath)
-    ArtifactSwap.fragmentedAt(spark, seenPath, maxFiles) match {
-      case Some(n) => compactSeen(spark, seenPath, targetPartitions, n); true
-      case None    => false
-    }
   }
 }

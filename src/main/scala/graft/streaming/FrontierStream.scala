@@ -105,10 +105,10 @@ object FrontierStream {
                           fpp: Double = 0.01): Dataset[Admitted] = {
     import pages.sparkSession.implicits._
     val spark = pages.sparkSession
-    // heal a compactCrawled crash window first (crawledPath absent, real
-    // table stranded under `_prev`) — a missing-path throw here would
-    // stall the epoch loop on a state ArtifactSwap.recover repairs in one
-    // rename (the LshIndexIO.append discipline)
+    // heal an interrupted ArtifactSwap promotion first (crawledPath
+    // absent, real table stranded under `_prev`) — a missing-path throw
+    // here would stall the epoch loop on a state ArtifactSwap.recover
+    // repairs in one rename (the LshIndexIO.append discipline)
     graft.operators.ArtifactSwap.recover(spark, crawledPath)
     val crawledUrls = spark.read.parquet(crawledPath)
       .select(col("url"))
@@ -145,57 +145,16 @@ object FrontierStream {
   def snapshotAdmitted(spark: SparkSession, admitted: DataFrame,
                        crawledPath: String): Long = {
     import org.apache.spark.sql.Observation
-    // heal a compactCrawled crash window BEFORE the mode('append') write:
-    // an append landing while crawledPath is absent (real table stranded
-    // under `_prev`) would silently create a fresh one-epoch table, and
-    // the NEXT compactCrawled's swap would delete the real seen set under
-    // `_prev` — after which the bloom front re-admits every crawled url
+    // heal an interrupted ArtifactSwap promotion BEFORE the
+    // mode('append') write: an append landing while crawledPath is
+    // absent (real table stranded under `_prev`) would silently create a
+    // fresh one-epoch table beside the real seen set — after which the
+    // bloom front re-admits every crawled url
     graft.operators.ArtifactSwap.recover(spark, crawledPath)
     val obs = Observation()
     admitted.select(col("url")).distinct()
       .observe(obs, count(lit(1)).as("rows"))
       .write.mode("append").parquet(crawledPath)
     obs.get("rows").asInstanceOf[Long]
-  }
-
-  /** COMPACT the crawled-set snapshot table — the file-merge maintenance
-    * the index families get from their `compact`, on the crawl loop's
-    * own artifact: every [[snapshotAdmitted]] epoch APPENDS files, so a
-    * long-lived crawl accrues one file batch per epoch and the
-    * per-epoch sketch build + verify scans pay creeping listing/footer
-    * costs while the url set itself only grows by admissions. Rewrites
-    * the table range-placed on `url` (few large files, tight row-group
-    * stats for the verify join) into a fresh generation, promoted by
-    * [[graft.operators.ArtifactSwap]]'s atomic rename — rows untouched,
-    * so the next epoch's admissions are bit-identical before and after
-    * (spec-pinned). Returns (files_before, files_after);
-    * [[compactCrawledIfFragmented]] is the gauged loop. */
-  def compactCrawled(spark: SparkSession, crawledPath: String,
-                     targetPartitions: Int = 0,
-                     knownBefore: Long = -1L): (Long, Long) =
-    graft.operators.ArtifactSwap.compactTable(spark, crawledPath,
-      (df, parts) => df.repartitionByRange(parts, col("url"))
-        .sortWithinPartitions("url"),
-      partitionCol = "", targetPartitions = targetPartitions,
-      knownBefore = knownBefore)
-
-  /** Fragmentation-gated crawled-table compaction — the closed
-    * monitor→actuator loop an epoch chain runs after each
-    * [[snapshotAdmitted]]:
-    * one recursive listing, reused as the compactor's before-count.
-    * Returns true iff a compaction ran. */
-  def compactCrawledIfFragmented(spark: SparkSession, crawledPath: String,
-                                 maxFiles: Int = 0,
-                                 targetPartitions: Int = 0): Boolean = {
-    // heal BEFORE the gate's listing: in compactCrawled()'s crash window
-    // the live dir is absent, so the count reads 0 (healthy) and a
-    // gated-only epoch loop would never recover the seen set from _prev
-    graft.operators.ArtifactSwap.recover(spark, crawledPath)
-    graft.operators.ArtifactSwap.fragmentedAt(spark, crawledPath,
-        maxFiles) match {
-      case Some(n) =>
-        compactCrawled(spark, crawledPath, targetPartitions, n); true
-      case None => false
-    }
   }
 }

@@ -15,20 +15,14 @@ import graft.operators.TextOps
   * corpus size, which is the whole point of the sketch (a groupBy(gram)
   * stream would hold distinct-gram state). Output mode Update/Complete
   * feeds the serving store; counts are associative, so the stream's
-  * counters after any prefix equal the batch sketch over that prefix
+  * counters after any prefix equal the batch counters over that prefix
   * (parity-pinned in SketchStreamSpec).
   */
 object SketchStream {
 
-  /** Counter maintenance over a (possibly streaming) docs frame.
-    * State: ≤ depth·width rows. */
-  def counters(docs: DataFrame, textCol: String, n: Int = 2,
-               depth: Int = 3, width: Int = 2048): DataFrame =
-    TextOps.cmSketchCounters(docs, textCol, n, depth, width)
-
-  /** [[counters]] over the ORACLE-SHARED bucket family
-    * ([[TextOps.cmSketchCountersShared]], salted hash60): same
-    * maintenance aggregate, same bounded state, rows a SQL oracle can
+  /** Counter maintenance over a (possibly streaming) docs frame, on the
+    * ORACLE-SHARED bucket family ([[TextOps.cmSketchCountersShared]],
+    * salted hash60): state ≤ depth·width rows, and rows a SQL oracle can
     * replay — the attested form the `stream_cm_counters` row drains. */
   def countersShared(docs: DataFrame, textCol: String, n: Int = 2,
                      depth: Int = 3, width: Int = 2048): DataFrame =

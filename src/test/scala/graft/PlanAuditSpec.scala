@@ -428,18 +428,6 @@ class PlanAuditSpec extends SparkSpec {
     graft.CacheRegistry.releaseAll()
   }
 
-  test("frozen lm score: zero exchanges beyond the 1-row model broadcast") {
-    val dirTmp = java.nio.file.Files.createTempDirectory("lm_audit").toString
-    val docs = Tables.documents(spark, dir)
-    operators.LmModelIO.build(docs, "doc_id", "text", dirTmp)
-    val p = plan(operators.LmModelIO.score(spark, dirTmp, docs, "doc_id", "text"))
-    assert(p.contains("Broadcast"), s"frozen model not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin") &&
-           !p.contains("Exchange hashpartitioning"),
-      s"frozen lm score should not shuffle the corpus:\n$p")
-    graft.CacheRegistry.releaseAll()
-  }
-
   test("web curation: row-local normalize, one exchange for the domain cap") {
     val p = plan(Queries.webCurationPipeline(spark, dir))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length

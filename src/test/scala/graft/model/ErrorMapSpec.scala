@@ -159,6 +159,161 @@ class ErrorMapSpec extends SparkSpec {
     }
   }
 
+  /** The keyed as-of + percentile + DataFrame-binning composition
+    * `summaryBySession` ran before it ran one SessionPoints per session,
+    * verbatim: the parity reference. */
+  def composedBySession(markers: DataFrame, gaze: DataFrame,
+                        sessionCol: String,
+                        cfg: ErrorMap.Config = ErrorMap.Config()): DataFrame = {
+    import ErrorMap.{pixelsPerDegree, sessionSummary}
+    import graft.operators.AsOfJoin
+    val spark = markers.sparkSession
+    import spark.implicits._
+    val ppd = pixelsPerDegree(cfg)
+    val (vres, hres) = cfg.resolution
+    val (iw, ih) = cfg.imageResolution
+
+    // sessionCol IS the match key of this form (the per-session analog
+    // of compute's matchKeys); extra keys would silently change the
+    // reduction grain, so reject them loudly rather than ignore them
+    require(cfg.matchKeys.isEmpty,
+      s"summaryBySession keys by '$sessionCol'; Config.matchKeys " +
+        s"(${cfg.matchKeys.mkString(",")}) would be silently ignored — " +
+        "fold them into the session column instead")
+    // cluster reduction mirrors [[compute]] step 2 exactly: reduce only
+    // when configured AND the column exists; otherwise every matched
+    // point is its own anchor (same numbers as compute for the same
+    // Config + input shape)
+    val doReduce = cfg.clusterReduce &&
+      markers.columns.contains("marker_cluster_index")
+    val markerCols = Seq(col(sessionCol), col("timestamp"),
+      col("norm_x"), col("norm_y")) ++
+      (if (doReduce) Seq(col("marker_cluster_index")) else Nil)
+    val matched = AsOfJoin.nearest(
+        markers.select(markerCols: _*),
+        gaze.select(col(sessionCol), col("timestamp"),
+          col("norm_x").as("gx"), col("norm_y").as("gy"),
+          col("confidence")),
+        "timestamp", "timestamp", Seq(sessionCol), rightPrefix = "g_")
+      .filter(col("g_confidence") > cfg.minPupilConfidence)
+      .withColumnRenamed("g_gx", "gx").withColumnRenamed("g_gy", "gy")
+    val reduced =
+      if (doReduce) matched
+        .groupBy(col(sessionCol), col("marker_cluster_index")).agg(
+          expr("percentile(norm_x, 0.5)").as("mx"),
+          expr("percentile(norm_y, 0.5)").as("my"),
+          expr("percentile(gx, 0.5)").as("gx"),
+          expr("percentile(gy, 0.5)").as("gy"))
+      else matched.select(col(sessionCol), col("norm_x").as("mx"),
+        col("norm_y").as("my"), col("gx"), col("gy"))
+    val exPix = (col("gx") - col("mx")) * iw
+    val eyPix = (col("gy") - col("my")) * ih
+    val pts = reduced
+      .select(col(sessionCol).cast("string"), col("mx"), col("my"),
+        (sqrt(exPix * exPix + eyPix * eyPix) / ppd).as("err_deg"))
+      .as[(String, Double, Double, Double)]
+      .groupByKey(_._1)
+
+    // occupied histogram cells only (the [[compute]] step-7 binning)
+    val cells = gaze
+      .filter(col("norm_x").between(0, 1) && col("norm_y").between(0, 1))
+      .select(col(sessionCol).cast("string"),
+        least(floor(col("norm_x") * hres), lit(hres - 1)).cast("long").as("ix"),
+        least(floor(col("norm_y") * vres), lit(vres - 1)).cast("long").as("iy"))
+      .groupBy(sessionCol, "ix", "iy").agg(count(lit(1)).as("n"))
+      .as[(String, Long, Long, Long)]
+      .groupByKey(_._1)
+
+    pts.cogroup(cells) { (session, ptIt, cellIt) =>
+      sessionSummary(ptIt.map(r => (r._2, r._3, r._4)).toArray,
+        cellIt.map(c => (c._2, c._3, c._4)), cfg) match {
+        // row ABSENCE is the too-few-points failure
+        case Left(_) => Iterator.empty
+        case Right(s) => Iterator((session, s.nPoints.toLong, s.errMedian,
+          s.errMean, s.weighted, s.excluded))
+      }
+    }.toDF(sessionCol, "n_points", "err_median", "err_mean",
+      "gaze_err_weighted", "gaze_fraction_excluded")
+  }
+
+  /** Three planted sessions (4x4 anchors, 3 samples each, gaze = marker +
+    * a per-session offset at +1 ms) plus edge rows, each in its own
+    * cluster of session sA:
+    *  90: a marker equidistant (1/128 s) from two gaze rows;
+    *  91: a gaze row at exactly the marker's timestamp;
+    *  92: a null-ts marker (it takes the earliest gaze row);
+    *  93: a NaN-ts marker (it takes the NaN-ts gaze row);
+    *  95: a gaze row 1/64 s away; 96: one just past 1/64 s;
+    *  97: a gaze row with confidence == minPupilConfidence, and one above.
+    * Plus an in-frame null-ts gaze row in sA; session "m" with markers
+    * and no gaze, "g" with gaze and no markers, "few" with one cluster,
+    * and a null session key with a planted grid. */
+  def edgeSessions: (DataFrame, DataFrame) = {
+    val ms = scala.collection.mutable.ArrayBuffer[(Option[String], Option[Double], Double, Double, Long)]()
+    val gs = scala.collection.mutable.ArrayBuffer[(Option[String], Option[Double], Double, Double, Double)]()
+    for ((sess, off, nClusters) <- Seq((Some("sA"), 0.01, 16), (Some("sB"), 0.02, 16),
+        (Some("sC"), -0.015, 16), (None, 0.012, 16), (Some("few"), 0.01, 1))) {
+      var t = 0.0
+      for (c <- 0 until nClusters) {
+        val mx = 0.15 + 0.2 * (c / 4); val my = 0.15 + 0.2 * (c % 4)
+        for (k <- 0 until 3) {
+          ms += ((sess, Some(t), mx, my, c.toLong))
+          gs += ((sess, Some(t + 0.001), mx + off, my + 0.002 * k, 0.95))
+          t += 1.0 / 30.0
+        }
+        t += 0.3
+      }
+    }
+    val a = Some("sA")
+    ms ++= Seq((a, Some(1000.0), 0.3, 0.45, 90L), (a, Some(1010.0), 0.45, 0.3, 91L),
+      (a, None, 0.5, 0.62, 92L), (a, Some(Double.NaN), 0.62, 0.5, 93L),
+      (a, Some(1020.0), 0.4, 0.55, 95L), (a, Some(1030.0), 0.55, 0.4, 96L),
+      (a, Some(1040.0), 0.7, 0.65, 97L), (a, Some(1041.0), 0.7, 0.65, 97L),
+      (Some("m"), Some(1.0), 0.5, 0.5, 0L))
+    gs ++= Seq((a, Some(1000.0 - 1.0 / 128), 0.31, 0.45, 0.95),
+      (a, Some(1000.0 + 1.0 / 128), 0.33, 0.45, 0.95),
+      (a, Some(1009.99), 0.47, 0.3, 0.95), (a, Some(1010.0), 0.46, 0.3, 0.95),
+      (a, Some(1010.01), 0.48, 0.3, 0.95),
+      (a, None, 0.5, 0.5, 0.95), (a, Some(Double.NaN), 0.63, 0.5, 0.95),
+      (a, Some(1020.0 + 1.0 / 64), 0.41, 0.55, 0.95),
+      (a, Some(java.lang.Math.nextUp(1030.0 + 1.0 / 64)), 0.56, 0.4, 0.95),
+      (a, Some(1040.001), 0.9, 0.9, 0.6), (a, Some(1041.001), 0.71, 0.65, 0.95),
+      (Some("g"), Some(1.0), 0.5, 0.5, 0.95))
+    (ms.toSeq.toDF("session", "timestamp", "norm_x", "norm_y", "marker_cluster_index"),
+      gs.toSeq.toDF("session", "timestamp", "norm_x", "norm_y", "confidence"))
+  }
+
+  test("summaryBySession == the keyed as-of + percentile + binning composition, bit for bit") {
+    val (m, g) = edgeSessions
+    // resolution (3, 4): the only grid nodes a hull inside the unit square
+    // can hold are (1/3, 1/2) and (2/3, 1/2), so the gaze-weighted sum has
+    // at most two terms and the reference's shuffle-dependent cell order
+    // cannot move a bit
+    val cfg = ErrorMap.Config(resolution = (3, 4))
+    for ((mm, cc) <- Seq((m, cfg), (m, cfg.copy(outlierStds = None)),
+        (m, cfg.copy(clusterReduce = false)), (m.drop("marker_cluster_index"), cfg))) {
+      val got = ErrorMap.summaryBySession(mm, g, "session", cc)
+      val want = composedBySession(mm, g, "session", cc)
+      assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+      val rows = got.collect()
+      def bits(r: Row) = r.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+        case o => String.valueOf(o)
+      }.mkString(",")
+      assert(rows.map(bits).sorted.toSeq == want.collect().map(bits).sorted.toSeq, s"$cc")
+      // absent: "m", "g" and "few"; present: the planted sessions and the
+      // null key, with their gaze weighted inside the hull
+      assert(rows.map(r => Option(r.getString(0))).toSet ==
+        Set(Some("sA"), Some("sB"), Some("sC"), None), s"$cc")
+      assert(rows.forall(r => !r.isNullAt(r.fieldIndex("gaze_err_weighted"))))
+    }
+    // the edge clusters reach the points: 16 planted + 90, 91, 92, 93,
+    // 95, 96, 97 (97 through its second marker only)
+    val sA = ErrorMap.summaryBySession(m, g, "session", cfg.copy(outlierStds = None))
+      .filter(col("session") === "sA").head()
+    assert(sA.getAs[Long]("n_points") == 23L)
+  }
+
   test("in-frame gaze entirely outside the hull: weighted error null (compute parity), excluded fraction 1.0") {
     // anchors confined to a corner patch so the hull covers almost
     // nothing; gaze lands IN frame but far outside it → total > 0,

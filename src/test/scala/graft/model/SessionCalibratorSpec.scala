@@ -1,6 +1,7 @@
 package graft.model
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 case class SesM(session: String, timestamp: Double, norm_x: Double,
@@ -117,6 +118,110 @@ class SessionCalibratorSpec extends SparkSpec {
         case None => spark.conf.unset(aqeKey)
       }
       graft.CacheRegistry.releaseAll()
+    }
+  }
+
+  /** The keyed as-of + percentile composition `reducedPoints` ran before
+    * it ran one SessionPoints per session, verbatim: the parity reference. */
+  def composed(markers: DataFrame, pupils: DataFrame,
+               sessionCol: String, window: Double,
+               minConfidence: Double): DataFrame = {
+    import graft.operators.AsOfJoin
+    val matched = AsOfJoin.nearest(
+      markers.select(col(sessionCol), col("timestamp"), col("norm_x"),
+        col("norm_y"), col("marker_cluster_index")),
+      pupils.select(col(sessionCol), col("timestamp"),
+        col("norm_x").as("pnx"), col("norm_y").as("pny"), col("confidence")),
+      "timestamp", "timestamp", Seq(sessionCol), rightPrefix = "p_",
+      tolerance = Some(window))
+      .filter(col("p_confidence") > minConfidence)
+      .withColumnRenamed("p_pnx", "px").withColumnRenamed("p_pny", "py")
+    matched.groupBy(col(sessionCol), col("marker_cluster_index")).agg(
+      expr("percentile(norm_x, 0.5)").as("mx"),
+      expr("percentile(norm_y, 0.5)").as("my"),
+      expr("percentile(px, 0.5)").as("px"),
+      expr("percentile(py, 0.5)").as("py"))
+  }
+
+  /** A row's fields, doubles as their raw bits. */
+  def bits(r: Row): String = r.toSeq.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+    case o => String.valueOf(o)
+  }.mkString(",")
+
+  // window 1/64 s, so a match exactly at the window is exact arithmetic
+  val edgeWindow = 1.0 / 64
+  // edge rows, each in its own cluster of session s1 (marker and pupil
+  // rows: session, ts, x, y, cluster | confidence):
+  //  90: a marker equidistant (1/128 s) from two pupils;
+  //  91: a pupil at exactly the marker's timestamp;
+  //  92: a null-ts marker; 93: a NaN-ts marker (it meets the NaN-ts pupil);
+  //  95: a pupil exactly `edgeWindow` away; 96: one just past it;
+  //  97: a pupil with confidence == minConfidence, and one with 0.9.
+  // Plus a null-ts pupil in s1; session "m" with markers and no pupils,
+  // "p" with pupils and no markers, "n" whose only pupil has no
+  // timestamp, and a null session key with markers and pupils.
+  def edgeRows: (DataFrame, DataFrame) = {
+    val past = java.lang.Math.nextUp(1030.0 + edgeWindow)
+    val ms: Seq[(Option[String], Option[Double], Double, Double, Long)] = Seq(
+      (Some("s1"), Some(1000.0), 0.3, 0.4, 90L),
+      (Some("s1"), Some(1010.0), 0.4, 0.3, 91L),
+      (Some("s1"), None, 0.5, 0.5, 92L),
+      (Some("s1"), Some(Double.NaN), 0.5, 0.6, 93L),
+      (Some("s1"), Some(1020.0), 0.6, 0.5, 95L),
+      (Some("s1"), Some(1030.0), 0.6, 0.6, 96L),
+      (Some("s1"), Some(1040.0), 0.7, 0.2, 97L), (Some("s1"), Some(1041.0), 0.7, 0.2, 97L),
+      (Some("m"), Some(1.0), 0.5, 0.5, 0L), (Some("m"), Some(2.0), 0.6, 0.5, 1L),
+      (Some("n"), Some(1.0), 0.5, 0.5, 0L),
+      (None, Some(1.0), 0.2, 0.2, 0L), (None, Some(1.1), 0.2, 0.2, 0L),
+      (None, Some(3.0), 0.8, 0.2, 1L))
+    val ps: Seq[(Option[String], Option[Double], Double, Double, Double)] = Seq(
+      (Some("s1"), Some(1000.0 - 1.0 / 128), 0.31, 0.41, 0.9),
+      (Some("s1"), Some(1000.0 + 1.0 / 128), 0.32, 0.42, 0.9),
+      (Some("s1"), Some(1009.99), 0.41, 0.31, 0.9), (Some("s1"), Some(1010.0), 0.42, 0.32, 0.9),
+      (Some("s1"), Some(1010.01), 0.43, 0.33, 0.9),
+      (Some("s1"), None, 0.5, 0.5, 0.9), (Some("s1"), Some(Double.NaN), 0.51, 0.61, 0.9),
+      (Some("s1"), Some(1020.0 + edgeWindow), 0.61, 0.51, 0.9),
+      (Some("s1"), Some(past), 0.61, 0.61, 0.9),
+      (Some("s1"), Some(1040.001), 0.71, 0.21, 0.75), (Some("s1"), Some(1041.001), 0.72, 0.22, 0.9),
+      (Some("p"), Some(1.0), 0.5, 0.5, 0.9),
+      (Some("n"), None, 0.5, 0.5, 0.9),
+      (None, Some(1.001), 0.21, 0.21, 0.9), (None, Some(1.101), 0.22, 0.22, 0.9),
+      (None, Some(3.001), 0.81, 0.21, 0.9))
+    (markers.unionByName(ms.toDF("session", "timestamp", "norm_x", "norm_y",
+        "marker_cluster_index")),
+      pupils.unionByName(ps.toDF("session", "timestamp", "norm_x", "norm_y",
+        "confidence")))
+  }
+
+  test("reducedPoints == the keyed as-of + percentile composition, bit for bit, edge rows included") {
+    val (m, p) = edgeRows
+    val got = SessionCalibrator.reducedPoints(m, p, "session", edgeWindow, 0.75)
+    val want = composed(m, p, "session", edgeWindow, 0.75)
+    assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+    val rows = got.collect()
+    assert(rows.map(bits).sorted.toSeq == want.collect().map(bits).sorted.toSeq)
+    // the edges resolve as nearest() documents, so the parity is not vacuous
+    val s1 = rows.filter(_.getAs[String]("session") == "s1")
+      .map(r => r.getAs[Long]("marker_cluster_index") -> r).toMap
+    assert(s1(90L).getAs[Double]("px") == 0.31) // tie → the earlier pupil
+    assert(s1(91L).getAs[Double]("px") == 0.42) // equal ts wins
+    assert(s1(95L).getAs[Double]("px") == 0.61) // at the window: kept
+    assert(s1(97L).getAs[Double]("px") == 0.72) // at the gate: gated out
+    assert(Seq(92L, 93L, 96L).forall(c => !s1.contains(c)))
+    assert(s1.size == 16 + 4)
+    val sessions = rows.map(r => Option(r.getAs[String]("session"))).toSet
+    assert(sessions == Set(Some("s1"), Some("s2"), Some("s3"), None))
+    assert(rows.count(_.isNullAt(0)) == 2)
+  }
+
+  test("fitModels rejects a calibration type it does not fit") {
+    val reduced = SessionCalibrator.reducedPoints(markers, pupils,
+      "session", window = 1.0 / 30.0, minConfidence = 0.75)
+    for (t <- Seq("monocular_pl", "monocular_tps", "monocular_rbf_cv", "bogus")) {
+      val e = intercept[IllegalArgumentException](SessionCalibrator.fitModels(
+        spark, reduced, "session", Calibrator.Config(calibrationType = t)))
+      assert(e.getMessage.contains(t), e.getMessage)
     }
   }
 

@@ -92,16 +92,16 @@ class AsOfJoinSpec extends SparkSpec {
       (0 until 11).map(i => (1, i.toDouble))
     val df = rows.toDF("key", "ts")
     val pooled = AsOfJoin.cadenceGate(df, "ts", Seq("key"),
-      multiplier = 1.0, exact = true).get
+      multiplier = 1.0).get
     val perKey = AsOfJoin.cadenceGatePerKey(df, "ts", Seq("key"),
-      multiplier = 1.0, exact = true).get
+      multiplier = 1.0).get
     assert(math.abs(pooled - 0.01) < 1e-9, s"pooled=$pooled")
     assert(math.abs(perKey - (0.01 + 1.0) / 2) < 1e-9, s"perKey=$perKey")
     // homogeneous cadences: the two forms agree
     val homo = (for (k <- 0 to 2; i <- 0 until 60) yield (k, i / 120.0))
       .toDF("key", "ts")
-    val gp = AsOfJoin.cadenceGate(homo, "ts", Seq("key"), 8.0, exact = true).get
-    val gk = AsOfJoin.cadenceGatePerKey(homo, "ts", Seq("key"), 8.0, exact = true).get
+    val gp = AsOfJoin.cadenceGate(homo, "ts", Seq("key"), 8.0).get
+    val gk = AsOfJoin.cadenceGatePerKey(homo, "ts", Seq("key"), 8.0).get
     assert(math.abs(gp - gk) < 1e-12)
     // same None condition
     assert(AsOfJoin.cadenceGatePerKey(

@@ -7,8 +7,7 @@ import graft.SparkSpec
 /** Contract edges of the streaming dedup admission
   * ([[DedupAdmitStream]]) that the drained `stream_dedup_admit` oracle
   * can't reach: the non-recursive family rule, Bloom exactness at a
-  * hostile fpp, the seen-table crash window, compaction invariance,
-  * and the exact-hash degenerate banding. */
+  * hostile fpp and the seen-table crash window. */
 class DedupAdmitStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,9 +85,9 @@ class DedupAdmitStreamSpec extends SparkSpec {
     assert(admitted(tight).size < 200 && admitted(tight).nonEmpty)
   }
 
-  test("seen-table compaction: admissions identical before/after; crash window heals at entry") {
+  test("admitBatch heals a crash window at entry") {
     val seen = tmp("dedup_seen")
-    for (k <- 0 until 5) // 5 fragmented appends
+    for (k <- 0 until 5) // 5 appends
       DedupAdmitStream.snapshotSeen(spark,
         bandsOf((k.toLong, k.toLong, 0, 5000L + k)), seen)
     val probe = bandsOf((50L, 50L, 0, 5002L), (51L, 51L, 0, 7777L))
@@ -96,10 +95,6 @@ class DedupAdmitStreamSpec extends SparkSpec {
     val before = admitted(
       DedupAdmitStream.admitBatch(spark, probeDocs, probe, "ord", seen))
     assert(before == Set(51L))
-    val (nb, na) = DedupAdmitStream.compactSeen(spark, seen)
-    assert(na < nb, s"compaction did not shrink files ($nb -> $na)")
-    assert(admitted(
-      DedupAdmitStream.admitBatch(spark, probeDocs, probe, "ord", seen)) == before)
     // crash window: live dir renamed away, real table stranded at _prev
     val fs = new org.apache.hadoop.fs.Path(seen)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -108,28 +103,7 @@ class DedupAdmitStreamSpec extends SparkSpec {
     assert(admitted(
       DedupAdmitStream.admitBatch(spark, probeDocs, probe, "ord", seen)) == before,
       "admitBatch did not heal the stranded-prev crash window")
-    // the gated compactor heals it too (recover before the gate lists)
-    DedupAdmitStream.compactSeenIfFragmented(spark, seen, maxFiles = 1000000)
     assert(fs.exists(new org.apache.hadoop.fs.Path(seen)))
-  }
-
-  test("exactBands: streaming exact dedup admits only the first copy of a text") {
-    val seen = tmp("dedup_seen")
-    val docs = Seq(
-      (1L, 1L, "the quick brown fox"),
-      (2L, 2L, "a different document"),
-      (3L, 3L, "the quick brown fox") // exact copy of doc1
-    ).toDF("doc", "ord", "text")
-    val b = DedupAdmitStream.exactBands(docs, "doc", "text", "ord")
-    val r = DedupAdmitStream.admitBatch(spark,
-      docs.select("doc", "ord"), b, "ord", seen)
-    assert(admitted(r) == Set(1L, 2L))
-    DedupAdmitStream.snapshotSeen(spark, b, seen)
-    // a later arrival of the same text is blocked cross-batch
-    val late = Seq((9L, 99L, "a different document")).toDF("doc", "ord", "text")
-    val r2 = DedupAdmitStream.admitBatch(spark, late.select("doc", "ord"),
-      DedupAdmitStream.exactBands(late, "doc", "text", "ord"), "ord", seen)
-    assert(admitted(r2).isEmpty)
   }
 
   test("bandsWithOrd carries the lshBandTable chain (4 bands per shingled doc) plus the order key") {

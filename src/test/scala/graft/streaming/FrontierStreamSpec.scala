@@ -99,47 +99,6 @@ class FrontierStreamSpec extends SparkSpec {
     assert(s2 == e2.size.toLong, s"epoch-2 state $s2 != admissions ${e2.size}")
   }
 
-  test("crawled-table compaction: admission-invisible, gauge-gated") {
-    // the crawl loop's own artifact accrues one file batch per
-    // snapshotAdmitted epoch — the compactor must collapse files
-    // without changing a single admission decision
-    implicit val sqlCtx = spark.sqlContext
-    val crawledPath = java.nio.file.Files
-      .createTempDirectory("frontier_cpt").toString + "/crawled"
-    crawled.write.mode("overwrite").parquet(crawledPath)
-    // two drained epochs' appends: q1 and q2 join the seen set
-    FrontierStream.snapshotAdmitted(spark,
-      Seq(("http://a.com/q1", "a.com")).toDF("url", "dst_host"), crawledPath)
-    FrontierStream.snapshotAdmitted(spark,
-      Seq(("http://a.com/q2", "a.com")).toDF("url", "dst_host"), crawledPath)
-    // the epoch references BOTH appended urls, so the compacted rows are
-    // load-bearing for the admission decision
-    val page = Seq((1L, "http://a.com/1",
-      """<body><a href="/p1">n</a> <a href="/q1">s</a> <a href="/q2">s</a> <a href="/seen">s</a></body>"""))
-    def epoch(tag: String): Set[(String, String)] = {
-      val input = MemoryStream[(Long, String, String)]
-      val name = s"frontier_cpt_${tag}_${System.nanoTime()}"
-      val q = FrontierStream.admittedStreamBloom(
-          input.toDF().toDF("doc", "page_url", "html"), "html", "page_url",
-          crawledPath, fpp = 0.5)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      input.addData(page); q.processAllAvailable(); q.stop()
-      spark.table(name).collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    }
-    val before = epoch("pre")
-    assert(before == Set(("http://a.com/p1", "a.com")))
-    // the gauge fires past the cap, the rewrite lands under it, and the
-    // re-armed gauge is a no-op
-    assert(FrontierStream.compactCrawledIfFragmented(spark, crawledPath,
-      maxFiles = 2, targetPartitions = 1))
-    assert(!FrontierStream.compactCrawledIfFragmented(spark, crawledPath,
-      maxFiles = 2, targetPartitions = 1))
-    // bit-identical admissions over the compacted table
-    assert(epoch("post") == before)
-  }
-
   test("at-least-once: a re-delivered page admits nothing new") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String)]
@@ -157,14 +116,13 @@ class FrontierStreamSpec extends SparkSpec {
     assert(afterFirst == 3L && afterSecond == afterFirst)
   }
 
-  test("compactCrawled crash window: snapshot and epoch heal, never strand the seen set") {
-    // compactCrawled promotes crawledPath by ArtifactSwap; its crash
-    // window leaves crawledPath ABSENT with the real seen set under
-    // `_prev`. A snapshotAdmitted landing there must heal FIRST — a
-    // mode('append') into the window would create a fresh one-epoch
-    // table, and the NEXT compact's swap would delete the real seen set
-    // under `_prev`, after which the bloom front re-admits every crawled
-    // url. Same discipline for the epoch's own read.
+  test("crash window: snapshot and epoch heal") {
+    // an interrupted ArtifactSwap promotion leaves crawledPath ABSENT
+    // with the real seen set under `_prev`. A snapshotAdmitted landing
+    // there must heal FIRST — a mode('append') into the window would
+    // create a fresh one-epoch table beside the real seen set, after
+    // which the bloom front re-admits every crawled url. Same discipline
+    // for the epoch's own read.
     implicit val sqlCtx = spark.sqlContext
     val crawledPath = java.nio.file.Files
       .createTempDirectory("frontier_window").toString + "/crawled"
@@ -199,15 +157,5 @@ class FrontierStreamSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("http://a.com/p1", "a.com")))
     assert(!prev.exists(), "epoch read left the window unhealed")
-    // the fragmentation-GATED compactor heals even when the gate does
-    // not trip: a stranded live dir lists 0 files (reads "healthy"), so
-    // without an up-front recover a gated-only epoch loop would report
-    // false forever while the seen set stays under _prev
-    strand()
-    assert(!FrontierStream.compactCrawledIfFragmented(spark, crawledPath,
-      maxFiles = 1000000), "gate tripped on a tiny table")
-    assert(!prev.exists(),
-      "gated compactor returned without healing the crash window")
-    assert(spark.read.parquet(crawledPath).count() >= 2L)
   }
 }

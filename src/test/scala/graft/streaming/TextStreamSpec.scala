@@ -91,20 +91,6 @@ class TextStreamSpec extends SparkSpec {
       fp(docs.toDF()).orderBy("doc").collect().toSeq)
   }
 
-  test("sft spans at ingest: row-local fold == windowed form, streams") {
-    val local = (df: DataFrame) =>
-      TextOps.sftTurnSpansLocal(df, "doc_id", "text", turnTokens = 4)
-    val got = streamed("sft_stream", local)
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
-        r.getLong(4))).sortBy(t => (t._1, t._2))
-    // parity vs the window form on the same rows
-    val want = TextOps.sftTurnSpans(docs.toDF(), "doc_id", "text",
-        turnTokens = 4)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-        r.getLong(3), r.getLong(4))).toSeq.sortBy(t => (t._1, t._2))
-    assert(got == want && got.nonEmpty)
-  }
-
   test("domain blocklist at ingest: literal form streams, == batch") {
     // the zero-shuffle literal twin of domainSuffixBlock is a pure
     // projection — blocklist gating runs AT INGEST, before any fetch
