@@ -33,12 +33,13 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndexIO {
 
-  /** Quantizer-kind sidecar (`path/_KIND`, ASCII "flat" | "hier"),
-    * written at build time so [[searchAuto]] dispatches with a pure
-    * driver-side metadata read — the former probe (`filter(kind ===
-    * "super").limit(1).count()`) cost a Spark job on EVERY search
-    * against the index. Hadoop FS API, so the sidecar follows the index
-    * onto whatever filesystem the Parquet goes to. */
+  /** Quantizer-kind sidecar (`path/_KIND`, ASCII "flat" | "hier" |
+    * "opq_ivf"), written at build time so [[searchAuto]] and the
+    * maintenance entries dispatch with a pure driver-side metadata read,
+    * no Spark job. Hadoop FS API, so the sidecar follows the index onto
+    * whatever filesystem the Parquet goes to. Every build writes it; an
+    * artifact without one, or with another word in it, is refused with
+    * an `IllegalStateException` naming the file. */
   private def kindPath(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/_KIND")
 
@@ -50,8 +51,16 @@ object AnnIndexIO {
     try out.write(kind.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readKind(spark: SparkSession, path: String): Option[String] =
-    ArtifactSwap.readSmall(spark, kindPath(path)).map(_.trim)
+  private def readKind(spark: SparkSession, path: String): String = {
+    val p = kindPath(path)
+    ArtifactSwap.readSmall(spark, p).map(_.trim) match {
+      case Some(kind) if confArity.contains(kind) => kind
+      case Some(other) => throw new IllegalStateException(
+        s"$p names no index kind: '$other'")
+      case None => throw new IllegalStateException(
+        s"$p is missing — every build writes it; rebuild the index")
+    }
+  }
 
   /** Heal BOTH crash windows this artifact family can be left in: the
     * whole-dir swap root (`path` — what [[retrain]]/[[rebuildOpq]]
@@ -77,9 +86,9 @@ object AnnIndexIO {
     * rather than re-deriving it from fitted rows — fitted arity can
     * silently narrow on sample-bounded builds (a hier child list is
     * ragged when few sample points land in a super), and the OPQ
-    * family's `altIters` leaves no trace in the artifact at all.
-    * Pre-sidecar (or unparseable) artifacts fall back to the fitted-row
-    * derivation in [[persistedConfig]]/[[derivedBookConf]]. */
+    * family's `altIters` leaves no trace in the artifact at all. A
+    * missing file, or one that does not hold the kind's field count of
+    * integers, is refused with an `IllegalStateException` naming it. */
   private def confPath(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/_CONF")
 
@@ -92,30 +101,20 @@ object AnnIndexIO {
     finally out.close()
   }
 
-  private def readConfFields(spark: SparkSession,
-                             path: String): Option[Array[Int]] =
-    ArtifactSwap.readSmall(spark, confPath(path)).flatMap { s =>
-      // a non-integer token (corrupt/foreign file) means NO usable conf,
-      // not a NumberFormatException — the callers' fitted-row derivation
-      // fallback must stay reachable for exactly these files
-      scala.util.Try(s.trim.split("\\s+").map(_.toInt)).toOption
-    }
+  /** `_CONF` field count per `_KIND`, which is also the set of kinds. */
+  private val confArity = Map("flat" -> 3, "hier" -> 4, "opq_ivf" -> 4)
 
-  /** Fitted-row derivation of (nCells-if-coarse, m, codebookK) for the
-    * OPQ×IVF family — the pre-sidecar fallback [[rebuildOpq]] uses so a
-    * rebuild never silently changes an artifact's operating point to
-    * compile-time defaults (only `altIters` is genuinely untraceable
-    * from fitted rows). One model-sized driver collect, the
-    * [[persistedConfig]] discipline. */
-  private def derivedBookConf(spark: SparkSession,
-                              path: String): (Option[Int], Int, Int) = {
-    val rows = spark.read.parquet(s"$path/quantizer")
-      .groupBy("kind", "i").agg(count(lit(1)).as("n")).collect()
-    val byKind = rows.groupBy(_.getAs[String]("kind"))
-    val m = byKind.get("book").map(_.length).getOrElse(8)
-    val codebookK = byKind.get("book")
-      .map(_.head.getAs[Long]("n").toInt).getOrElse(16)
-    (byKind.get("coarse").map(_.length), m, codebookK)
+  private def readConf(spark: SparkSession, path: String,
+                       kind: String): Array[Int] = {
+    val p = confPath(path)
+    val s = ArtifactSwap.readSmall(spark, p).getOrElse(
+      throw new IllegalStateException(
+        s"$p is missing — every build writes it; rebuild the index"))
+    scala.util.Try(s.trim.split("\\s+").map(_.toInt)).toOption
+      .filter(_.length == confArity(kind))
+      .getOrElse(throw new IllegalStateException(
+        s"$p does not hold the ${confArity(kind)} integers of a '$kind' " +
+          s"index: '${s.trim}'"))
   }
 
   /** Quantizer → typed Parquet rows (the persisted layout). */
@@ -411,20 +410,11 @@ object AnnIndexIO {
     // coarse quantizer from the rot-rows-only table and write garbage
     // encodings with no error — the silent family mix-up the retrain
     // guard closed on the maintenance side
-    val kind0 = readKind(spark, path)
-    val hasRot = kind0.isEmpty &&
-      spark.read.parquet(s"$path/quantizer")
-        .filter(col("kind") === "rot").limit(1).count() > 0
-    require(kind0.forall(k => k == "flat" || k == "hier") && !hasRot,
-      s"appendAuto supports flat/hier indexes only; $path is " +
-        s"'${kind0.getOrElse("opq-family (rot rows present)")}' — use " +
-        "appendOpq instead")
-    val isHier = kind0 match {
-      case Some(kind) => kind == "hier"
-      case None => spark.read.parquet(s"$path/quantizer")
-        .filter(col("kind") === "super").limit(1).count() > 0
-    }
-    if (isHier) {
+    val kind = readKind(spark, path)
+    require(kind == "flat" || kind == "hier",
+      s"appendAuto supports flat/hier indexes only; $path is '$kind' — " +
+        "use appendOpq instead")
+    if (kind == "hier") {
       val model = hierModelFromDF(spark.read.parquet(s"$path/quantizer"))
       val encoded = VectorOps.ivfPqEncodeHierNormalized(
         VectorOps.normalized(newVecs, idCol, vecCol)
@@ -459,14 +449,7 @@ object AnnIndexIO {
   def appendOpq(spark: SparkSession, path: String, newVecs: DataFrame,
                 idCol: String, vecCol: String): Unit = {
     recoverRoots(spark, path) // heal a stranded-prev crash state
-    val kind = readKind(spark, path).getOrElse {
-      val q = spark.read.parquet(s"$path/quantizer")
-      require(q.filter(col("kind") === "rot").limit(1).count() > 0,
-        s"appendOpq supports the OPQ families only; $path has no " +
-          "rotation — use appendAuto instead")
-      if (q.filter(col("kind") === "coarse").limit(1).count() > 0) "opq_ivf"
-      else "opq"
-    }
+    val kind = readKind(spark, path)
     require(kind == "opq_ivf",
       s"appendOpq supports the OPQ families only; $path is '$kind' — " +
         "use appendAuto instead")
@@ -478,55 +461,6 @@ object AnnIndexIO {
       .write.mode("append").partitionBy("cid").parquet(s"$path/index")
   }
 
-  /** The persisted quantizer's configuration — flat: coarse-cell count;
-    * hier: (k1 supers, k2 children per super); both: (m subspaces,
-    * codebookK entries). Read from the `_CONF` sidecar when present
-    * (the configuration the caller REQUESTED at build time — exact even
-    * when sample-bounded fitting narrowed the fitted arity); pre-sidecar
-    * artifacts fall back to one small driver collect over the quantizer
-    * table (model-sized, the same rows [[modelFromDF]] collects). Lets
-    * [[retrain]] preserve the built configuration without the caller
-    * re-stating it — maintenance must not silently change the index's
-    * operating point. */
-  private case class PersistedConfig(isHier: Boolean, k1: Int, k2: Int,
-                                     nCells: Int, m: Int, codebookK: Int)
-
-  private def persistedConfig(spark: SparkSession,
-                              path: String): PersistedConfig = {
-    // the sidecar layout is kind-specific (the OPQ kinds persist
-    // altIters too), so the fast path dispatches on the _KIND sidecar —
-    // never on field count alone
-    (readKind(spark, path), readConfFields(spark, path)) match {
-      case (Some("hier"), Some(Array(k1, k2, m, codebookK))) =>
-        return PersistedConfig(isHier = true, k1, k2, k1 * k2, m, codebookK)
-      case (Some("flat"), Some(Array(nCells, m, codebookK))) =>
-        return PersistedConfig(isHier = false, 0, 0, nCells, m, codebookK)
-      case _ => // pre-sidecar artifact (or a foreign layout): derive
-    }
-    val rows = spark.read.parquet(s"$path/quantizer")
-      .groupBy("kind", "i").agg(count(lit(1)).as("n")).collect()
-    val byKind = rows.groupBy(_.getAs[String]("kind"))
-    val m = byKind.get("book").map(_.length).getOrElse(0)
-    val codebookK = byKind.get("book")
-      .map(_.head.getAs[Long]("n").toInt).getOrElse(16)
-    byKind.get("super") match {
-      case Some(supers) =>
-        val k1 = supers.length
-        // a hier quantizer with super rows but NO child rows is not a
-        // fittable artifact — fail with the cause, not a key miss
-        require(byKind.contains("child"),
-          s"$path/quantizer has ${k1} super rows but no child rows — " +
-            "degenerate hier artifact; rebuild it with buildHier")
-        // children can be RAGGED (fitted children are sample-bounded per
-        // super), so the requested arity is the widest fitted one
-        val k2 = byKind("child").map(_.getAs[Long]("n").toInt).max
-        PersistedConfig(isHier = true, k1, k2, k1 * k2, m, codebookK)
-      case None =>
-        val nCells = byKind.get("coarse").map(_.length).getOrElse(16)
-        PersistedConfig(isHier = false, 0, 0, nCells, m, codebookK)
-    }
-  }
-
   /** RETRAIN the index from the accumulated corpus — the actuator
     * [[occupancyStats]]'s `recommend_retrain` flag demands (the gauge
     * shipped earlier; this is the valve): an [[appendAuto]] chain admits
@@ -534,8 +468,8 @@ object AnnIndexIO {
     * distribution crowds new vectors into few cells — probe recall
     * degrades first, then the hot cell serializes its scan. Retrain
     * refits quantizer + codebooks on the CURRENT corpus at the
-    * persisted configuration (arity/m/codebookK read back from the
-    * artifact — maintenance preserves the operating point), re-encodes
+    * persisted configuration (arity/m/codebookK as requested at build
+    * time, from `_CONF` — maintenance preserves the operating point), re-encodes
     * everything, and promotes the new generation with one atomic
     * directory swap ([[ArtifactSwap]]): searches keep serving the old
     * generation until the new one is complete, and the promoted index
@@ -551,18 +485,12 @@ object AnnIndexIO {
     // part of this fit path, so "retraining" one here would overwrite
     // the quantizer WITHOUT rot rows and flatten the artifact —
     // precisely the silent family change maintenance must never make.
-    // (Detected via the _KIND sidecar, falling back to the rot rows for
-    // pre-sidecar artifacts.) The OPQ families' maintenance valve is
-    // [[rebuildOpq]].
+    // The OPQ families' maintenance valve is [[rebuildOpq]].
     val kind = readKind(spark, path)
-    val hasRot = kind.isEmpty &&
-      spark.read.parquet(s"$path/quantizer")
-        .filter(col("kind") === "rot").limit(1).count() > 0
-    require(kind.forall(k => k == "flat" || k == "hier") && !hasRot,
-      s"retrain supports flat/hier indexes only; $path is " +
-        s"'${kind.getOrElse("opq-family (rot rows present)")}' — use " +
+    require(kind == "flat" || kind == "hier",
+      s"retrain supports flat/hier indexes only; $path is '$kind' — use " +
         "rebuildOpq (or buildOpqIvf) instead")
-    val cfg = persistedConfig(spark, path)
+    val c = readConf(spark, path, kind)
     val next = s"${path}_next"
     ArtifactSwap.clearStale(spark, next)
     // dispatch on the PERSISTED kind, not the arity threshold: a hier
@@ -570,12 +498,11 @@ object AnnIndexIO {
     // would pick flat — maintenance preserves the family, not just the
     // cell count
     val built =
-      if (cfg.isHier)
-        buildHier(vecs, idCol, vecCol, next, cfg.k1, cfg.k2, cfg.m,
-          cfg.codebookK, sampleN).nonEmpty
-      else
-        build(vecs, idCol, vecCol, next, cfg.nCells, cfg.m, cfg.codebookK,
+      if (kind == "hier")
+        buildHier(vecs, idCol, vecCol, next, c(0), c(1), c(2), c(3),
           sampleN).nonEmpty
+      else
+        build(vecs, idCol, vecCol, next, c(0), c(1), c(2), sampleN).nonEmpty
     if (built) ArtifactSwap.swap(spark, path, next)
     else ArtifactSwap.clearStale(spark, next)
     built
@@ -601,34 +528,15 @@ object AnnIndexIO {
                  path: String, sampleN: Int = 10000): Boolean = {
     val spark = vecs.sparkSession
     recoverRoots(spark, path) // heal a stranded-prev crash state
-    val kind = readKind(spark, path).getOrElse {
-      // pre-sidecar artifact: the rot rows identify the OPQ family, the
-      // coarse rows the OPQ×IVF kind (the cell-less kind is refused)
-      val q = spark.read.parquet(s"$path/quantizer")
-      require(q.filter(col("kind") === "rot").limit(1).count() > 0,
-        s"rebuildOpq supports the OPQ families only; $path has no " +
-          "rotation — use retrain instead")
-      if (q.filter(col("kind") === "coarse").limit(1).count() > 0) "opq_ivf"
-      else "opq"
-    }
+    val kind = readKind(spark, path)
     require(kind == "opq_ivf",
       s"rebuildOpq supports the OPQ families only; $path is '$kind' — " +
         "use retrain instead")
+    val c = readConf(spark, path, kind)
     val next = s"${path}_next"
     ArtifactSwap.clearStale(spark, next)
-    val built = readConfFields(spark, path) match {
-      case Some(c) if c.length == 4 =>
-        buildOpqIvf(vecs, idCol, vecCol, next, c(0), c(1), c(2), c(3),
-          sampleN)
-      case _ =>
-        // pre-sidecar artifact: derive nCells/m/codebookK from the fitted
-        // rows (altIters alone falls to the build default — it leaves no
-        // trace); hardcoded defaults here would silently change the
-        // index's operating point, the one thing maintenance must not do
-        val (nCellsOpt, m, codebookK) = derivedBookConf(spark, path)
-        buildOpqIvf(vecs, idCol, vecCol, next, nCellsOpt.getOrElse(16), m,
-          codebookK, 5, sampleN)
-    }
+    val built = buildOpqIvf(vecs, idCol, vecCol, next, c(0), c(1), c(2),
+      c(3), sampleN)
     if (built) ArtifactSwap.swap(spark, path, next)
     else ArtifactSwap.clearStale(spark, next)
     built
@@ -767,20 +675,14 @@ object AnnIndexIO {
     * [[VectorOps.ivfPqTopK]] (flat) or [[VectorOps.ivfPqHierTopK]] (hier)
     * on the same corpus (spec-proven), minus the refit and the corpus
     * re-encode. The kind comes from the `_KIND` sidecar written
-    * at build time — a driver-side FS read, NO Spark job; indexes
-    * predating the sidecar fall back to a one-row probe of the
-    * quantizer table. */
+    * at build time — a driver-side FS read, NO Spark job. */
   def searchAuto(spark: SparkSession, path: String, corpus: DataFrame,
                  idCol: String, vecCol: String, queryPred: Column, k: Int,
                  nprobe: Int = 4, rerank: Int = 100,
                  probeSupers: Int = 4): DataFrame = {
     recoverRoots(spark, path) // serve through a maintenance crash
     val qdf = spark.read.parquet(s"$path/quantizer")
-    val isHier = readKind(spark, path) match {
-      case Some(kind) => kind == "hier"
-      case None => qdf.filter(col("kind") === "super").limit(1).count() > 0
-    }
-    if (isHier) {
+    if (readKind(spark, path) == "hier") {
       val model = hierModelFromDF(qdf)
       val v = graft.CacheRegistry.persistTracked(
         VectorOps.normalized(corpus, idCol, vecCol)

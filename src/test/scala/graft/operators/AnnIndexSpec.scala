@@ -294,9 +294,6 @@ class AnnIndexSpec extends SparkSpec {
       "at-threshold build did not fit the hier quantizer")
     assert(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(hierDir, "_KIND")), "UTF-8").trim == "hier")
-    // sidecar-less index (predates _KIND): searchAuto falls back to the
-    // quantizer-table probe and still dispatches hier
-    java.nio.file.Files.delete(java.nio.file.Paths.get(hierDir, "_KIND"))
     val viaAutoH = rows(AnnIndexIO.searchAuto(spark, hierDir, vecs, "vec_id",
       "embedding", qp, k = 3, nprobe = 4, probeSupers = 2))
     graft.CacheRegistry.releaseAll()
@@ -304,6 +301,13 @@ class AnnIndexSpec extends SparkSpec {
       qp, k = 3, k1 = 3, k2 = 3, probeSupers = 2, nprobe = 4))
     graft.CacheRegistry.releaseAll()
     assert(viaAutoH.nonEmpty && viaAutoH == inlineH)
+    // an index without its _KIND sidecar is refused, naming the file
+    java.nio.file.Files.delete(java.nio.file.Paths.get(hierDir, "_KIND"))
+    val e = intercept[IllegalStateException] {
+      AnnIndexIO.searchAuto(spark, hierDir, vecs, "vec_id", "embedding", qp,
+        k = 3, nprobe = 4, probeSupers = 2)
+    }
+    assert(e.getMessage.contains(s"$hierDir/_KIND"))
   }
 
   test("streaming ingest encode == batch encode, any micro-batch split") {
@@ -777,22 +781,45 @@ class AnnIndexSpec extends SparkSpec {
     assert(!prev.exists(), "recovery left the stranded generation behind")
   }
 
-  test("persistedConfig fails fast on a degenerate hier artifact (no child rows)") {
-    import spark.implicits._
-    val dir = tmpDir("degenerate")
-    // super + book rows but NO child rows — an artifact no build path
-    // produces; the derivation must name the cause, not throw a key miss
-    (Seq(("super", 0, 0, Seq(1.0, 0.0)), ("super", 1, 0, Seq(0.0, 1.0)),
-        ("book", 0, 0, Seq(0.1, 0.1))))
-      .toDF("kind", "i", "j", "vec")
-      .write.mode("overwrite").parquet(s"$dir/quantizer")
-    spark.range(1).selectExpr("id AS v_id", "0 AS cid",
-        "array(0, 0) AS codes")
-      .write.mode("overwrite").parquet(s"$dir/index")
-    val e = intercept[IllegalArgumentException] {
-      AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir)
+  test("every entry refuses a missing or unparseable _KIND/_CONF sidecar") {
+    val dir = tmpDir("sidecars")
+    assert(AnnIndexIO.build(vecs, "vec_id", "embedding", dir,
+      nCells = 4).nonEmpty)
+    graft.CacheRegistry.releaseAll()
+    val kind = java.nio.file.Paths.get(dir, "_KIND")
+    val conf = java.nio.file.Paths.get(dir, "_CONF")
+    def refused(file: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(s"$dir/$file"), e.getMessage)
     }
-    assert(e.getMessage.contains("degenerate hier artifact"))
+    def put(p: java.nio.file.Path, s: String): Unit = {
+      java.nio.file.Files.write(p, s.getBytes("UTF-8"))
+      // the checksummed local filesystem verifies .crc files on read
+      java.nio.file.Files.deleteIfExists(
+        p.resolveSibling(s".${p.getFileName}.crc"))
+    }
+    val half = vecs.filter(col("vec_id") % 2 === 0)
+    // no _CONF: maintenance cannot know the requested operating point
+    java.nio.file.Files.delete(conf)
+    refused("_CONF")(AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir))
+    put(conf, "4 eight 16")
+    refused("_CONF")(AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir))
+    put(conf, "4 8") // a hier or OPQ field count would be 4, flat is 3
+    refused("_CONF")(AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir))
+    // no _KIND, or a word that names no kind: no entry guesses the family
+    java.nio.file.Files.delete(kind)
+    refused("_KIND")(AnnIndexIO.searchAuto(spark, dir, vecs, "vec_id",
+      "embedding", col("v_id") < 5, k = 3))
+    refused("_KIND")(AnnIndexIO.appendAuto(spark, dir, half, "vec_id",
+      "embedding"))
+    refused("_KIND")(AnnIndexIO.appendOpq(spark, dir, half, "vec_id",
+      "embedding"))
+    refused("_KIND")(AnnIndexIO.retrain(vecs, "vec_id", "embedding", dir))
+    refused("_KIND")(AnnIndexIO.rebuildOpq(vecs, "vec_id", "embedding", dir))
+    put(kind, "opq")
+    refused("_KIND")(AnnIndexIO.rebuildOpq(vecs, "vec_id", "embedding", dir))
+    // nothing was written by a refused call
+    assert(!new java.io.File(s"${dir}_next").exists())
   }
 
   test("compact crash window: stranded index/ root heals at serve, append, gauge, compact") {
